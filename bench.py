@@ -198,8 +198,7 @@ def _scaling_probe(cores: int, n_docs: int, n_reps: int = 1) -> None:
     # exchange, merge kernel, all four writes, manifest aggs).
     warm_parent = tempfile.mkdtemp(prefix=f"bench_warm_{cores}_", dir=shm)
     build_index(spark, synth_corpus(spark, 2048), os.path.join(warm_parent, "idx"),
-                shard_span_blocks=16, overwrite=True,
-                map_pack=os.environ.get("MIRU_BENCH_MAP_PACK", "1") != "0")
+                shard_span_blocks=16, overwrite=True)
     shutil.rmtree(warm_parent, ignore_errors=True)
 
     def _gc_ms():
@@ -247,8 +246,7 @@ def _scaling_probe(cores: int, n_docs: int, n_reps: int = 1) -> None:
         # fixed shard layout = the scale path (one scan for layout+lineage,
         # no separate bounds job); 16-block spans -> 4 shards at 480k docs
         meta = build_index(spark, docs, rep_out, shard_span_blocks=16, overwrite=True,
-                           exchange_partitions=max(cores, int(cores * ex_mult)),
-                           map_pack=os.environ.get("MIRU_BENCH_MAP_PACK", "1") != "0")
+                           exchange_partitions=max(cores, int(cores * ex_mult)))
         dt = time.monotonic() - t0
         s1, ticks1, b1 = _cpu_ticks()
         gc1 = _gc_ms()

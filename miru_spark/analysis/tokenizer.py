@@ -517,39 +517,6 @@ def tokenize_udf(use_stopwords: bool = False, locale: str | None = None):
     return _tok
 
 
-def term_counts_udf(use_stopwords: bool = False, locale: str | None = None):
-    """Arrow UDF: text -> struct(terms array<string>, tfs array<int>).
-
-    Per-doc tf is a pure function of the doc's own token stream, so it is
-    counted HERE — map-side, before any shuffle. The index build then
-    ships one row per *distinct* (term, doc) instead of one per token
-    occurrence, cutting the dominant shuffle's row count by the corpus'
-    occurrences/distinct ratio with zero extra exchanges (the map-side
-    combine the reference gets from its per-activity tf extraction,
-    ``MiruIndexPrimaryFields.java:62-75``).
-    """
-    from collections import Counter
-
-    ret = T.StructType(
-        [
-            T.StructField("terms", T.ArrayType(T.StringType())),
-            T.StructField("tfs", T.ArrayType(T.IntegerType())),
-        ]
-    )
-
-    @F.pandas_udf(ret)
-    def _tc(text: pd.Series) -> pd.DataFrame:
-        terms_out: list[list[str]] = []
-        tfs_out: list[list[int]] = []
-        for s in text:
-            c = Counter(tokenize(s, use_stopwords=use_stopwords, locale=locale))
-            terms_out.append(list(c.keys()))
-            tfs_out.append(list(c.values()))
-        return pd.DataFrame({"terms": terms_out, "tfs": tfs_out})
-
-    return _tc
-
-
 def tokens_col(col, use_stopwords: bool = False, locale: str | None = None):
     """JVM-codegen twin of :func:`tokenize` (split/lower/regexp — no
     Python). Token-identical to the UDF on the supported alphabets; used

@@ -7,43 +7,42 @@ miru-service ``.../stream/MiruIndexer.java:47-126``,
 ``MiruIndexPrimaryFields.java:37-136`` (tf extraction 62-75),
 ``.../index/lab/LabFieldIndex.java:478-541`` (global Σtf row)).
 
-Spark design:
+Spark design — one build path per wave of shards:
 
-- **One declarative pass per wave of shards**: all pending shards build in
-  a single job — filter to the union of shard doc-id ranges (pushed to the
-  parquet scan), tokenize with an Arrow UDF, ``explode``, then ONE
-  ``repartition(term, block_key)`` + ``sortWithinPartitions`` feeding a
-  streaming Arrow compressor (which aggregates tf as run lengths of the
-  sorted stream — no separate groupBy shuffle), written
-  ``partitionBy(shard)``. Shard count does not multiply job count
-  (per-shard sequential jobs waste their fixed scheduling/JIT cost N
-  times and cap scaling).
-- **Skew-safe by construction**: the posting shuffle keys on
-  ``(term, block_key)`` where ``block_key = doc_id >> block_bits``. A head
-  term ("the") is split across every doc-range block, so no single reducer
+1. **Arrow pack kernel** (``_make_arrow_packer``, ``mapInArrow``): filter
+   to the union of the wave's shard doc-id ranges (pushed to the parquet
+   scan), tokenize, count tf per (term, doc) map-side, and emit ONE
+   delta+varbyte packed *partial* posting run per (term, block) per
+   chunk. Keyword fields ride along as ``field:value`` composite terms.
+2. **Packed partial exchange**: ONE ``repartition(term, block_key)`` +
+   ``sortWithinPartitions(term, block_key, min_doc)`` ships ~2-4 B per
+   posting of packed bytes, never raw (term, doc_id, tf) rows. Shard
+   count does not multiply job count.
+3. **Stitch merger with Arrow-decode fallback** (``_make_arrow_merger``):
+   partials of one (term, block) whose doc ranges are disjoint are
+   concatenated with one patched varint each — the reference's append of
+   dirty Roaring containers (``LabInvertedIndex.java:335-399``); bodies
+   whose partials interleave (scattered input ids) are decoded and
+   re-encoded instead, byte-identically. Written ``partitionBy(shard)``.
+4. **``DOCLEN_TERM`` marker**: every doc's token count rides the same
+   exchange as one reserved pseudo-term per block, so doclen costs no
+   second tokenize pass and the doc store is a Python-free projection.
+5. **Doclens sidecar**: a tiny transform turns the committed marker
+   blocks into ``doclens/`` — (doc_ids, doclens) ONCE per block, not once
+   per posting; readers equi-join it per block at query time. Block
+   headers keep (max_doc_id, n, max_tf) for block-max pruning — the
+   reference's lastId zone-map skip (``LabFieldIndex.multiTxIndex:371-383``),
+   upgraded per block — with the block's min_doclen from the sidecar.
+
+Further properties:
+
+- **Skew-safe by construction**: the shuffle keys on ``(term,
+  block_key)`` where ``block_key = doc_id >> block_bits``. A head term
+  ("the") is split across every doc-range block, so no single reducer
   ever sees more than one block (<= 2^block_bits docs) of any term — the
   same reason the reference atomizes bitmaps into 64Ki-docId Roaring
-  containers (``LabInvertedIndex.java:268-292``). This is the salted
-  repartition of the north star with a *deterministic* salt (the doc-range
-  block) that doubles as the physical index layout.
-- **No wide-row aggregation**: blocks are assembled by a streaming
-  ``mapInPandas`` kernel over sorted partitions (numpy group-boundary
-  scan), never via ``collect_list``/``sort_array`` — JVM array-object
-  churn throttles multi-core scaling with GC pressure.
-- **tf is counted map-side** (``term_counts_udf``): a term's tf is a pure
-  function of its doc's token stream, so the dominant shuffle ships one
-  row per *distinct* (term, doc), not one per occurrence — the map-side
-  combine of the reference's per-activity tf extraction
-  (``MiruIndexPrimaryFields.java:62-75``) with zero extra exchanges.
-- **doclens live in a per-block sidecar, not in the postings**: a doc's
-  length depends only on the doc, but a per-posting doclen stream stores
-  (and shuffles) it once per matching term — df-times redundant. The
-  ``doclens/`` sidecar keeps (doc_ids, doclens) once per 8Ki-doc block
-  (built from the doc store, off the hot shuffle); readers equi-join it
-  per block at query time. Block headers keep (max_doc_id, n, max_tf)
-  for block-max pruning — the reference's lastId zone-map skip
-  (``LabFieldIndex.multiTxIndex:371-383``), upgraded per block — with
-  the block's min_doclen coming from the sidecar.
+  containers (``LabInvertedIndex.java:268-292``): a salted repartition
+  with a *deterministic* salt that doubles as the physical index layout.
 - **Global stats are additive across disjoint shards**: per-shard
   (term, df, cf) and (n_docs, sum_doclen) partials are merged by a small
   finalize job into the dictionary + stats.json; df/cf/N/avgdl therefore
@@ -75,8 +74,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from miru_spark.analysis.tokenizer import (ANALYZER_VERSION, term_counts_udf,
-                                            tokenize_udf)
+from miru_spark.analysis.tokenizer import ANALYZER_VERSION
 from miru_spark.index import codec
 from miru_spark.index._prof import profiled
 from miru_spark.index.manifest import (
@@ -87,15 +85,13 @@ from miru_spark.index.schema import IndexSchema, enforce_additive, write_schema
 BLOCK_BITS_DEFAULT = 13  # 8192-doc ranges per block (Roaring container analogue)
 
 # Reserved pseudo-term carrying per-doc doclens through the SAME packed
-# exchange as the postings (map_pack path): one marker group per block
-# whose (doc_ids, tfs) streams are (every doc in the block, its doclen).
+# exchange as the postings: one marker group per block whose
+# (doc_ids, tfs) streams are (every doc in the block, its doclen).
 # The analyzer emits only [a-z0-9]+ and keyword terms are
 # "field:value" — a NUL-prefixed term can never collide. After the
 # postings write, a tiny transform turns marker rows into the doclens/
-# sidecar; every reader path excludes the marker. This removes the doc
-# store's second tokenize pass entirely: doclen is a byproduct of tf
-# counting, so re-deriving it in a second Arrow pass doubled the
-# pipeline's text-processing CPU and DRAM traffic for no information.
+# sidecar; every reader path excludes the marker. doclen is a byproduct
+# of tf counting, so the doc store needs no second tokenize pass.
 DOCLEN_TERM = "\x00dl"
 
 # Manifest aggregates ride the write jobs as Observation metrics (4-6
@@ -158,186 +154,14 @@ def _group_slices(buf: bytes, sizes: np.ndarray, ends: np.ndarray) -> list[bytes
     """Slice one concatenated varbyte stream into per-group byte runs:
     ``sizes`` are per-row encoded byte lengths, ``ends`` the exclusive
     row index of each group (cumsum of group row counts). Shared by the
-    compressor, the doclen-sidecar packer, and the map-side partial
-    packer — a future change (e.g. int64 offsets for >2 GB buffers)
-    lands once."""
+    compaction kernels that re-encode stripped blocks — a future change
+    (e.g. int64 offsets for >2 GB buffers) lands once."""
     byte_ends = np.cumsum(sizes)
     ge = byte_ends[ends - 1]
     gs = np.empty_like(ge)
     gs[0] = 0
     gs[1:] = ge[:-1]
     return [buf[a:b] for a, b in zip(gs, ge)]
-
-
-def _compress_groups(pdf: pd.DataFrame, block_bits: int) -> pd.DataFrame:
-    """Compress raw posting rows into block rows.
-
-    Input: one row per DISTINCT (term, doc_id) carrying its map-side tf
-    (``term_counts_udf``), sorted by (term, doc_id). block_key is
-    re-derived here (doc_id >> block_bits) — it is never shipped through
-    the shuffle. Duplicate (term, doc_id) rows (e.g. a term arriving from
-    several input relations) still merge: tf sums over equal runs.
-    """
-    rt = pdf["term"].to_numpy()
-    rids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    rbk = rids >> block_bits
-    rtfs = pdf["tf"].to_numpy(dtype=np.int64)
-    n_rows = len(rt)
-    run = np.empty(n_rows, dtype=bool)
-    run[0] = True
-    # (no block-key clause: rbk = rids >> block_bits, so a block change
-    # implies an id change)
-    run[1:] = (rids[1:] != rids[:-1]) | (rt[1:] != rt[:-1])
-    run_starts = np.nonzero(run)[0]
-    tfs_all = np.add.reduceat(rtfs, run_starts)
-    t = rt[run_starts]
-    bk = rbk[run_starts]
-    ids_all = rids[run_starts]
-
-    change = np.empty(len(t), dtype=bool)
-    change[0] = True
-    change[1:] = (t[1:] != t[:-1]) | (bk[1:] != bk[:-1])
-    starts = np.nonzero(change)[0]
-    ends = np.append(starts[1:], len(t))
-
-    # whole-batch encode, per-group slice: one varbyte pass per stream
-    # for ALL groups (per-group numpy calls on tiny arrays are ~100x the
-    # byte work). Deltas restart at each group boundary from block base.
-    prev = np.empty_like(ids_all)
-    prev[0] = 0
-    prev[1:] = ids_all[:-1]
-    deltas = np.where(change, ids_all - (bk << block_bits), ids_all - prev)
-    id_buf, id_sizes = codec.varbyte_encode_with_sizes(deltas.astype(np.uint64))
-    tf_buf, tf_sizes = codec.varbyte_encode_with_sizes(tfs_all.astype(np.uint64))
-
-    id_slices = _group_slices(id_buf, id_sizes, ends)
-    # codec choice per block (the reference's run-optimize,
-    # MiruBitmaps.java:177): dense blocks (few consecutive-id runs)
-    # re-encode as RLE. Heuristic: the run stream holds 2 varbytes per
-    # run vs >=1 byte per posting, so RLE wins when 2*n_runs < n.
-    # Head-term blocks are few but big — per-group python cost is fine.
-    n_counts = ends - starts
-    run_break = np.empty(len(t), dtype=bool)
-    run_break[0] = True
-    run_break[1:] = change[1:] | (deltas[1:] != 1)
-    n_runs = np.add.reduceat(run_break.astype(np.int64), starts)
-    codec_col = (2 * n_runs < n_counts).astype(np.int8)
-    for gi in np.flatnonzero(codec_col):
-        gs_, ge_ = starts[gi], ends[gi]
-        id_slices[gi] = codec.encode_block_runs(
-            ids_all[gs_:ge_], int(bk[gs_]) << block_bits
-        )
-
-    return pd.DataFrame(
-        {
-            "term": t[starts],
-            "block_key": bk[starts],
-            "n": n_counts.astype(np.int32),
-            "sum_tf": np.add.reduceat(tfs_all, starts),
-            "max_doc_id": ids_all[ends - 1],
-            "max_tf": np.maximum.reduceat(tfs_all, starts).astype(np.int32),
-            "codec": codec_col,
-            "doc_ids": id_slices,
-            "tfs": _group_slices(tf_buf, tf_sizes, ends),
-        }
-    )
-
-
-def _compress_doclen_groups(pdf: pd.DataFrame, block_bits: int) -> pd.DataFrame:
-    """Compress (doc_id, doclen) rows (sorted by doc_id, partitioned by
-    block) into one sidecar row per block: delta+varbyte doc ids from the
-    block base, varbyte doclens, plus the block's min doclen for WAND
-    upper bounds."""
-    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    dls = pdf["doclen"].to_numpy(dtype=np.int64)
-    bk = ids >> block_bits
-    change = np.empty(len(ids), dtype=bool)
-    change[0] = True
-    change[1:] = bk[1:] != bk[:-1]
-    starts = np.nonzero(change)[0]
-    ends = np.append(starts[1:], len(ids))
-
-    prev = np.empty_like(ids)
-    prev[0] = 0
-    prev[1:] = ids[:-1]
-    deltas = np.where(change, ids - (bk << block_bits), ids - prev)
-    id_buf, id_sizes = codec.varbyte_encode_with_sizes(deltas.astype(np.uint64))
-    dl_buf, dl_sizes = codec.varbyte_encode_with_sizes(dls.astype(np.uint64))
-
-    return pd.DataFrame(
-        {
-            "block_key": bk[starts],
-            "n": (ends - starts).astype(np.int32),
-            "min_doclen": np.minimum.reduceat(dls, starts).astype(np.int32),
-            "doc_ids": _group_slices(id_buf, id_sizes, ends),
-            "doclens": _group_slices(dl_buf, dl_sizes, ends),
-        }
-    )
-
-
-def _make_doclen_compressor(block_bits: int):
-    """Streaming kernel over partitions sorted by doc_id: same
-    carry-across-Arrow-batch discipline as the postings compressor."""
-
-    def _compress(pdf_iter):
-        buf: list[pd.DataFrame] = []
-        buffered = 0
-        for pdf in pdf_iter:
-            if len(pdf):
-                buf.append(pdf)
-                buffered += len(pdf)
-            if buffered < 200_000:
-                continue
-            whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            bk = whole["doc_id"].to_numpy(dtype=np.int64) >> block_bits
-            eq_last = bk == bk[-1]
-            not_eq = np.nonzero(~eq_last)[0]
-            start_last = int(not_eq[-1]) + 1 if not_eq.size else 0
-            body = whole.iloc[:start_last]
-            carry = whole.iloc[start_last:]
-            if len(body):
-                yield _compress_doclen_groups(body, block_bits)
-            buf = [carry] if len(carry) else []
-            buffered = len(carry)
-        if buffered:
-            whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            yield _compress_doclen_groups(whole, block_bits)
-
-    return profiled(_compress, "doclen_compress")
-
-
-def _make_compressor(block_bits: int):
-    """Streaming mapInPandas kernel over partitions sorted by
-    (term, block_key, doc_id): groups never materialize as JVM arrays
-    (no collect_list/sort_array object churn); a partial group at an
-    Arrow-batch boundary is carried into the next batch."""
-
-    def _compress(pdf_iter):
-        buf: list[pd.DataFrame] = []
-        buffered = 0
-        for pdf in pdf_iter:
-            if len(pdf):
-                buf.append(pdf)
-                buffered += len(pdf)
-            if buffered < 200_000:  # amortize per-batch overhead
-                continue
-            whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            t = whole["term"].to_numpy()
-            bk = whole["doc_id"].to_numpy(dtype=np.int64) >> block_bits
-            eq_last = (t == t[-1]) & (bk == bk[-1])
-            not_eq = np.nonzero(~eq_last)[0]
-            start_last = int(not_eq[-1]) + 1 if not_eq.size else 0
-            body = whole.iloc[:start_last]
-            carry = whole.iloc[start_last:]
-            if len(body):
-                yield _compress_groups(body, block_bits)
-            buf = [carry] if len(carry) else []
-            buffered = len(carry)
-        if buffered:
-            whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            yield _compress_groups(whole, block_bits)
-
-    return profiled(_compress, "compress")
 
 
 # ---------------------------------------------------------------------
@@ -349,10 +173,27 @@ def _make_compressor(block_bits: int):
 # of sorted runs per block instead of external-sorting every posting.
 # The shuffle key is unchanged — (term, block_key) — so skew safety and
 # the physical layout are identical; only the exchanged representation
-# shrinks. Reduce-side output is byte-identical to the row path
-# (asserted by tests): partials decode back to the same sorted
-# (term, doc_id, tf) stream that feeds the same _compress_groups.
+# shrinks. Tests assert the output byte-identical to a driver-side
+# reference that compresses the raw sorted (term, doc_id, tf) rows
+# (tests/build_reference.py).
 # ---------------------------------------------------------------------
+
+# Pack-kernel chunk size, in docs, regardless of the session's Arrow
+# batch size: per-chunk arrays (~600k tokens -> a few MB each) stay
+# inside the cache hierarchy, where a 65536-doc batch streams ~40 MB
+# arrays through DRAM per pass. Measured at local[8] x 480k docs:
+# 4096-doc chunks cut the kernel's CPU 6x (168 -> 28 CPU-s) and lifted
+# build throughput 11.3k -> 32.5k docs/s, for a ~1.5x larger
+# (zstd-packed) partials exchange. 8192 (one default block span) beat
+# 4096 in a later A/B: a chunk that covers a whole block emits ONE
+# partial per (term, block) per input partition instead of two, halving
+# exchanged ROWS (~90 MB of per-row overhead at 480k docs; JVM shuffle
+# CPU 5.9 -> 5.0 cores at local[8]) for a slightly hotter kernel.
+_PACK_CHUNK_DOCS = 8192
+
+# Merge-kernel carry buffer: postings accumulated before a body of
+# complete (term, block) groups is merged (amortizes per-batch overhead).
+_MERGE_BUFFER_POSTINGS = 200_000
 
 _PARTIALS_SCHEMA = T.StructType(
     [
@@ -382,26 +223,25 @@ def _make_arrow_packer(
     use_stopwords: bool = False,
     locale: str | None = None,
 ):
-    """Batch-vectorized ``mapInArrow`` twin of :func:`_make_packer`:
-    same Python analyzer (``re.findall`` is C-level and beats the JVM
-    regex twin ~4x — measured), but everything after tokenization runs
-    on int dictionary codes instead of per-doc Python objects:
+    """``mapInArrow`` kernel: docs -> packed (term, block) partial postings.
 
-    - ONE flat token array per batch + one ``pd.factorize`` replaces a
-      Counter and three numpy object arrays PER DOC;
-    - tf counting, block grouping, and delta restarts all fall out of a
-      single int sort (stable radix by code when doc ids arrive
-      ascending — the normal, id-clustered case);
+    Tokenizes with the Python analyzer (``re.findall`` is C-level and
+    beats the JVM regex twin ~4x — measured); everything after
+    tokenization runs on int dictionary codes, never per-doc Python
+    objects:
+
+    - ONE flat token array per chunk + one ``pd.factorize``;
+    - tf counting (the map-side combine), block grouping, and delta
+      restarts all fall out of a single int sort (stable radix by code
+      when doc ids arrive ascending — the normal, id-clustered case);
     - the packed per-group byte streams are emitted as ONE zero-copy
-      Arrow binary array over the whole batch buffer (no per-group
+      Arrow binary array over the whole chunk buffer (no per-group
       Python ``bytes`` slices, no pandas->Arrow conversion);
+    - keyword composite terms ("lang:en", exact match — the reference's
+      field-prefixed term compose, ``MiruTermComposer.java:35-83``)
+      arrive precomputed in the optional third column;
     - doclens are the per-doc token counts and ride the same exchange
-      under ``DOCLEN_TERM`` (same contract as the pandas packer —
-      byte-identical output, tests assert it).
-
-    This removes the per-doc Counter/object-array churn that dominated
-    the pandas packer's CPU (and its allocator/DRAM traffic — the
-    single-box scaling limiter measured in BENCH/BASELINE.md).
+      under ``DOCLEN_TERM``.
     """
     from itertools import chain
 
@@ -409,21 +249,6 @@ def _make_arrow_packer(
 
     from miru_spark.analysis.tokenizer import tokenize
 
-    # Work in bounded chunks regardless of the session's Arrow batch
-    # size: per-chunk arrays (~600k tokens -> a few MB each) stay inside
-    # the cache hierarchy, where a 65536-doc batch streams ~40 MB arrays
-    # through DRAM per pass. Measured at local[8] x 480k docs: 4096-doc
-    # chunks cut the kernel's CPU 6x (168 -> 28 CPU-s) and lifted build
-    # throughput 11.3k -> 32.5k docs/s, for a ~1.5x larger (zstd-packed)
-    # partials exchange — the right trade at any scale, since map CPU
-    # multiplies per doc while the exchange compresses.
-    # Round-4 A/B moved the default 4096 -> 8192 (one block span): a
-    # chunk that covers a whole block emits ONE partial per (term,
-    # block) per input partition instead of two, halving exchanged ROWS
-    # (~90 MB of per-row overhead at 480k docs; JVM shuffle CPU 5.9 ->
-    # 5.0 cores at local[8]) for a slightly hotter kernel — shuffle
-    # bytes are the scarce resource at cluster scale, map CPU is not.
-    chunk_docs = int(os.environ.get("MIRU_PACK_CHUNK_DOCS", "8192"))
 
     def _pack(raw_iter):
         def chunks():
@@ -450,8 +275,8 @@ def _make_arrow_packer(
                     if 0 < breaks.size <= 64:
                         cuts = sorted({0, b.num_rows, *breaks.tolist()})
                 for lo, hi in zip(cuts[:-1], cuts[1:]):
-                    for off in range(lo, hi, chunk_docs):
-                        yield b.slice(off, min(chunk_docs, hi - off))
+                    for off in range(lo, hi, _PACK_CHUNK_DOCS):
+                        yield b.slice(off, min(_PACK_CHUNK_DOCS, hi - off))
 
         for batch in chunks():
             n_docs = batch.num_rows
@@ -565,185 +390,6 @@ def _make_arrow_packer(
     return profiled(_pack, "arrow_pack")
 
 
-def _pack_partials(
-    term_arr: np.ndarray, doc_arr: np.ndarray, tf_arr: np.ndarray, block_bits: int
-) -> pd.DataFrame:
-    """Group flat (term, doc_id, tf) arrays by (term, block) and encode
-    each group as one packed partial row. One varbyte pass for the whole
-    batch (per-group calls on tiny arrays cost ~100x the byte work)."""
-    codes, uniques = pd.factorize(term_arr, sort=False)
-    block = doc_arr >> block_bits
-    order = np.lexsort((doc_arr, block, codes))
-    codes = codes[order]
-    doc_s = doc_arr[order]
-    tf_s = tf_arr[order]
-    block_s = block[order]
-
-    change = np.empty(len(codes), dtype=bool)
-    change[0] = True
-    change[1:] = (codes[1:] != codes[:-1]) | (block_s[1:] != block_s[:-1])
-    starts = np.nonzero(change)[0]
-    ends = np.append(starts[1:], len(codes))
-
-    deltas = np.empty_like(doc_s)
-    deltas[0] = 0
-    deltas[1:] = doc_s[1:] - doc_s[:-1]
-    np.putmask(deltas, change, doc_s - (block_s << block_bits))
-    id_buf, id_sizes = codec.varbyte_encode_with_sizes(deltas.astype(np.uint64))
-    tf_buf, tf_sizes = codec.varbyte_encode_with_sizes(tf_s.astype(np.uint64))
-
-    run_break = np.empty(len(codes), dtype=bool)
-    run_break[0] = True
-    run_break[1:] = change[1:] | (deltas[1:] != 1)
-    return pd.DataFrame(
-        {
-            "term": uniques[codes[starts]],
-            "block_key": block_s[starts],
-            "min_doc": doc_s[starts],
-            "n": (ends - starts).astype(np.int32),
-            "max_doc": doc_s[ends - 1],
-            "sum_tf": np.add.reduceat(tf_s, starts),
-            "max_tf": np.maximum.reduceat(tf_s, starts).astype(np.int32),
-            "n_runs": np.add.reduceat(run_break.astype(np.int64), starts).astype(np.int32),
-            "doc_ids": _group_slices(id_buf, id_sizes, ends),
-            "tfs": _group_slices(tf_buf, tf_sizes, ends),
-        }
-    )
-
-
-def _make_packer(
-    block_bits: int,
-    *,
-    use_stopwords: bool,
-    locale: str | None,
-    id_col: str,
-    text_col: str,
-    keyword_fields: dict[str, str] | None = None,
-):
-    """mapInPandas kernel: docs -> packed (term, block) partial postings.
-
-    Tokenizes + counts per-doc tf (the map-side combine), derives keyword
-    composite terms ("lang:en", tf=1, exact-match — the reference's
-    field-prefixed term compose, ``MiruTermComposer.java:35-83``), then
-    packs every (term, block) group in the batch into ONE delta+varbyte
-    row. Works best when input partitions are doc-id-clustered (parquet
-    written in id order — the normal case); with fully shuffled ids it
-    degrades gracefully to near one-posting partials, which the merger
-    still handles."""
-    from collections import Counter
-
-    from miru_spark.analysis.tokenizer import tokenize
-
-    kw = sorted((keyword_fields or {}).items())
-    phase_dir = os.environ.get("MIRU_PACK_PHASE_DIR")
-
-    def _pack(pdf_iter):
-        ph = {"tok": 0.0, "arr": 0.0, "pp": 0.0, "docs": 0}
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            _t0 = time.process_time()
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            term_parts: list[np.ndarray] = []
-            doc_parts: list[np.ndarray] = []
-            tf_parts: list[np.ndarray] = []
-            doclens = np.zeros(len(ids), dtype=np.int64)
-            for i, (did, s) in enumerate(zip(ids, pdf[text_col])):
-                c = Counter(tokenize(s, use_stopwords=use_stopwords, locale=locale))
-                if not c:
-                    continue
-                tfv = np.fromiter(c.values(), dtype=np.int64, count=len(c))
-                doclens[i] = tfv.sum()
-                term_parts.append(np.array(list(c.keys()), dtype=object))
-                tf_parts.append(tfv)
-                doc_parts.append(np.full(len(c), did, dtype=np.int64))
-            _t1 = time.process_time()
-            ph["tok"] += _t1 - _t0
-            ph["docs"] += len(ids)
-            # doclen marker entries: EVERY doc (empty docs included, dl=0)
-            # — doclen is a byproduct of the tf counting above, shipped
-            # through the same exchange under the reserved pseudo-term
-            term_parts.append(np.full(len(ids), DOCLEN_TERM, dtype=object))
-            tf_parts.append(doclens)
-            doc_parts.append(ids)
-            for fname, _colname in kw:
-                vals = pdf[f"__kw_{fname}"]
-                for did, v in zip(ids, vals):
-                    if v is None:
-                        continue
-                    if isinstance(v, (list, np.ndarray)):
-                        labels = [x for x in v if x is not None]
-                        if not labels:
-                            continue
-                        term_parts.append(
-                            np.array([f"{fname}:{x}" for x in labels], dtype=object)
-                        )
-                        tf_parts.append(np.ones(len(labels), dtype=np.int64))
-                        doc_parts.append(np.full(len(labels), did, dtype=np.int64))
-                    else:
-                        term_parts.append(np.array([f"{fname}:{v}"], dtype=object))
-                        tf_parts.append(np.ones(1, dtype=np.int64))
-                        doc_parts.append(np.full(1, did, dtype=np.int64))
-            if not term_parts:
-                continue
-            ta = np.concatenate(term_parts)
-            da = np.concatenate(doc_parts)
-            tfa = np.concatenate(tf_parts)
-            _t2 = time.process_time()
-            ph["arr"] += _t2 - _t1
-            out = _pack_partials(ta, da, tfa, block_bits)
-            ph["pp"] += time.process_time() - _t2
-            yield out
-        if phase_dir and ph["docs"]:
-            try:
-                os.makedirs(phase_dir, exist_ok=True)
-                with open(
-                    os.path.join(phase_dir, f"p{os.getpid()}_{time.monotonic_ns()}.json"), "w"
-                ) as f:
-                    json.dump(ph, f)
-            except OSError:
-                pass
-
-    return profiled(_pack, "pack")
-
-
-def _decode_partials(pdf: pd.DataFrame, block_bits: int) -> pd.DataFrame:
-    """Packed partial rows (sorted so equal (term, block_key) groups are
-    contiguous, partials ordered by min_doc) -> flat (term, doc_id, tf)
-    rows sorted the way ``_compress_groups`` requires. Whole-batch
-    decode: varbyte streams are self-delimiting, so ALL partials decode
-    in one pass; per-partial delta bases restart via a segmented
-    cumsum."""
-    n = pdf["n"].to_numpy(dtype=np.int64)
-    starts = np.zeros(len(n), dtype=np.int64)
-    starts[1:] = np.cumsum(n)[:-1]
-    deltas = codec.varbyte_decode(b"".join(pdf["doc_ids"])).astype(np.int64)
-    tfs = codec.varbyte_decode(b"".join(pdf["tfs"])).astype(np.int64)
-    base = pdf["block_key"].to_numpy(dtype=np.int64) << block_bits
-    cs = np.cumsum(deltas)
-    # ids[i] = cs[i] - (cs[start_p] - deltas[start_p] - base_p) for i in partial p
-    off = cs[starts] - deltas[starts] - base
-    ids = cs - np.repeat(off, n)
-    terms = np.repeat(pdf["term"].to_numpy(), n)
-
-    # cross-partial doc ranges can interleave when input partitions are
-    # not id-clustered; detect and re-sort within the delivered stream
-    # order (gid preserves (term, block) contiguity from the sort)
-    gid = np.repeat(np.arange(len(n), dtype=np.int64), n)
-    t_np = pdf["term"].to_numpy()
-    bk_np = pdf["block_key"].to_numpy()
-    same_grp = np.empty(len(n), dtype=bool)
-    same_grp[0] = False
-    same_grp[1:] = (t_np[1:] == t_np[:-1]) & (bk_np[1:] == bk_np[:-1])
-    grp_no = np.cumsum(~same_grp)  # per-partial group ordinal
-    grp_elem = np.repeat(grp_no, n)
-    unsorted = np.any((ids[1:] <= ids[:-1]) & (grp_elem[1:] == grp_elem[:-1]))
-    if unsorted:
-        order = np.lexsort((ids, grp_elem))
-        ids, tfs, terms = ids[order], tfs[order], terms[order]
-    return pd.DataFrame({"term": terms, "doc_id": ids, "tf": tfs})
-
-
 def _marker_to_doclens(block_bits: int):
     """DOCLEN_TERM marker blocks -> doclens sidecar rows. The marker's
     tfs stream is already the varbyte doclen stream; ids pass through
@@ -778,43 +424,6 @@ def _marker_to_doclens(block_bits: int):
             )
 
     return profiled(_xform, "doclen_xform")
-
-
-def _make_merger(block_bits: int):
-    """Streaming mapInPandas kernel over partitions sorted by
-    (term, block_key, min_doc): decodes packed partials and feeds the
-    same ``_compress_groups`` as the row path — output blocks are
-    byte-identical. Carry discipline buffers a partial (term, block)
-    group across Arrow-batch boundaries."""
-
-    buf_postings = int(os.environ.get("MIRU_MERGE_BUFFER_POSTINGS", "200000"))
-
-    def _merge(pdf_iter):
-        buf: list[pd.DataFrame] = []
-        buffered = 0
-        for pdf in pdf_iter:
-            if len(pdf):
-                buf.append(pdf)
-                buffered += int(pdf["n"].sum())
-            if buffered < buf_postings:
-                continue
-            whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            t = whole["term"].to_numpy()
-            bk = whole["block_key"].to_numpy(dtype=np.int64)
-            eq_last = (t == t[-1]) & (bk == bk[-1])
-            not_eq = np.nonzero(~eq_last)[0]
-            start_last = int(not_eq[-1]) + 1 if not_eq.size else 0
-            body = whole.iloc[:start_last]
-            carry = whole.iloc[start_last:]
-            if len(body):
-                yield _compress_groups(_decode_partials(body, block_bits), block_bits)
-            buf = [carry.reset_index(drop=True)] if len(carry) else []
-            buffered = int(carry["n"].sum()) if len(carry) else 0
-        if buffered:
-            whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            yield _compress_groups(_decode_partials(whole, block_bits), block_bits)
-
-    return profiled(_merge, "merge")
 
 
 def _binary_stream(chunk) -> np.ndarray:
@@ -1061,8 +670,8 @@ def _stitch_arrow_body(tbl, block_bits: int, dbg_dir: str | None = None):
 def _merge_arrow_body(tbl, block_bits: int):
     """Decode a body of packed partials (complete (term, block) groups,
     sorted by (term, block_key, min_doc)) and re-compress into final
-    posting blocks — the Arrow twin of ``_decode_partials`` +
-    ``_compress_groups`` with byte-identical output."""
+    posting blocks — the fallback of :func:`_stitch_arrow_body` for
+    interleaved partials, with byte-identical output."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -1096,7 +705,7 @@ def _merge_arrow_body(tbl, block_bits: int):
     grp_elem = np.repeat(grp_no, n)
 
     # cross-partial doc ranges can interleave when input partitions were
-    # not id-clustered; re-sort within groups (same as _decode_partials)
+    # not id-clustered; re-sort within groups
     if np.any((ids[1:] <= ids[:-1]) & (grp_elem[1:] == grp_elem[:-1])):
         order = np.lexsort((ids, grp_elem))
         ids = ids[order]
@@ -1194,15 +803,17 @@ def _merge_arrow_body(tbl, block_bits: int):
 
 
 def _make_arrow_merger(block_bits: int):
-    """Arrow twin of :func:`_make_merger`: same carry discipline (hold
-    back the trailing, possibly-incomplete (term, block) group), but the
-    packed byte streams never materialize as per-row Python ``bytes`` —
-    decode reads zero-copy views of the Arrow values buffers and the
-    re-encoded blocks go out as zero-copy binary arrays."""
+    """``mapInArrow`` kernel over partitions sorted by (term, block_key,
+    min_doc): packed partials -> final posting blocks. Carry discipline:
+    the trailing, possibly-incomplete (term, block) group is held back
+    into the next body. Each body is stitched (:func:`_stitch_arrow_body`)
+    or, when its partials interleave, decoded and re-encoded
+    (:func:`_merge_arrow_body`). The packed byte streams never
+    materialize as per-row Python ``bytes`` — both read zero-copy views
+    of the Arrow values buffers and emit zero-copy binary arrays."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    buf_postings = int(os.environ.get("MIRU_MERGE_BUFFER_POSTINGS", "200000"))
     # captured driver-side: python workers fork from a daemon that
     # inherited the JVM's env, so env set after session start (tests)
     # would not reach them
@@ -1220,7 +831,7 @@ def _make_arrow_merger(block_bits: int):
                 continue
             pend.append(batch)
             npend += _n_sum(batch)
-            if npend < buf_postings:
+            if npend < _MERGE_BUFFER_POSTINGS:
                 continue
             whole = pa.Table.from_batches(pend)
             t_col = whole.column("term")
@@ -1412,7 +1023,6 @@ def build_index(
     shard_span_blocks: int | None = None,
     max_wave_shards: int | None = None,
     exchange_partitions: int | None = None,
-    map_pack: bool = True,
     fail_after_shard: int | None = None,  # test hook: simulate a crash between shards
 ) -> IndexMeta:
     """Build (or resume) the inverted index for ``docs`` under ``index_dir``.
@@ -1467,7 +1077,7 @@ def build_index(
         shard_col = F.expr(
             f"CAST(CAST(`{id_col}` AS BIGINT) DIV {shard_span} AS INT)")
         man_dir0 = os.path.join(index_dir, "manifests")
-        fresh = map_pack and not (
+        fresh = not (
             os.path.isdir(man_dir0)
             and any(fn.startswith("shard_") for fn in os.listdir(man_dir0))
         )
@@ -1630,7 +1240,7 @@ def build_index(
             keyword_fields=kw,
             block_bits=block_bits, use_stopwords=use_stopwords, locale=locale,
             fingerprints={s: fps[s] for s in wave},
-            exchange_partitions=exchange_partitions, map_pack=map_pack,
+            exchange_partitions=exchange_partitions,
             # the LAST wave folds the global dictionary merge into its
             # parallel tail — _finalize then skips that job latency
             build_dictionary=last_wave,
@@ -1683,83 +1293,25 @@ def _shard_expr(col_name: str, ranges: dict[int, tuple[int, int]]):
     return expr.cast("int")
 
 
-def _row_path_blocks(
-    spark, sliced, ranges, *, id_col, text_col, block_bits, use_stopwords,
-    locale, keyword_fields, n_parts, block_ranges,
-):
-    """Legacy raw-row exchange (kept for A/B against the packed path):
-    one row per distinct (term, doc) through the shuffle, external-sorted
-    reduce-side, compressed by the streaming row compressor. Output is
-    byte-identical to the packed path."""
-    tc = term_counts_udf(use_stopwords=use_stopwords, locale=locale)
-    token_rows = (
-        sliced.select(F.col(id_col).cast("long").alias("doc_id"), tc(F.col(text_col)).alias("tc"))
-        .select("doc_id", F.explode(F.arrays_zip("tc.terms", "tc.tfs")).alias("z"))
-        .select("doc_id", F.col("z.terms").alias("term"), F.col("z.tfs").cast("int").alias("tf"))
-    )
-    # keyword fields index as FIELD-PREFIXED composite terms
-    # ("lang:en") in the same postings relation — the reference's term
-    # composer packs a field prefix into the term bytes the same way
-    # (``MiruTermComposer.java:35-83``; per-field posting keys
-    # ``LabFieldIndex.java:163-171``). Exact-match semantics (no
-    # analysis, KeywordAnalyzer-style); doclen=1 because composite
-    # terms are candidate masks, not BM25-scored text.
-    for fname, colname in sorted((keyword_fields or {}).items()):
-        src_t = dict(sliced.dtypes)[colname]
-        if src_t.startswith("array"):
-            # multi-valued field (e.g. per-doc authz labels -> one
-            # posting list per label, LabAuthzIndex.java); generators
-            # must be top-level, so explode BEFORE the concat
-            vals = sliced.select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                F.explode(colname).alias("_kwval"),
-            )
-        else:
-            vals = sliced.select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                F.col(colname).alias("_kwval"),
-            )
-        kw_rows = (
-            vals.select(
-                "doc_id",
-                F.concat(F.lit(fname + ":"), F.col("_kwval").cast("string")).alias("term"),
-                F.lit(1).cast("int").alias("tf"),
-            )
-            .filter(F.col("term").isNotNull())
-        )
-        token_rows = token_rows.unionByName(kw_rows)
-    return (
-        token_rows
-        # partition on the block EXPRESSION but never materialize it:
-        # block_key is a pure function of doc_id, so shipping it
-        # through the dominant shuffle would waste ~8 bytes/row; the
-        # compressor re-derives it with one numpy shift. Sorting by
-        # (term, doc_id) preserves (term, block, doc_id) order since
-        # block_key is monotone in doc_id.
-        .repartition(n_parts, "term", F.shiftright("doc_id", block_bits))
-        .sortWithinPartitions("term", "doc_id")
-        .select("term", "doc_id", "tf")
-        .mapInPandas(_make_compressor(block_bits), schema=_POSTINGS_SCHEMA)
-        .withColumn("shard", _shard_expr("block_key", block_ranges))
-    )
-
-
 def _build_wave(
     spark, docs, index_dir, ranges: dict[int, tuple[int, int]], *,
     id_col, text_col, stored, block_bits, use_stopwords, fingerprints,
     locale=None, keyword_fields=None, exchange_partitions=None,
-    map_pack: bool = True, build_dictionary: bool = False,
+    build_dictionary: bool = False,
 ) -> dict[int, str]:
     """Build every shard in ``ranges`` with ONE tokenize + ONE shuffle.
 
     Physical plan: filter(union of shard ranges, pushed to the scan) ->
-    Arrow tokenize -> explode -> repartition(term, block_key) +
-    sortWithinPartitions -> streaming block compressor (mapInPandas,
-    aggregates tf as run lengths over the sorted stream) ->
-    partitionBy(shard) write. Group sizes are bounded by the block size
-    (8Ki docs), so head-term skew cannot concentrate on one reducer — the
-    per-container atomization of the reference
-    (``LabInvertedIndex.java:268-292``) as a shuffle key.
+    Arrow pack kernel (tokenize, map-side tf, delta+varbyte partials per
+    (term, block), ``DOCLEN_TERM`` marker per block) -> packed partial
+    exchange: repartition(term, block_key) + sortWithinPartitions(term,
+    block_key, min_doc) -> stitch merger with Arrow-decode fallback ->
+    partitionBy(shard) postings write -> doclens sidecar from the marker
+    blocks. Group sizes are bounded by the block size (8Ki docs), so
+    head-term skew cannot concentrate on one reducer — the per-container
+    atomization of the reference (``LabInvertedIndex.java:268-292``) as a
+    shuffle key. The doc store (ids + stored columns, no Python) is
+    written concurrently from its own thread.
 
     Post-write manifest aggregates ride the write jobs themselves as
     ``Observation`` metrics (per-shard conditional sums) instead of
@@ -1778,7 +1330,6 @@ def _build_wave(
     """
     wall_start = time.monotonic()
     phases: dict[str, float] = {}
-    tok = tokenize_udf(use_stopwords=use_stopwords, locale=locale)
     # merge adjacent shard ranges into intervals before building the scan
     # predicate: an append wave is typically ONE contiguous id interval,
     # so the pushed-down filter stays a single BETWEEN no matter how many
@@ -1801,16 +1352,6 @@ def _build_wave(
     doc_thread = None
     tails: list = []
     try:
-        # doc store: a second Arrow-UDF tokenize COUNT pass. Measured on
-        # this corpus shape: the Arrow tokenizer counts ~20M tokens/s/32
-        # cores while the equivalent JVM split/regexp chain is ~17x
-        # slower (Java regex + per-token string churn), and persist()ing
-        # tokenized arrays for reuse trades that for JVM old-gen GC — a
-        # cheap second UDF pass beats both. The write runs CONCURRENTLY
-        # with the postings job (separate submitter thread): the two jobs
-        # read the same scan and write disjoint outputs, so the scheduler
-        # fills each other's straggler/latency gaps instead of paying two
-        # sequential job latencies per wave.
         docs_root = os.path.join(index_dir, "docs")
         doclens_root = os.path.join(index_dir, "doclens")
         wave_shards_list = list(ranges)
@@ -1825,13 +1366,9 @@ def _build_wave(
         deferred = {
             s: fp for s, fp in fingerprints.items() if isinstance(fp, _DeferredFP)
         }
-        if deferred and not map_pack:
-            raise ValueError(
-                "deferred fingerprints require the pack path (the chars "
-                "observation rides the pack job)")
         obs_chars = None
         pack_src = sliced
-        if deferred and map_pack:
+        if deferred:
             chars_expr = None
             for c in [text_col, *sorted((keyword_fields or {}).values())]:
                 ln = F.coalesce(F.length(F.col(c).cast("string")), F.lit(0))
@@ -1844,54 +1381,24 @@ def _build_wave(
             ])
 
         def _write_doc_store():
+            # doclen rides the packed postings exchange (DOCLEN_TERM
+            # marker), so the doc store is a Python-free projection. The
+            # write runs CONCURRENTLY with the postings job (separate
+            # submitter thread): the two jobs read the same scan and write
+            # disjoint outputs, so the scheduler fills each other's
+            # straggler/latency gaps instead of paying two sequential job
+            # latencies per wave.
             try:
-                if map_pack:
-                    # doclen rides the packed postings exchange (DOCLEN_TERM
-                    # marker) — the doc store is a Python-free projection,
-                    # eliminating the second tokenize pass over the corpus
-                    (
-                        sliced.select(
-                            _shard_expr(id_col, ranges).alias("shard"),
-                            F.col(id_col).cast("long").alias("doc_id"),
-                            *[F.col(c) for c in stored],
-                        )
-                        .write.mode("overwrite").option("compression", "zstd")
-                        .partitionBy("shard").parquet(docs_root)
-                    )
-                    phases["doc_store_write"] = round(time.monotonic() - wall_start, 2)
-                    return
                 (
                     sliced.select(
                         _shard_expr(id_col, ranges).alias("shard"),
                         F.col(id_col).cast("long").alias("doc_id"),
-                        F.size(tok(F.col(text_col))).alias("doclen"),
                         *[F.col(c) for c in stored],
                     )
                     .write.mode("overwrite").option("compression", "zstd")
                     .partitionBy("shard").parquet(docs_root)
                 )
                 phases["doc_store_write"] = round(time.monotonic() - wall_start, 2)
-                # doclens sidecar: (doc_ids, doclens) ONCE per 8Ki-doc
-                # block, built from the just-written doc store (still
-                # overlapped with the postings job on this thread). The
-                # shuffle is n_docs narrow rows — noise next to the
-                # postings exchange this sidecar slims (which no longer
-                # carries a doclen per posting).
-                (
-                    spark.read.parquet(docs_root)
-                    .filter(F.col("shard").isin(wave_shards_list))
-                    .select("doc_id", "doclen")
-                    .repartition(
-                        exchange_partitions or spark.sparkContext.defaultParallelism,
-                        F.shiftright("doc_id", block_bits),
-                    )
-                    .sortWithinPartitions("doc_id")
-                    .mapInPandas(_make_doclen_compressor(block_bits), schema=_DOCLENS_SCHEMA)
-                    .withColumn("shard", _shard_expr("block_key", block_ranges))
-                    .write.mode("overwrite").option("compression", "zstd")
-                    .partitionBy("shard").parquet(doclens_root)
-                )
-                phases["doclens_write"] = round(time.monotonic() - wall_start, 2)
             except BaseException as e:  # noqa: BLE001 - surfaced on join
                 doc_errs.append(e)
 
@@ -1901,114 +1408,63 @@ def _build_wave(
         doc_thread.start()
 
         n_parts = exchange_partitions or spark.sparkContext.defaultParallelism
-        if map_pack:
-            # ONE exchange, packed: the tokenize kernel emits
-            # delta+varbyte (term, block) PARTIAL posting runs, so the
-            # exchange ships ~2-4 B/posting of packed bytes instead of
-            # ~25 B/row, and the reduce side merges a few sorted runs per
-            # block instead of external-sorting every posting. Same
-            # (term, block_key) shuffle key -> identical skew bound and
-            # physical layout; byte-identical output (tests assert it).
-            arrow_pack = os.environ.get("MIRU_INDEX_ARROW_PACK", "1") != "0"
-            if arrow_pack:
-                # batch-vectorized packer (same Python analyzer, int-code
-                # pipeline, zero-copy Arrow output — _make_arrow_packer);
-                # keyword composite terms are derived JVM-side (cheap,
-                # tiny arrays)
-                pack_cols = [
-                    F.col(id_col).cast("long").alias("__pack_id"),
-                    F.col(text_col).alias("__pack_text"),
-                ]
-                kw_terms = []
+        # ONE exchange, packed: the pack kernel emits delta+varbyte
+        # (term, block) PARTIAL posting runs, so the exchange ships
+        # ~2-4 B/posting of packed bytes instead of ~25 B/row, and the
+        # reduce side stitches a few sorted runs per block instead of
+        # external-sorting every posting. Keyword composite terms are
+        # derived JVM-side (cheap, tiny arrays).
+        pack_cols = [
+            F.col(id_col).cast("long").alias("__pack_id"),
+            F.col(text_col).alias("__pack_text"),
+        ]
+        kw_terms = []
 
-                def _prefixer(f):
-                    # NB: a default-arg lambda would have arity 2 and
-                    # F.transform would bind the second param to the
-                    # element INDEX — closure factory instead
-                    return lambda x: F.concat(F.lit(f + ":"), x)
+        def _prefixer(f):
+            # NB: a default-arg lambda would have arity 2 and
+            # F.transform would bind the second param to the
+            # element INDEX — closure factory instead
+            return lambda x: F.concat(F.lit(f + ":"), x)
 
-                for fname, colname in sorted((keyword_fields or {}).items()):
-                    src_t = dict(sliced.dtypes)[colname]
-                    c = F.col(colname)
-                    if src_t.startswith("array"):
-                        arr = F.transform(c.cast("array<string>"), _prefixer(fname))
-                    else:
-                        arr = F.array(F.concat(F.lit(fname + ":"), c.cast("string")))
-                    # null values/elements vanish, matching the pandas
-                    # packer's None-skipping
-                    kw_terms.append(
-                        F.filter(F.coalesce(arr, F.array()), lambda x: x.isNotNull())
-                    )
-                if kw_terms:
-                    kw_col = kw_terms[0] if len(kw_terms) == 1 else F.concat(*kw_terms)
-                    pack_cols.append(kw_col.alias("__pack_kw"))
-                partials = pack_src.select(*pack_cols).mapInArrow(
-                    _make_arrow_packer(
-                        block_bits, has_kw=bool(kw_terms),
-                        use_stopwords=use_stopwords, locale=locale,
-                    ),
-                    schema=_PARTIALS_SCHEMA,
-                )
+        for fname, colname in sorted((keyword_fields or {}).items()):
+            src_t = dict(sliced.dtypes)[colname]
+            c = F.col(colname)
+            if src_t.startswith("array"):
+                arr = F.transform(c.cast("array<string>"), _prefixer(fname))
             else:
-                pack_cols = [
-                    F.col(id_col).cast("long").alias("__pack_id"),
-                    F.col(text_col).alias("__pack_text"),
-                ]
-                for fname, colname in sorted((keyword_fields or {}).items()):
-                    src_t = dict(sliced.dtypes)[colname]
-                    c = F.col(colname)
-                    if src_t.startswith("array"):
-                        pack_cols.append(c.cast("array<string>").alias(f"__kw_{fname}"))
-                    else:
-                        pack_cols.append(c.cast("string").alias(f"__kw_{fname}"))
-                partials = pack_src.select(*pack_cols).mapInPandas(
-                    _make_packer(
-                        block_bits, use_stopwords=use_stopwords, locale=locale,
-                        id_col="__pack_id", text_col="__pack_text",
-                        keyword_fields=keyword_fields,
-                    ),
-                    schema=_PARTIALS_SCHEMA,
-                )
-            exchanged = (
-                partials
-                .repartition(n_parts, "term", "block_key")
-                .sortWithinPartitions("term", "block_key", "min_doc")
+                arr = F.array(F.concat(F.lit(fname + ":"), c.cast("string")))
+            # null values and null array elements produce no term
+            kw_terms.append(
+                F.filter(F.coalesce(arr, F.array()), lambda x: x.isNotNull())
             )
-            if arrow_pack:
-                merged = exchanged.mapInArrow(
-                    _make_arrow_merger(block_bits), schema=_POSTINGS_SCHEMA
-                )
-            else:
-                merged = exchanged.mapInPandas(
-                    _make_merger(block_bits), schema=_POSTINGS_SCHEMA
-                )
-            blocks = merged.withColumn("shard", _shard_expr("block_key", block_ranges))
-        else:
-            blocks = _row_path_blocks(
-                spark, sliced, ranges, id_col=id_col, text_col=text_col,
-                block_bits=block_bits, use_stopwords=use_stopwords,
-                locale=locale, keyword_fields=keyword_fields,
-                n_parts=n_parts, block_ranges=block_ranges,
-            )
+        if kw_terms:
+            kw_col = kw_terms[0] if len(kw_terms) == 1 else F.concat(*kw_terms)
+            pack_cols.append(kw_col.alias("__pack_kw"))
+        partials = pack_src.select(*pack_cols).mapInArrow(
+            _make_arrow_packer(
+                block_bits, has_kw=bool(kw_terms),
+                use_stopwords=use_stopwords, locale=locale,
+            ),
+            schema=_PARTIALS_SCHEMA,
+        )
+        blocks = (
+            partials
+            .repartition(n_parts, "term", "block_key")
+            .sortWithinPartitions("term", "block_key", "min_doc")
+            .mapInArrow(_make_arrow_merger(block_bits), schema=_POSTINGS_SCHEMA)
+            .withColumn("shard", _shard_expr("block_key", block_ranges))
+        )
+        # dynamic overwrite only replaces partitions that RECEIVE rows;
+        # every wave shard receives DOCLEN_TERM marker rows (one per doc,
+        # empty docs included), so a shard whose docs all tokenize to
+        # nothing still replaces the previous build's postings
         post_root = os.path.join(index_dir, "postings")
-        if not map_pack:
-            # dynamic overwrite only replaces partitions that RECEIVE
-            # rows: a wave shard whose docs all tokenize to nothing would
-            # silently keep the previous build's postings under a fresh
-            # 'done' manifest. The pack path is immune (DOCLEN markers
-            # write a row per doc); the row path pre-clears instead —
-            # crash-safe, because the wave's manifests are only written
-            # after success and a changed fingerprint re-runs the wave.
-            for s in wave_shards_list:
-                leaf = os.path.join(post_root, f"shard={s}")
-                if os.path.isdir(leaf):
-                    shutil.rmtree(leaf)
         # per-shard doc aggregates (n_docs, sum_doclen) as Observation
         # metrics ON the postings write: the DOCLEN_TERM marker rows
         # carry exactly (n=#docs, sum_tf=Σdoclen) per block, so the
         # conditional sums here replace the whole _docagg_tail job
         obs_post = None
-        if map_pack and len(ranges) <= _OBSERVE_MAX_SHARDS:
+        if len(ranges) <= _OBSERVE_MAX_SHARDS:
             obs_post = Observation(f"wave_docagg_{min(ranges)}_{len(ranges)}")
             post_aggs = []
             for s in wave_shards_list:
@@ -2044,10 +1500,10 @@ def _build_wave(
         # Post-write tail, PARALLEL: the doclens-marker transform, the
         # shard_stats relation (+ its manifest aggregate), and the
         # per-shard doc aggregate are small independent jobs over the
-        # just-committed postings (or doc store). Submitting them from
-        # threads overlaps their job latencies with each other and with
-        # the doc-store writer still in flight; the tail costs ~one job
-        # latency instead of four. That matters because the tail is pure
+        # just-committed postings. Submitting them from threads overlaps
+        # their job latencies with each other and with the doc-store
+        # writer still in flight; the tail costs ~one job latency
+        # instead of four. That matters because the tail is pure
         # serial time appended to EVERY wave — at high core counts it is
         # the Amdahl term (phases record completion offsets from
         # wall_start, not durations).
@@ -2194,35 +1650,19 @@ def _build_wave(
 
         def _docagg_tail():
             # only reached when the postings-write Observation was not
-            # attached (row path, or a wave wider than _OBSERVE_MAX_SHARDS)
+            # attached (a wave wider than _OBSERVE_MAX_SHARDS): per-shard
+            # (n_docs, sum_doclen) read back from the marker blocks
             try:
-                if map_pack:
-                    # per-shard (n_docs, sum_doclen) straight from the
-                    # marker blocks — no doc-store scan (the pack-path
-                    # doc store carries no doclen)
-                    src = (
-                        spark.read.parquet(post_root)
-                        .filter(F.col("shard").isin(wave_shards)
-                                & (F.col("term") == DOCLEN_TERM))
-                        .groupBy("shard")
-                        .agg(
-                            F.coalesce(F.sum("n"), F.lit(0)).alias("n_docs"),
-                            F.coalesce(F.sum("sum_tf"), F.lit(0)).alias("sum_doclen"),
-                        )
+                src = (
+                    spark.read.parquet(post_root)
+                    .filter(F.col("shard").isin(wave_shards)
+                            & (F.col("term") == DOCLEN_TERM))
+                    .groupBy("shard")
+                    .agg(
+                        F.coalesce(F.sum("n"), F.lit(0)).alias("n_docs"),
+                        F.coalesce(F.sum("sum_tf"), F.lit(0)).alias("sum_doclen"),
                     )
-                else:
-                    doc_thread.join()  # needs the committed doc store
-                    if doc_errs:
-                        return  # primary error raised below
-                    src = (
-                        spark.read.parquet(os.path.join(index_dir, "docs"))
-                        .filter(F.col("shard").isin(wave_shards))
-                        .groupBy("shard")
-                        .agg(
-                            F.count(F.lit(1)).alias("n_docs"),
-                            F.coalesce(F.sum("doclen"), F.lit(0)).alias("sum_doclen"),
-                        )
-                    )
+                )
                 agg_out["doc"] = {int(r["shard"]): r for r in src.collect()}
             except BaseException as e:  # noqa: BLE001
                 tail_errs.append(e)
@@ -2233,8 +1673,7 @@ def _build_wave(
                 threading.Thread(target=_dictionary_tail, name="dictionary_tail"))
         if obs_post is None:
             tails.append(threading.Thread(target=_docagg_tail, name="docagg_tail"))
-        if map_pack:
-            tails.append(threading.Thread(target=_doclens_tail, name="doclens_tail"))
+        tails.append(threading.Thread(target=_doclens_tail, name="doclens_tail"))
         for t in tails:
             t.start()
         for t in tails:
@@ -2742,10 +2181,10 @@ def compact_removals(spark: SparkSession, index_dir: str) -> dict:
             ).collect()
         }
         # per-shard doc counts/lengths from the (rewritten) doclens
-        # SIDECAR — present on every build path, unlike the DOCLEN_TERM
-        # marker blocks that only the packed exchange writes (a
-        # map_pack=False index has none, and deriving from them wrote
-        # n_docs=0 into manifests, corrupting stats.json's N/avgdl).
+        # SIDECAR — present in every index, unlike the DOCLEN_TERM
+        # marker blocks, which indexes from earlier raw-row-exchange
+        # builds lack (deriving from them wrote n_docs=0 into manifests,
+        # corrupting stats.json's N/avgdl).
         # n comes straight off the block header; sum_doclen needs one
         # tiny varbyte-decode pass over the affected blocks.
         def _sum_sidecar(pdf_iter):

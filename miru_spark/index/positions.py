@@ -70,7 +70,8 @@ def term_positions_udf(use_stopwords: bool = False, locale: str | None = None):
 
     ``poss[i]`` lists the 0-based token positions of ``terms[i]`` in the
     analyzed (stopword-filtered iff the index is) token stream — the same
-    stream ``term_counts_udf`` counts tf over, so ``len(poss[i]) == tf``.
+    stream the index build's pack kernel counts tf over, so
+    ``len(poss[i]) == tf``.
     """
     from miru_spark.analysis.tokenizer import tokenize
 

@@ -281,101 +281,68 @@ def test_empty_input_build_leaves_consistent_index(spark, corpus, tmp_path):
     assert r2.doc_store().count() == 256
 
 
-def _postings_sig(spark, index_dir, sig):
-    """Postings signature relation, DOCLEN_TERM marker excluded (the
-    pack path carries doclens through the postings exchange; the row
-    path never writes the marker)."""
+def _assert_matches_reference(spark, index_dir, docs, block_bits, keyword_fields=None):
+    """Byte-identity against the driver-side reference build
+    (tests/build_reference.py): every postings column but ``shard``
+    (DOCLEN_TERM marker excluded), every doclens-sidecar column but
+    ``shard``, and the stats.json counts."""
     from miru_spark.index.builder import DOCLEN_TERM
+    from tests.build_reference import canonical_rows, reference_index
 
-    return (
+    cols = ["doc_id", "text", *sorted((keyword_fields or {}).values())]
+    ref_post, ref_dl, ref_stats = reference_index(
+        docs.select(*cols).collect(), block_bits, keyword_fields=keyword_fields)
+    post = (
         spark.read.parquet(os.path.join(index_dir, "postings"))
         .filter(F.col("term") != DOCLEN_TERM)
-        .select(*sig)
+        .select(*ref_post.columns)
     )
+    assert canonical_rows(post.collect()) == canonical_rows(ref_post.itertuples(index=False))
+    dl = spark.read.parquet(os.path.join(index_dir, "doclens")).select(*ref_dl.columns)
+    assert canonical_rows(dl.collect()) == canonical_rows(ref_dl.itertuples(index=False))
+    stats = json.load(open(os.path.join(index_dir, "stats.json")))
+    assert {k: stats[k] for k in ref_stats} == ref_stats
 
 
-def test_map_pack_matches_row_path_byte_identical(spark, corpus, built_index, tmp_path):
-    """The packed map-side-combine exchange (default) and the legacy
-    raw-row exchange must produce BYTE-identical posting blocks, stats,
-    and dictionary — the representation through the shuffle is the only
-    thing that changes."""
-    import json
+def test_build_matches_reference_byte_identical(spark, corpus, built_index):
+    """The packed exchange + stitch merge must write BYTE-identical
+    posting blocks, doclens sidecar and stats to the driver-side
+    reference that compresses the raw sorted (term, doc_id, tf) rows."""
+    _assert_matches_reference(spark, built_index.index_dir, corpus, built_index.block_bits)
 
+
+def test_build_matches_reference_with_keyword_fields_and_scattered_ids(spark, corpus, tmp_path):
+    """Byte-identity must also hold when (a) keyword fields (scalar +
+    array, with null values and null elements) ride the same exchange and
+    (b) input partitions are NOT doc-id-clustered (the packer's partials
+    then interleave across batches and the merger's decode fallback
+    kicks in)."""
     from miru_spark.index.builder import build_index
 
-    out = str(tmp_path / "idx_rows")
-    meta = build_index(
-        spark, corpus, out,
-        stored_cols=["url", "lang", "warc_ts"],
-        n_shards=3, block_bits=7,
-        overwrite=True, map_pack=False,
-    )
-    cols = ["shard", "term", "block_key", "n", "sum_tf", "max_doc_id",
-            "max_tf", "codec"]
-    sig = [*cols, F.md5(F.hex("doc_ids")).alias("ids_md5"),
-           F.md5(F.hex("tfs")).alias("tfs_md5")]
-    a = _postings_sig(spark, built_index.index_dir, sig)
-    b = _postings_sig(spark, out, sig)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    sa = json.load(open(built_index.stats_path))
-    sb = json.load(open(meta.stats_path))
-    assert sa == sb
-    # the doclens sidecar must also be byte-identical, whether built from
-    # the doc store (row path) or the DOCLEN_TERM marker (pack path)
-    dsig = ["shard", "block_key", "n", "min_doclen",
-            F.md5(F.hex("doc_ids")).alias("ids_md5"),
-            F.md5(F.hex("doclens")).alias("dls_md5")]
-    da = spark.read.parquet(os.path.join(built_index.index_dir, "doclens")).select(*dsig)
-    db = spark.read.parquet(os.path.join(out, "doclens")).select(*dsig)
-    assert da.count() == db.count()
-    assert da.exceptAll(db).count() == 0 and db.exceptAll(da).count() == 0
-
-
-def test_map_pack_parity_with_keyword_fields_and_scattered_ids(spark, corpus, tmp_path):
-    """Parity must also hold when (a) keyword fields (scalar + array) ride
-    the same exchange and (b) input partitions are NOT doc-id-clustered
-    (the packer's partials then interleave across batches and the merger's
-    re-sort path kicks in)."""
-    import json
-
-    from miru_spark.index.builder import build_index
-
+    authz = F.array(F.lit("g1"), F.concat(F.lit("g"), (F.col("doc_id") % 3).cast("string")))
     scattered = (
-        corpus.withColumn("authz", F.array(F.lit("g1"), F.concat(F.lit("g"), (F.col("doc_id") % 3).cast("string"))))
+        corpus.withColumn("authz", F.when(F.col("doc_id") % 11 == 0, F.lit(None))
+                          .when(F.col("doc_id") % 13 == 0, F.array(F.lit(None).cast("string"), F.lit("g7")))
+                          .otherwise(authz))
+        .withColumn("lang", F.when(F.col("doc_id") % 17 == 0, F.lit(None)).otherwise(F.col("lang")))
         .repartition(8)  # round-robin: destroys id clustering
     )
-    outs = {}
-    for flag in (True, False):
-        out = str(tmp_path / f"idx_kw_{flag}")
-        build_index(
-            spark, scattered, out,
-            stored_cols=["lang"],
-            keyword_fields={"lang": "lang", "authz": "authz"},
-            n_shards=3, block_bits=7, overwrite=True, map_pack=flag,
-        )
-        outs[flag] = out
-    sig = ["shard", "term", "block_key", "n", "sum_tf", "max_doc_id",
-           "max_tf", "codec",
-           F.md5(F.hex("doc_ids")).alias("ids_md5"), F.md5(F.hex("tfs")).alias("tfs_md5")]
-    a = _postings_sig(spark, outs[True], sig)
-    b = _postings_sig(spark, outs[False], sig)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    sa = json.load(open(os.path.join(outs[True], "stats.json")))
-    sb = json.load(open(os.path.join(outs[False], "stats.json")))
-    assert sa == sb
+    kw = {"lang": "lang", "authz": "authz"}
+    out = str(tmp_path / "idx_kw")
+    build_index(spark, scattered, out, stored_cols=["lang"], keyword_fields=kw,
+                n_shards=3, block_bits=7, overwrite=True)
+    _assert_matches_reference(spark, out, scattered, 7, keyword_fields=kw)
 
 
-def test_stitch_merge_engages_on_fragmented_clustered_input(spark, corpus, tmp_path, monkeypatch):
+def test_stitch_merge_engages_and_matches_reference_on_fragmented_input(
+        spark, corpus, tmp_path, monkeypatch):
     """A task reading several small range-disjoint files in arbitrary
     (e.g. size-sorted) order is the normal cluster read shape for an
     id-clustered table. The packer must cut chunks at the id
     discontinuities so every partial is a monotone interval, and the
     merger must then STITCH (zero decode fallbacks) while staying
-    byte-identical to the row path."""
+    byte-identical to the reference."""
     import glob
-    import json
 
     from miru_spark.index.builder import build_index
 
@@ -390,25 +357,50 @@ def test_stitch_merge_engages_on_fragmented_clustered_input(spark, corpus, tmp_p
 
     dbg = str(tmp_path / "stitch_dbg")
     monkeypatch.setenv("MIRU_STITCH_DEBUG_DIR", dbg)
-    outs = {}
-    for flag in (True, False):
-        out = str(tmp_path / f"idx_frag_{flag}")
-        build_index(spark, fragged, out, n_shards=3, block_bits=7,
-                    overwrite=True, map_pack=flag)
-        outs[flag] = out
-    sig = ["shard", "term", "block_key", "n", "sum_tf", "max_doc_id",
-           "max_tf", "codec",
-           F.md5(F.hex("doc_ids")).alias("ids_md5"), F.md5(F.hex("tfs")).alias("tfs_md5")]
-    a = _postings_sig(spark, outs[True], sig)
-    b = _postings_sig(spark, outs[False], sig)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    sa = json.load(open(os.path.join(outs[True], "stats.json")))
-    sb = json.load(open(os.path.join(outs[False], "stats.json")))
-    assert sa == sb
+    out = str(tmp_path / "idx_frag")
+    build_index(spark, fragged, out, n_shards=3, block_bits=7, overwrite=True)
+    _assert_matches_reference(spark, out, fragged, 7)
     # the merge must have stitched, never decoded: no fallback breadcrumbs
     fallbacks = glob.glob(os.path.join(dbg, "*.txt"))
     assert fallbacks == [], f"stitch fell back to decode: {fallbacks}"
+
+
+def test_wide_wave_fallback_matches_observed_build(spark, corpus, tmp_path, monkeypatch):
+    """A wave wider than _OBSERVE_MAX_SHARDS attaches no Observation: its
+    fingerprints come from the full stat scan (not the deferred pack-job
+    chars), its manifest aggregates from the shard_stats read-back, and
+    its doc aggregates from the marker read-back. Every manifest field,
+    stats.json and the dictionary must equal a default build."""
+    from miru_spark.index import builder
+    from miru_spark.index.manifest import read_manifest
+
+    args = dict(keyword_fields={"lang": "lang"}, block_bits=7,
+                shard_span_blocks=1, overwrite=True)
+    default = str(tmp_path / "idx_default")
+    builder.build_index(spark, corpus, default, **args)
+
+    made = []
+    real_observation = builder.Observation
+    monkeypatch.setattr(builder, "_OBSERVE_MAX_SHARDS", 1)
+    monkeypatch.setattr(
+        builder, "Observation", lambda name: made.append(name) or real_observation(name))
+    wide = str(tmp_path / "idx_wide")
+    meta = builder.build_index(spark, corpus, wide, **args)
+    assert meta.n_shards >= 3
+    assert made == []
+
+    fields = ("n_docs", "sum_doclen", "n_postings", "n_blocks", "n_terms",
+              "checksum", "input_fingerprint")
+    for s in range(meta.n_shards):
+        a, b = read_manifest(default, s), read_manifest(wide, s)
+        assert {f: getattr(b, f) for f in fields} == {f: getattr(a, f) for f in fields}, s
+    assert json.load(open(os.path.join(wide, "stats.json"))) == \
+        json.load(open(os.path.join(default, "stats.json")))
+
+    def dictionary(d):
+        return sorted(tuple(r) for r in spark.read.parquet(os.path.join(d, "dictionary")).collect())
+
+    assert dictionary(wide) == dictionary(default)
 
 
 def test_compact_removals_folds_log_and_updates_stats(spark, corpus, tmp_path):
@@ -566,40 +558,36 @@ def test_schema_guard_rejects_analyzer_generation_change():
 
 
 def test_zero_token_shard_rebuild_clears_stale_postings(spark, tmp_path):
-    """A wave shard whose docs all tokenize to NOTHING writes zero rows,
-    so dynamic partition overwrite alone would leave the previous
-    build's postings/shard_stats in place under a 'done' manifest —
-    queries would match vanished terms forever (review r3). Both packer
-    paths must converge to the fresh-build dictionary."""
+    """A wave shard whose docs all tokenize to NOTHING must still
+    replace the previous build's postings/shard_stats: dynamic partition
+    overwrite only touches partitions that receive rows, and a stale
+    'done' shard would match vanished terms forever. The DOCLEN_TERM
+    marker rows give every wave shard rows to write."""
     from pyspark.sql import functions as F
 
     from miru_spark.index.builder import build_index
     from miru_spark.index.reader import IndexReader
+    from miru_spark.query import bm25
 
-    for map_pack in (True, False):
-        out = str(tmp_path / f"idx_zt_{map_pack}")
-        docs1 = spark.createDataFrame(
-            [(i, "alpha beta") for i in range(128)]
-            + [(128 + i, "gamma delta") for i in range(128)],
-            "doc_id long, text string",
-        )
-        build_index(spark, docs1, out, block_bits=7, shard_span_blocks=1,
-                    overwrite=True, map_pack=map_pack)
-        # same ids, but shard 1's docs all tokenize to nothing
-        docs2 = spark.createDataFrame(
-            [(i, "alpha beta") for i in range(128)]
-            + [(128 + i, "!!! ???") for i in range(128)],
-            "doc_id long, text string",
-        )
-        build_index(spark, docs2, out, block_bits=7, shard_span_blocks=1,
-                    map_pack=map_pack)
-        r = IndexReader(spark, out)
-        terms = {x["term"] for x in r.dictionary().collect()}
-        assert "gamma" not in terms and "delta" not in terms, (map_pack, terms)
-        assert "alpha" in terms
-        from miru_spark.query import bm25
-
-        assert bm25.search(r, "gamma", k=5).collect() == []
+    out = str(tmp_path / "idx_zt")
+    docs1 = spark.createDataFrame(
+        [(i, "alpha beta") for i in range(128)]
+        + [(128 + i, "gamma delta") for i in range(128)],
+        "doc_id long, text string",
+    )
+    build_index(spark, docs1, out, block_bits=7, shard_span_blocks=1, overwrite=True)
+    # same ids, but shard 1's docs all tokenize to nothing
+    docs2 = spark.createDataFrame(
+        [(i, "alpha beta") for i in range(128)]
+        + [(128 + i, "!!! ???") for i in range(128)],
+        "doc_id long, text string",
+    )
+    build_index(spark, docs2, out, block_bits=7, shard_span_blocks=1)
+    r = IndexReader(spark, out)
+    terms = {x["term"] for x in r.dictionary().collect()}
+    assert "gamma" not in terms and "delta" not in terms, terms
+    assert "alpha" in terms
+    assert bm25.search(r, "gamma", k=5).collect() == []
 
 
 def test_sparse_id_space_skips_empty_shard_manifests(spark, tmp_path):

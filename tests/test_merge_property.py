@@ -1,14 +1,13 @@
-"""Property-based equivalence of the three merge implementations.
+"""Property-based equivalence of the merge implementations.
 
-The reduce side of the index build has three ways to turn packed
-partials into final posting blocks: the STITCH path (byte concat +
-boundary varint patch, interval-disjoint partials only), the Arrow
-decode path (fallback for interleaved partials), and the pandas path
-(`_decode_partials` + `_compress_groups`, the original oracle). All
-three must be byte-identical on any input; hypothesis drives random
-posting sets, tf values, and chunkings (interval chunking exercises the
-stitch, scattered chunking exercises the fallback). Pure functions — no
-Spark session."""
+The reduce side of the index build turns packed partials into final
+posting blocks two ways: the STITCH path (byte concat + boundary varint
+patch, interval-disjoint partials only) and the Arrow decode path
+(fallback for interleaved partials). Both must be byte-identical on any
+input to the oracle in tests/build_reference.py (`_decode_partials` +
+`_compress_groups`); hypothesis drives random posting sets, tf values,
+and chunkings (interval chunking exercises the stitch, scattered
+chunking exercises the fallback). Pure functions — no Spark session."""
 
 from __future__ import annotations
 
@@ -19,13 +18,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from miru_spark.index.builder import (
-    _compress_groups,
-    _decode_partials,
-    _merge_arrow_body,
-    _pack_partials,
-    _stitch_arrow_body,
-)
+from miru_spark.index.builder import _merge_arrow_body, _stitch_arrow_body
+from tests.build_reference import _compress_groups, _decode_partials, _pack_partials
 
 BB = 4  # 16-doc blocks: several blocks + RLE-eligible dense blocks
 
@@ -99,7 +93,7 @@ def test_merge_paths_byte_identical(case):
     rows_df = pd.DataFrame(rows, columns=["term", "doc_id", "tf"])
     tbl = _mk_partials(rows_df, chunks)
 
-    # ground truth: the pandas path over the same partials
+    # ground truth: the reference decode + compress over the same partials
     expected = _canon(
         _compress_groups(_decode_partials(tbl.to_pandas(), BB), BB)
     )
