@@ -130,6 +130,12 @@ _DOCLENS_SCHEMA = T.StructType(
     ]
 )
 
+# Dictionary parquet row group, in rows. Every dictionary write sorts
+# each partition by term, so a row group's footer min/max bounds a term
+# range and the reader's driver-side lookup (IndexReader.term_stats)
+# decodes only the row groups whose range covers a queried term.
+_DICT_ROW_GROUP_ROWS = 4096
+
 
 @dataclass
 class IndexMeta:
@@ -1122,9 +1128,9 @@ def build_index(
         spark.createDataFrame([], _DOCLENS_SCHEMA).write.parquet(
             os.path.join(index_dir, "doclens", "shard=0")
         )
-        spark.createDataFrame([], "term string, df long, cf long").write.parquet(
-            os.path.join(index_dir, "dictionary")
-        )
+        _write_dictionary(
+            spark.createDataFrame([], "term string, df long, cf long"),
+            os.path.join(index_dir, "dictionary"))
         docs.limit(0).select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.lit(0).cast("int").alias("doclen"),
@@ -1642,8 +1648,7 @@ def _build_wave(
                         .groupBy("term")
                         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
                     )
-                part.write.mode("overwrite").parquet(
-                    os.path.join(index_dir, "dictionary"))
+                _write_dictionary(part, os.path.join(index_dir, "dictionary"))
                 phases["dictionary"] = round(time.monotonic() - wall_start, 2)
             except BaseException as e:  # noqa: BLE001
                 tail_errs.append(e)
@@ -1755,6 +1760,19 @@ def apply_removals(spark: SparkSession, index_dir: str, ops: DataFrame) -> None:
     out.write.mode("append").parquet(os.path.join(index_dir, "removals"))
 
 
+def _write_dictionary(dictionary: DataFrame, path: str) -> None:
+    """The one dictionary writer: term-sorted within each partition, in
+    row groups of ``_DICT_ROW_GROUP_ROWS``, so footer min/max stats prune
+    term lookups. sortWithinPartitions, not orderBy: a global sort's
+    range sampling would add a job to every build and append."""
+    (
+        dictionary.sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .option("parquet.block.row.count.limit", _DICT_ROW_GROUP_ROWS)
+        .parquet(path)
+    )
+
+
 def _write_stats_json(meta: "IndexMeta", keys) -> None:
     """stats.json with the same tmp + os.replace discipline as manifests
     / schema.json / the compaction marker: a crash mid-dump must never
@@ -1783,7 +1801,7 @@ def _finalize(spark, index_dir, n_shards, block_bits, use_stopwords, fingerprint
         shard_stats = spark.read.parquet(os.path.join(index_dir, "shard_stats"))
         dictionary = shard_stats.groupBy("term").agg(
             F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        dictionary.write.mode("overwrite").parquet(dict_out)
+        _write_dictionary(dictionary, dict_out)
 
     n_docs = 0
     total_tokens = 0

@@ -30,14 +30,17 @@ Two physical strategies:
 
 from __future__ import annotations
 
+import functools
 import heapq
 import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from miru_spark.index.reader import IndexReader
 from miru_spark.query import parser as qp
@@ -54,6 +57,22 @@ def _bm25_score_col(idf_col, k1: float, b: float, avgdl: float):
 
 class SearchError(ValueError):
     pass
+
+
+@functools.lru_cache(maxsize=64)  # keyed by this module's DDL literals
+def _arrow_schema(ddl: str) -> pa.Schema:
+    return to_arrow_schema(T._parse_datatype_string(ddl))
+
+
+def _local_rel(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small driver-side relation (query maps, idf tables, empty
+    answers) built through Arrow. It plans as a LocalTableScan; a
+    ``createDataFrame(<python list>)`` plans as Scan ExistingRDD, a
+    Python-worker stage that costs ~0.3 s per query before any work."""
+    sch = _arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(sch)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, sch)], schema=sch))
 
 
 def _max_boost_fold(pairs) -> dict[str, float]:
@@ -86,7 +105,7 @@ def composite_authz(
     in the reference (authz AND ¬removal applied to the answer)."""
     if not values:  # empty expression grants nothing (terms=[] would
         # mean "no term filter" to the reader, i.e. everything)
-        return reader.spark.createDataFrame([], "doc_id long")
+        return _local_rel(reader.spark, [], "doc_id long")
     terms = [f"{field}:{v}" for v in values]
     return reader.postings(terms=terms).select("doc_id").distinct()
 
@@ -401,13 +420,14 @@ def _coverage_agg(
     if not cov_terms:
         return None
     if idf_by_term is not None:
-        map_df = reader.spark.createDataFrame(
+        map_df = _local_rel(
+            reader.spark,
             [(t, float(idf_by_term.get(t, 0.0)), sorted(term_leaves[t]))
              for t in cov_terms],
             "term string, idf double, leaf_ids array<int>")
     else:
-        map_df = reader.spark.createDataFrame(
-            [(t, sorted(term_leaves[t])) for t in cov_terms],
+        map_df = _local_rel(
+            reader.spark, [(t, sorted(term_leaves[t])) for t in cov_terms],
             "term string, leaf_ids array<int>")
     rows = reader.postings(
         terms=cov_terms,
@@ -541,7 +561,7 @@ def search(
     """
     ast = _parse_for_index(reader, query, locale=locale, use_stopwords=use_stopwords)
     if ast is None:
-        return reader.spark.createDataFrame([], "doc_id long, score double")
+        return _local_rel(reader.spark, [], "doc_id long, score double")
     expansions = _expand(reader, ast, max_expansion)
 
     phrase_ctx = _phrase_ctx_for(
@@ -606,7 +626,7 @@ def search(
         (t, reader.idf(stats[t]["df"]) * tboost.get(t, 1.0))
         for t in pos_terms if t in stats
     ]
-    idf_df = reader.spark.createDataFrame(idf_rows, "term string, idf double")
+    idf_df = _local_rel(reader.spark, idf_rows, "term string, idf double")
 
     if fused and idf_rows:
         # fused plan: decode the query terms' postings ONCE; each row
@@ -636,7 +656,7 @@ def search(
         # routing to _eval_candidates, whose loud shape rejections don't
         # cover every fused-only shape — the general path must never be
         # reached on data-dependent conditions for a fused query.
-        scored = reader.spark.createDataFrame([], "doc_id long, score double")
+        scored = _local_rel(reader.spark, [], "doc_id long, score double")
         candidates = None
     else:
         candidates = _eval_candidates(reader, ast, expansions, phrase_ctx)
@@ -790,7 +810,7 @@ def facet_counts(
     scan."""
     ast = _parse_for_index(reader, query, locale=locale, use_stopwords=use_stopwords)
     if ast is None:
-        return reader.spark.createDataFrame([], "value string, n long")
+        return _local_rel(reader.spark, [], "value string, n long")
     expansions = _expand(reader, ast, max_expansion)
     phrase_ctx = _phrase_ctx_for(
         reader, ast, locale=locale, use_stopwords=use_stopwords,
@@ -984,7 +1004,7 @@ def search_batch(
     """
     out_schema = "query_id string, rank long, doc_id long, score double"
     if not queries:
-        return reader.spark.createDataFrame([], out_schema)
+        return _local_rel(reader.spark, [], out_schema)
 
     # shared[qid] = (mode, {score term: boost}, [mask terms], [phrases],
     #                [negated terms], [negated phrases])
@@ -1037,10 +1057,11 @@ def search_batch(
             for qid, (mode, tb, mk, _ph, _ng, _np) in shared.items()
         ]
         if qt_rows:
-            qt = F.broadcast(reader.spark.createDataFrame(
-                qt_rows, "query_id string, term string, widf double, pos int"))
-            req = F.broadcast(reader.spark.createDataFrame(
-                req_rows, "query_id string, n_req int"))
+            qt = F.broadcast(_local_rel(
+                reader.spark, qt_rows,
+                "query_id string, term string, widf double, pos int"))
+            req = F.broadcast(_local_rel(
+                reader.spark, req_rows, "query_id string, n_req int"))
             union_idx_terms = sorted({t for _, t, _w, _pos in qt_rows})
             # Block-coverage pruning (the shared-scan twin of
             # search_wand's block-granular intersection): an AND query's
@@ -1075,12 +1096,13 @@ def search_batch(
             if prune:
                 blk = reader.blocks(terms=union_idx_terms).select(
                     "term", "block_key")
-                qt_and = F.broadcast(reader.spark.createDataFrame(
+                qt_and = F.broadcast(_local_rel(
+                    reader.spark,
                     [(qid, t) for qid, ts in and_terms.items()
                      for t in ts if t in stats],
                     "query_id string, term string"))
-                req_and = F.broadcast(reader.spark.createDataFrame(
-                    [(qid, len(ts)) for qid, ts in and_terms.items()],
+                req_and = F.broadcast(_local_rel(
+                    reader.spark, [(qid, len(ts)) for qid, ts in and_terms.items()],
                     "query_id string, n_req int"))
                 # NO broadcast hint on cov/needed: their size scales with
                 # covered blocks (up to queries x blocks on wide-df AND
@@ -1090,7 +1112,7 @@ def search_batch(
                 cov = (
                     blk.join(qt_and, "term")
                     .groupBy("query_id", "block_key")
-                    .agg(F.countDistinct("term").alias("ntb"))
+                    .agg(F.size(F.collect_set("term")).alias("ntb"))
                     .join(req_and, "query_id")
                     .filter(F.col("ntb") >= F.col("n_req"))
                     .select("query_id", "block_key")
@@ -1190,8 +1212,8 @@ def search_batch(
                         for qid, (_m, _tb, _mk, _p, _ng, nphs)
                         in shared.items() if (terms, slop) in nphs
                     ]
-                    qids_df = F.broadcast(reader.spark.createDataFrame(
-                        qids, "query_id string, good int"))
+                    qids_df = F.broadcast(_local_rel(
+                        reader.spark, qids, "query_id string, good int"))
                     if use_pos:
                         from miru_spark.index.positions import phrase_match_ids
 
@@ -1216,7 +1238,8 @@ def search_batch(
                     hit = verified.crossJoin(qids_df).select(
                         "query_id", "doc_id", "good")
                     ph_rows = hit if ph_rows is None else ph_rows.unionByName(hit)
-                phr_req = F.broadcast(reader.spark.createDataFrame(
+                phr_req = F.broadcast(_local_rel(
+                    reader.spark,
                     [(qid, len(phs))
                      for qid, (_m, _tb, _mk, phs, _ng, _np)
                      in shared.items()],
@@ -1250,7 +1273,7 @@ def search_batch(
             ).select(F.lit(qid).alias("query_id"), "doc_id", "score")
         )
     if not parts:
-        return reader.spark.createDataFrame([], out_schema)
+        return _local_rel(reader.spark, [], out_schema)
     allq = parts[0]
     for p in parts[1:]:
         allq = allq.unionByName(p)
@@ -1310,7 +1333,7 @@ def search_time_newest(
     deepening rounds."""
     ast = _parse_for_index(reader, query, locale=locale, use_stopwords=use_stopwords)
     if ast is None:
-        return reader.spark.createDataFrame([], "doc_id long, score double")
+        return _local_rel(reader.spark, [], "doc_id long, score double")
     expansions = _expand(reader, ast, max_expansion)
 
     if _fusible(ast) and not isinstance(ast, qp.Not):
@@ -1404,7 +1427,7 @@ def search_wand(
     if mode not in ("and", "or"):
         raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
     if k <= 0:
-        return reader.spark.createDataFrame([], "doc_id long, score double")
+        return _local_rel(reader.spark, [], "doc_id long, score double")
     eff_stop = (
         use_stopwords if use_stopwords is not None
         else bool(reader.stats.get("use_stopwords"))
@@ -1433,12 +1456,11 @@ def search_wand(
     n_terms = len(terms)
     stats = reader.term_stats(terms)
     if mode == "and" and len(stats) < n_terms:
-        return reader.spark.createDataFrame(
-            [], "doc_id long, score double"
-        )  # a term is missing -> empty AND
+        # a term is missing -> empty AND
+        return _local_rel(reader.spark, [], "doc_id long, score double")
     terms = [t for t in terms if t in stats]
     if not terms:
-        return reader.spark.createDataFrame([], "doc_id long, score double")
+        return _local_rel(reader.spark, [], "doc_id long, score double")
     idf = {
         t: reader.idf(stats[t]["df"]) * (boosts.get(t, 1.0) if boosts else 1.0)
         for t in terms
@@ -1452,7 +1474,7 @@ def search_wand(
     # ONE exchange for the whole block assembly: postings blocks, the
     # doclens sidecar, and the removal log union into a single relation
     # tagged by nullable struct columns, then ONE groupBy(block_key)
-    # gathers everything a block group needs (collect_list / countDistinct
+    # gathers everything a block group needs (collect_list / collect_set
     # / min all skip nulls, so each source lands only in its own slot).
     # Round 2 ran two groupBys + two joins here — three exchanges plus an
     # explicit repartition — and the fixed overhead showed up as a
@@ -1460,11 +1482,13 @@ def search_wand(
     # also the 100-TB shape: everything co-partitions on block_key in one
     # shuffle whose volume is the same bytes the old plan moved three times.
     #
-    # countDistinct (not count) on the posting term: an incrementally-
-    # built index may hold several blocks of the same term under one
-    # block_key (one per shard touching that doc range); presence means
-    # >=1 block per query term. The sidecar may likewise contribute one
-    # row per shard; min over its per-block min_doclen stays an
+    # DISTINCT posting terms, not a row count: an incrementally-built
+    # index may hold several blocks of the same term under one block_key
+    # (one per shard touching that doc range); presence means >=1 block
+    # per query term. size(collect_set) counts them without the second
+    # exchange of countDistinct's distinct-aggregate rewrite. The
+    # sidecar may likewise contribute one row per shard; min over its
+    # per-block min_doclen stays an
     # admissible bound for the block-max upper bound. pruned_doclens
     # pushes the touched-block set down to the sidecar scan via a
     # broadcast semi-join (the sidecar has no term column of its own).
@@ -1495,19 +1519,23 @@ def search_wand(
     # removal mask rides the same exchange (NOT a driver-collected
     # closure — the removal log is usually a small delta, but nothing
     # bounds it at 100x scale): each surviving block group carries only
-    # ITS removed ids, sorted for searchsorted
-    rems = reader.removed_docs().select(
-        F.shiftright(F.col("doc_id"), block_bits).alias("block_key"),
-        F.lit(None).cast(pb_t).alias("pb"),
-        F.lit(None).cast(sb_t).alias("sb"),
-        F.lit(None).cast("int").alias("mdl"),
-        F.col("doc_id").alias("rm_id"),
-    )
+    # ITS removed ids, sorted for searchsorted. Whether a removal log
+    # exists is decided here, when the query is built (as _anti_removed
+    # does): a removal-free index unions no removal relation at all.
+    assembled = posts.unionByName(side)
+    if reader.has_removals():
+        assembled = assembled.unionByName(reader.removed_docs().select(
+            F.shiftright(F.col("doc_id"), block_bits).alias("block_key"),
+            F.lit(None).cast(pb_t).alias("pb"),
+            F.lit(None).cast(sb_t).alias("sb"),
+            F.lit(None).cast("int").alias("mdl"),
+            F.col("doc_id").alias("rm_id"),
+        ))
     grouped = (
-        posts.unionByName(side).unionByName(rems)
+        assembled
         .groupBy("block_key")
         .agg(
-            F.countDistinct("pb.term").alias("n_terms_present"),
+            F.size(F.collect_set("pb.term")).alias("n_terms_present"),
             F.collect_list("pb").alias("blocks"),
             F.collect_list("sb").alias("side"),
             F.min("mdl").alias("min_doclen"),
@@ -1870,8 +1898,8 @@ def _heap_group_filter(
     required terms are singleton groups). ``False`` — disjunctive: a doc
     survives when SOME group has ALL members present (all-of qualifier
     groups under an OR; plain disjuncts are singleton groups)."""
-    gmap = reader.spark.createDataFrame(
-        [(t, gi) for gi, g in enumerate(groups) for t in g],
+    gmap = _local_rel(
+        reader.spark, [(t, gi) for gi, g in enumerate(groups) for t in g],
         "term string, gid int",
     )
     hits = (
@@ -1883,16 +1911,17 @@ def _heap_group_filter(
     if require_all_groups:
         passing = (
             hits.groupBy("doc_id")
-            .agg(F.countDistinct("gid").alias("ng"))
+            .agg(F.size(F.collect_set("gid")).alias("ng"))
             .filter(F.col("ng") == len(groups))
             .select("doc_id")
         )
     else:
-        sizes = reader.spark.createDataFrame(
-            [(gi, len(g)) for gi, g in enumerate(groups)], "gid int, sz int")
+        sizes = _local_rel(
+            reader.spark, [(gi, len(g)) for gi, g in enumerate(groups)],
+            "gid int, sz int")
         passing = (
             hits.groupBy("doc_id", "gid")
-            .agg(F.countDistinct("term").alias("nt"))
+            .agg(F.size(F.collect_set("term")).alias("nt"))
             .join(F.broadcast(sizes), "gid")
             .filter(F.col("nt") == F.col("sz"))
             .select("doc_id")
@@ -1938,7 +1967,7 @@ def _search_wand_coverage(
                 pos_terms.append(t)
             tboost[t] = max(tboost[t], wb) if t in tboost else wb
     if not pos_terms:
-        return reader.spark.createDataFrame([], "doc_id long, score double")
+        return _local_rel(reader.spark, [], "doc_id long, score double")
     boosts = {t: w for t, w in tboost.items() if w != 1.0}
 
     stats = reader.term_stats(all_terms)
@@ -2050,7 +2079,7 @@ def search_wand_query(
     """
     ast = _parse_for_index(reader, query, locale=locale, use_stopwords=use_stopwords)
     if ast is None:
-        return reader.spark.createDataFrame([], "doc_id long, score double")
+        return _local_rel(reader.spark, [], "doc_id long, score double")
 
     # lazy leaf expander: the dictionary is scanned only for expansion
     # leaves _wand_shape actually reaches in an eligible position, at
@@ -2089,7 +2118,7 @@ def search_wand_query(
         # an AND-required expansion matched nothing in the dictionary:
         # the conjunction is unsatisfiable (exact path: empty candidate
         # intersection) — answer without touching postings
-        return reader.spark.createDataFrame([], "doc_id long, score double")
+        return _local_rel(reader.spark, [], "doc_id long, score double")
     if mode == "or" and masks and after is not None:
         # keyset paging through the zero-score admission region needs
         # the exact path's cursor semantics — rare shape, fallback

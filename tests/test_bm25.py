@@ -275,6 +275,11 @@ def test_removals_hide_and_repair_restores(spark, corpus, oracle, tmp_path):
     cands = oracle.candidates_and(terms) - {victim}
     expected = oracle.topk(cands, terms, 10)
     _assert_rank_identical(bm25.search(r2, " AND ".join(terms), k=10).collect(), expected)
+    # a reader opened BEFORE the removal hides it too: search_wand unions
+    # the removal relation only when has_removals() holds, decided when
+    # each query is built, never when the reader opens
+    _assert_rank_identical(
+        bm25.search_wand_query(r, " AND ".join(terms), k=10).collect(), expected)
     _assert_rank_identical(bm25.search_wand(r2, terms, k=10).collect(), expected)
     newest = bm25.search_time_newest(r2, terms[0], k=500).collect()
     assert victim not in {row["doc_id"] for row in newest}
@@ -295,7 +300,7 @@ def test_removals_hide_and_repair_restores(spark, corpus, oracle, tmp_path):
         spark.createDataFrame([(victim, "remove", 2)], "doc_id long, op string, version long"),
     )
     r4 = IndexReader(spark, out)
-    assert victim in set(r4.removed_doc_ids())
+    assert victim in {row["doc_id"] for row in r4.removed_docs().collect()}
 
 
 def test_pagination_keyset(reader, oracle):
@@ -1635,3 +1640,109 @@ def test_search_batch_phrase_fielded_prune_identical(
         [(r["query_id"], r["rank"], r["doc_id"]) for r in base]
     for p, b in zip(pruned, base):
         assert abs(p["score"] - b["score"]) < 1e-9
+
+
+def test_sidecar_prune_path_matches_unpruned(spark, built_index, monkeypatch):
+    """The test indexes are far below the sidecar-prune threshold, so no
+    other test takes the doclens semi-join. Forced on, every index-backed
+    entry point must answer exactly as the unpruned scan does."""
+    from miru_spark.index.reader import IndexReader
+
+    q_and, q_or = "w00001 AND w00004", "w00002 OR w00005 OR w00010"
+    batch = {"a": q_and, "b": q_or, "c": "the0 AND w00003"}
+
+    def answers(r):
+        rows = sorted(bm25.search_batch(r, batch, k=10).collect(),
+                      key=lambda x: (x["query_id"], x["rank"]))
+        return {
+            "wand_and": bm25.search_wand_query(r, q_and, k=10).collect(),
+            "wand_or": bm25.search_wand_query(r, q_or, k=10).collect(),
+            "exact": bm25.search(r, q_and, k=10).collect(),
+            "time": bm25.search_time_newest(r, q_or, k=10).collect(),
+            **{f"batch_{q}": [x for x in rows if x["query_id"] == q] for q in batch},
+        }
+
+    plain = IndexReader(spark, built_index.index_dir)
+    assert plain.n_docs <= IndexReader._SIDECAR_SCAN_MAX_DOCS
+    assert plain.pruned_doclens(["w00001"]) is plain.doclens_blocks()
+    want = answers(plain)
+
+    monkeypatch.setattr(IndexReader, "_SIDECAR_SCAN_MAX_DOCS", 0)
+    pruned = IndexReader(spark, built_index.index_dir)
+    assert pruned.pruned_doclens(["w00001"]) is not pruned.doclens_blocks()
+    got = answers(pruned)
+    for name, rows in want.items():
+        assert rows, name
+        _assert_rank_identical(got[name], [(x["doc_id"], x["score"]) for x in rows])
+
+
+def _jobs_and_plans(spark, group: str, fn) -> tuple[int, list[str]]:
+    """Run ``fn`` under a job group; return its job count and the
+    physical plans of the SQL executions it started."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    bus.waitUntilEmpty()
+    before = max((e.executionId() for e in executions()), default=-1)
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() > before]
+    return len(sc.statusTracker().getJobIdsForGroup(group)), plans
+
+
+# Spark jobs per query shape on the test indexes, on a reader whose base
+# relations are already open (opening one infers its parquet schema in a
+# job of its own, once per reader). A ceiling may only go down: more
+# jobs for a shape is a regression of its fixed per-query cost.
+_JOB_CEILINGS = {
+    "and_wand": 2,
+    "or_wand": 2,
+    "and_exact": 4,
+    "time_newest": 10,
+    "fielded": 10,
+    "router_nested": 31,
+    "batch": 7,
+}
+
+
+def test_query_job_ceilings_and_local_relations(spark, reader, fielded_reader):
+    """Pin the job count of each query shape, and that no shape plans a
+    Python-list relation: a Scan ExistingRDD over anything but a local
+    checkpoint is a createDataFrame that fell out of Arrow, and costs a
+    Python-worker stage per query."""
+    import re
+
+    for r in (reader, fielded_reader):
+        for rel in ("postings", "doclens", "docs", "dictionary"):
+            r._rel(rel)
+    shapes = {
+        "and_wand": lambda r: bm25.search_wand_query(r, "the0 AND w00002", k=10),
+        "or_wand": lambda r: bm25.search_wand_query(r, "w00002 OR w00005 OR w00010", k=10),
+        "and_exact": lambda r: bm25.search(r, "the0 AND w00002", k=10),
+        "time_newest": lambda r: bm25.search_time_newest(r, "the0 AND w00002", k=10),
+        "fielded": lambda r: bm25.search_wand_query(r, "w00003 AND lang:en", k=10),
+        "router_nested": lambda r: bm25.search_wand_query(
+            r, "the0 AND (w00004 OR w00006) AND NOT w00001", k=10),
+        "batch": lambda r: bm25.search_batch(
+            r, {"a": "the0 AND w00002", "b": "w00002 OR w00005", "c": "w00007 AND w00009"},
+            k=10),
+    }
+    counts = {}
+    for name, shape in shapes.items():
+        r = fielded_reader if name == "fielded" else reader
+        n, plans = _jobs_and_plans(spark, f"ceiling-{name}", lambda: shape(r).collect())
+        counts[name] = n
+        for plan in plans:
+            for rdd in re.findall(r"Arguments: .*, ExistingRDD, .*", plan):
+                assert "localCheckpoint" in rdd, (name, rdd)
+    assert all(counts[s] <= c for s, c in _JOB_CEILINGS.items()), (counts, _JOB_CEILINGS)

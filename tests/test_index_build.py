@@ -96,6 +96,90 @@ def test_term_filter_pushdown(spark, built_index):
     assert "w00001" in plan
 
 
+def _dictionary_files(index_dir: str) -> list[str]:
+    root = os.path.join(index_dir, "dictionary")
+    return sorted(os.path.join(root, f) for f in os.listdir(root)
+                  if f.endswith(".parquet") and not f.startswith((".", "_")))
+
+
+def test_term_stats_driver_lookup_matches_dictionary(spark, built_index):
+    """term_stats runs no Spark job and equals a Spark-side dictionary
+    filter for present, missing and duplicate terms; every dictionary
+    file is term-sorted across its row groups."""
+    import pyarrow.parquet as pq
+
+    from miru_spark.index.reader import IndexReader
+
+    reader = IndexReader(spark, built_index.index_dir)
+    terms = ["w00001", "the0", "w00001", "nosuchterm", "w00017", "w00001", "zzz"]
+    want = {
+        r["term"]: {"df": r["df"], "cf": r["cf"]}
+        for r in reader.dictionary().filter(F.col("term").isin(terms)).collect()
+    }
+    assert set(want) == {"w00001", "the0", "w00017"}
+    sc = spark.sparkContext
+    sc.setJobGroup("term-stats", "term stats")
+    try:
+        assert reader.term_stats(terms) == want
+        # memoized, absent terms included
+        assert reader.term_stats(["nosuchterm", "the0"]) == {"the0": want["the0"]}
+        assert reader.term_stats([]) == {}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("term-stats")) == 0
+
+    files = _dictionary_files(built_index.index_dir)
+    assert files
+    for path in files:
+        col = pq.read_table(path, columns=["term"])["term"].to_pylist()
+        assert col == sorted(col), path
+        md = pq.read_metadata(path)
+        bounds = [(md.row_group(i).column(0).statistics.min,
+                   md.row_group(i).column(0).statistics.max)
+                  for i in range(md.num_row_groups)]
+        assert all(lo <= hi for lo, hi in bounds)
+        assert all(a[1] < b[0] for a, b in zip(bounds, bounds[1:])), path
+
+
+def test_term_stats_reads_only_covering_row_groups(spark, built_index, tmp_path, monkeypatch):
+    """With many small dictionary row groups, a lookup decodes only the
+    row groups whose footer term range covers a queried term."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from miru_spark.index import builder
+    from miru_spark.index import reader as reader_mod
+
+    idx = str(tmp_path / "idx")
+    os.makedirs(idx)
+    shutil.copy(os.path.join(built_index.index_dir, "stats.json"), idx)
+    monkeypatch.setattr(builder, "_DICT_ROW_GROUP_ROWS", 16)
+    source = spark.read.parquet(os.path.join(built_index.index_dir, "dictionary"))
+    builder._write_dictionary(source.repartition(2, "term"), os.path.join(idx, "dictionary"))
+    assert all(pq.read_metadata(f).num_row_groups > 4 for f in _dictionary_files(idx))
+
+    reads = []
+
+    class RecordingFile(pq.ParquetFile):
+        def read_row_groups(self, row_groups, *a, **kw):
+            reads.append((self.metadata, list(row_groups)))
+            return super().read_row_groups(row_groups, *a, **kw)
+
+    monkeypatch.setattr(reader_mod.pq, "ParquetFile", RecordingFile)
+    terms = ["w00001", "w00150", "nosuchterm"]
+    got = reader_mod.IndexReader(spark, idx).term_stats(terms)
+    want = reader_mod.IndexReader(spark, built_index.index_dir).term_stats(terms)
+    assert got == want and set(got) == {"w00001", "w00150"}
+    assert reads
+    for md, rgs in reads:
+        assert len(rgs) <= len(terms)
+        for i in rgs:
+            st = md.row_group(i).column(0).statistics
+            assert any(st.min <= t <= st.max for t in terms)
+
+
 def test_assign_doc_ids_deterministic(spark, corpus):
     from miru_spark.index.builder import assign_doc_ids
 
