@@ -387,9 +387,9 @@ def q_bm25_fielded(spark, sf_dir):
 
 
 def q_bm25_wand_fielded(spark, sf_dir):
-    """The same fielded query on the SCALE path: block-max WAND over the
-    scoring terms, then the `lang:en` composite posting list masks the
-    bounded candidate heap (non-scoring, iterative deepening) — rank-
+    """The same fielded query on the SCALE path: the `lang:en` composite
+    term rides the block-max WAND kernel's exchange as a required,
+    non-scoring filter term, decided per block in the same pass — rank-
     identical to `bm25_fielded`, so it shares that oracle. Overfetch +
     rounded re-rank for the oracle's tie order, as bm25_wand_phrase."""
     from miru_spark.query.bm25 import search_wand_query
@@ -404,10 +404,10 @@ def q_bm25_wand_fielded(spark, sf_dir):
 
 
 def q_bm25_wand_not(spark, sf_dir):
-    """`NOT term` clauses on the SCALE path: negated postings anti-mask
-    the bounded WAND heap (non-scoring, intersect-then-anti so the
-    unbounded posting list streams against the broadcast heap) — the
-    exact path's negative anti-join semantics, block-pruned."""
+    """`NOT term` clauses on the SCALE path: the negated term's blocks
+    ride the WAND kernel's exchange and its postings exclude docs per
+    block before they reach the heap (non-scoring) — the exact path's
+    negative anti-join semantics, block-pruned."""
     from miru_spark.query.bm25 import search_wand_query
 
     out = search_wand_query(
@@ -422,8 +422,8 @@ def q_bm25_wand_not(spark, sf_dir):
 def q_bm25_wand_or_fielded(spark, sf_dir):
     """Fielded disjunct on the SCALE path (round-4 router widening): in
     `spark OR lang:de`, the `lang:de` composite posting list QUALIFIES
-    docs that carry no scoring term at all — search_wand_query runs the
-    OR-WAND over the scoring terms and completes the answer with
+    docs that carry no scoring term at all — search_wand_query ranks the
+    scored docs with one WAND kernel pass and completes the answer with
     zero-score members of the composite postings (postings-scan union,
     doc_id desc), exactly search()'s _or_admits_nonscoring semantics.
     'dup' is the rarest term at sf0.01 (df=25), so k=30 genuinely
@@ -440,9 +440,10 @@ def q_bm25_wand_or_fielded(spark, sf_dir):
 
 def q_bm25_wand_not_phrase(spark, sf_dir):
     """`NOT "a b"` on the SCALE path (round-4 router widening): the
-    negated phrase's match relation anti-masks the bounded WAND heap
-    (intersect-then-anti, the neg_masks shape with adjacency as the
-    mask) — rank-identical to the exact path's phrase anti-join."""
+    negated phrase's match relation anti-masks the bounded WAND pool
+    (intersect-then-anti, so the match relation streams against the
+    broadcast pool) — rank-identical to the exact path's phrase
+    anti-join."""
     from miru_spark.query.bm25 import search_wand_query
 
     out = search_wand_query(
@@ -458,11 +459,10 @@ def q_bm25_wand_not_phrase(spark, sf_dir):
 
 def q_bm25_wand_nested(spark, sf_dir):
     """Nested boolean on the SCALE path: ((spark AND query) OR scan)
-    NOT merge is not a flat WAND shape, so the router answers it through
-    the coverage verifier — disjunctive block-max WAND over the positive
-    terms + the fused plan's leaf-coverage bits evaluated over the
-    broadcast heap (query/bm25.py::_search_wand_coverage). Rank-identical
-    to the exact path by construction."""
+    NOT merge compiles to a filter tree that the block-max WAND kernel
+    evaluates per block over the scoring terms' candidates, in the same
+    pass that scores them (query/bm25.py::_wand_topk). Rank-identical to
+    the exact path by construction."""
     from miru_spark.query.bm25 import search_wand_query
 
     out = search_wand_query(

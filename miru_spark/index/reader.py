@@ -113,10 +113,21 @@ class IndexReader:
         self._dict_footers: list | None = None
 
     def _rel(self, name: str) -> DataFrame:
-        """Memoized base relation (see snapshot semantics above)."""
+        """Memoized base relation (see snapshot semantics above). The
+        postings and doclens schemas are fixed by the builder, so those
+        two relations open with them given: parquet schema inference
+        would cost a Spark job per relation on every fresh reader."""
         if name not in self._rel_cache:
-            self._rel_cache[name] = self.spark.read.parquet(
-                os.path.join(self.index_dir, name))
+            from miru_spark.index.builder import _DOCLENS_SCHEMA, _POSTINGS_SCHEMA
+
+            read = self.spark.read
+            fixed = {"postings": _POSTINGS_SCHEMA, "doclens": _DOCLENS_SCHEMA}.get(name)
+            if fixed is not None:
+                # both are written partitionBy("shard"); the partition
+                # column comes last, as inference would place it
+                read = read.schema(T.StructType(
+                    [*fixed, T.StructField("shard", T.IntegerType())]))
+            self._rel_cache[name] = read.parquet(os.path.join(self.index_dir, name))
         return self._rel_cache[name]
 
     # ---- raw tables -------------------------------------------------

@@ -18,12 +18,14 @@ Two physical strategies:
   Spark's distributed TakeOrderedAndProject (``orderBy().limit(k)``) —
   a per-partition bounded heap merged on the driver, exactly the
   reference's heap + sorted answer merge (``FullTextAnswerMerger.java``).
-- ``search_wand`` (scale path, flat-AND queries): blocks of all query
-  terms are co-grouped by ``block_key`` (only doc ranges where *every*
-  term has postings survive — posting-list intersection at block
-  granularity), then a ``mapInPandas`` pass keeps a per-partition bounded
-  heap and skips decoding any block group whose block-max BM25 upper
-  bound cannot beat the current heap threshold (block-max WAND).
+- ``search_wand`` / ``search_wand_query`` (scale path): blocks of all
+  query terms are co-grouped by ``block_key`` (for an AND only doc
+  ranges where *every* required term has postings survive — posting-list
+  intersection at block granularity), then a ``mapInPandas`` pass keeps
+  a per-partition bounded heap and skips decoding any block group whose
+  block-max BM25 upper bound cannot beat the current heap threshold
+  (block-max WAND). The query's boolean filter (fielded masks, NOT
+  terms, nested groups) is decided in the same pass, per block.
   Per-partition top-k is safe: the global top-k is contained in the
   union of per-partition top-k's.
 """
@@ -33,6 +35,7 @@ from __future__ import annotations
 import functools
 import heapq
 import math
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -397,14 +400,13 @@ def _coverage_expr(node, leaf_ix, covered):
 
 def _coverage_agg(
     reader: IndexReader, ast, expansions, *,
-    idf_by_term: dict | None = None, heap: DataFrame | None = None,
+    idf_by_term: dict | None = None,
     block_floor: int | None = None, plan: tuple | None = None,
     k1: float = K1_DEFAULT, b: float = B_DEFAULT,
 ) -> DataFrame | None:
     """The ONE coverage pipeline behind every fused answer: decode the
     query terms' postings once (``block_floor`` prunes to the newest
-    blocks; a broadcast ``heap`` restricts to a bounded pool), join the
-    broadcast (term -> [idf,] leaf-bits) map, fold per-doc covered bits
+    blocks), join the broadcast (term -> [idf,] leaf-bits) map, fold per-doc covered bits
     in one groupBy (summing BM25 when ``idf_by_term`` is given — terms
     absent from the map score 0), and evaluate the boolean tree over the
     bits. Returns DataFrame(doc_id[, score]); None when NO query term
@@ -434,8 +436,6 @@ def _coverage_agg(
         df_bound=sum(stats[t]["df"] for t in cov_terms),
         block_floor=block_floor,
     )
-    if heap is not None:
-        rows = rows.join(F.broadcast(heap.select("doc_id")), "doc_id")
     rows = rows.join(F.broadcast(map_df), "term")
     covered = F.array_distinct(F.flatten(F.collect_list("leaf_ids"))).alias("covered")
     if idf_by_term is not None:
@@ -831,21 +831,6 @@ def facet_counts(
         .orderBy(F.col("n").desc(), F.col("value"))
         .limit(k)
     )
-
-
-def _flat_terms_shape(ast):
-    """``(mode, [(term, boost)])`` when ``ast`` is a single unfielded
-    term or a flat AND/OR of unfielded plain terms (the head shape of a
-    production query log), else None."""
-    def _plain(c):
-        return isinstance(c, qp.Term) and c.field is None
-    if _plain(ast):
-        return "and", [(ast.term, float(getattr(ast, "boost", 1.0)))]
-    if isinstance(ast, (qp.And, qp.Or)) and all(_plain(c) for c in ast.children):
-        mode = "and" if isinstance(ast, qp.And) else "or"
-        return mode, [
-            (c.term, float(getattr(c, "boost", 1.0))) for c in ast.children]
-    return None
 
 
 def _batch_shape(ast):
@@ -1357,12 +1342,16 @@ def search_time_newest(
             floor = max(0, hi - span + 1)
             cands = _fused_candidate_set(
                 reader, ast, expansions, block_floor=floor or None, plan=plan)
+            # one bounded collect per round: the (<= k, newest-first)
+            # answer comes back through Arrow and is served as a local
+            # relation (a LocalTableScan), so the caller's collect runs
+            # no job
             out = _zero_score_topk(
                 reader, cands, k, constraint=constraint, authz=authz,
                 authz_field=authz_field, after=after,
-            ).localCheckpoint(eager=True)
-            if floor == 0 or out.count() >= k:
-                return out
+            ).toArrow()
+            if floor == 0 or out.num_rows >= k:
+                return reader.spark.createDataFrame(out)
             span *= 4
         # pathological miss-rate (masks rejecting nearly everything):
         # answer from the full index rather than looping further
@@ -1381,7 +1370,7 @@ def search_time_newest(
 
 
 # ----------------------------------------------------------------------
-# Block-max WAND scale path (flat AND conjunctions)
+# Block-max WAND scale path
 # ----------------------------------------------------------------------
 
 def search_wand(
@@ -1413,7 +1402,8 @@ def search_wand(
     bound stays admissible (a boosted term's bound scales with its
     boost), so pruning never skips a block that could reach the heap.
 
-    Physical plan: blocks of the query terms -> groupBy(block_key); with
+    Physical plan (:func:`_wand_topk`, the kernel every WAND answer
+    runs): blocks of the query terms -> groupBy(block_key); with
     ``mode="and"`` only groups containing all |terms| survive
     (block-granular posting-list intersection; work is proportional to
     co-occurring doc ranges, not to the head term's full posting list);
@@ -1423,6 +1413,8 @@ def search_wand(
     pruning does the most work for disjunctions. Per-doc scores are
     complete within one group either way: a doc's block_key is a function
     of its doc_id, so all its query-term postings co-group.
+    :func:`search_wand_query` runs the same kernel with a boolean filter
+    over further terms (fielded masks, NOT terms, nested groups).
     """
     if mode not in ("and", "or"):
         raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
@@ -1445,17 +1437,16 @@ def search_wand(
         # stemming index: the dictionary holds STEMS, so RAW query terms
         # must pass through the same analyzer (stop filter first, then
         # stem — the order tokenize() uses). AST-driven callers
-        # (search_wand_query and friends) pass stem_terms=False: the
-        # parser already analyzed the leaves, and the light stemmers are
-        # NOT idempotent ("fitting" -> "fitt"), so a second application
+        # (search_wand_query) never come through here: the parser
+        # already analyzed the leaves, and the light stemmers are NOT
+        # idempotent ("fitting" -> "fitt"), so a second application
         # would look up the wrong dictionary terms.
         from miru_spark.analysis.stem import stem
 
         terms = [stem(t, analyzer.stem_lang) for t in terms]
     terms = list(dict.fromkeys(terms))
-    n_terms = len(terms)
     stats = reader.term_stats(terms)
-    if mode == "and" and len(stats) < n_terms:
+    if mode == "and" and len(stats) < len(terms):
         # a term is missing -> empty AND
         return _local_rel(reader.spark, [], "doc_id long, score double")
     terms = [t for t in terms if t in stats]
@@ -1465,39 +1456,74 @@ def search_wand(
         t: reader.idf(stats[t]["df"]) * (boosts.get(t, 1.0) if boosts else 1.0)
         for t in terms
     }
+    out = _wand_topk(reader, idf, k, k1=k1, b=b, after=after,
+                     required=terms if mode == "and" else ())
+    # lazy display-field gather, same as search(): joins AFTER the limit
+    return _gather(reader, out, gather_fields)
+
+
+def _tree_terms(tree) -> list[str]:
+    """The terms a :func:`_filter_tree` result reads."""
+    if not isinstance(tree, tuple):
+        return []
+    if tree[0] == "t":
+        return [tree[1]]
+    if tree[0] == "not":
+        return _tree_terms(tree[1])
+    return [t for c in tree[1] for t in _tree_terms(c)]
+
+
+def _wand_topk(
+    reader: IndexReader, idf: dict[str, float], k: int, *,
+    k1: float, b: float, after: tuple[float, int] | None,
+    required=(), tree=None,
+) -> DataFrame:
+    """The block-max WAND kernel: DataFrame(doc_id, score), the top-k in
+    (score desc, doc_id desc) order.
+
+    ``idf``: scoring term -> boost-weighted idf (dictionary terms only);
+    a doc's score sums its scoring terms. ``required``: terms every
+    answer holds — their intersection seeds each block's candidates
+    (without any, the union of the scoring terms' doc ids does).
+    ``tree``: the rest of the boolean filter (:func:`_filter_tree`),
+    decided per block over those candidates. The filter's terms ride
+    the scoring terms' exchange: every posting of a doc lives in the
+    doc's own block, so membership is exact per block. The upper bound
+    sums scoring terms only, so it stays admissible, and the heap holds
+    only docs that pass the filter: one run with ``k`` is exact.
+    """
+    terms = list(idf)
+    filt = [t for t in dict.fromkeys([*required, *_tree_terms(tree)]) if t not in idf]
     avgdl, block_bits = reader.avgdl, reader.block_bits
-    conjunctive = mode == "and"
     # continuation cursor: only items strictly below it in the
     # (score desc, doc_id desc) total order enter the heap
     cursor = (float(after[0]), int(after[1])) if after is not None else None
 
-    # ONE exchange for the whole block assembly: postings blocks, the
-    # doclens sidecar, and the removal log union into a single relation
-    # tagged by nullable struct columns, then ONE groupBy(block_key)
-    # gathers everything a block group needs (collect_list / collect_set
-    # / min all skip nulls, so each source lands only in its own slot).
-    # Round 2 ran two groupBys + two joins here — three exchanges plus an
-    # explicit repartition — and the fixed overhead showed up as a
-    # +56%/+47% WAND regression at sf0.1 (VERDICT r2); the union plan is
-    # also the 100-TB shape: everything co-partitions on block_key in one
-    # shuffle whose volume is the same bytes the old plan moved three times.
+    # ONE exchange for the whole block assembly: postings blocks (scoring
+    # and filter terms), the doclens sidecar, and the removal log union
+    # into a single relation tagged by nullable struct columns, then ONE
+    # groupBy(block_key) gathers everything a block group needs
+    # (collect_list / collect_set / min all skip nulls, so each source
+    # lands only in its own slot). Round 2 ran two groupBys + two joins
+    # here — three exchanges plus an explicit repartition — and the
+    # fixed overhead showed up as a +56%/+47% WAND regression at sf0.1
+    # (VERDICT r2); the union plan is also the 100-TB shape: everything
+    # co-partitions on block_key in one shuffle.
     #
-    # DISTINCT posting terms, not a row count: an incrementally-built
-    # index may hold several blocks of the same term under one block_key
-    # (one per shard touching that doc range); presence means >=1 block
-    # per query term. size(collect_set) counts them without the second
-    # exchange of countDistinct's distinct-aggregate rewrite. The
+    # An incrementally-built index may hold several blocks of the same
+    # term under one block_key (one per shard touching that doc range),
+    # so presence is a collect_set of terms, not a row count. The
     # sidecar may likewise contribute one row per shard; min over its
-    # per-block min_doclen stays an
-    # admissible bound for the block-max upper bound. pruned_doclens
-    # pushes the touched-block set down to the sidecar scan via a
-    # broadcast semi-join (the sidecar has no term column of its own).
-    posts_raw = reader.blocks(terms=terms)
+    # per-block min_doclen stays an admissible bound for the block-max
+    # upper bound. pruned_doclens pushes the scoring terms' block set
+    # down to the sidecar scan via a broadcast semi-join (the sidecar
+    # has no term column of its own).
+    posts_raw = reader.blocks(terms=terms + filt)
     pb_t = posts_raw.select(
         F.struct("term", "n", "max_tf", "codec", "doc_ids", "tfs").alias("pb")
     ).schema["pb"].dataType.simpleString()
     side_raw = reader.pruned_doclens(
-        terms=terms, df_bound=sum(stats[t]["df"] for t in terms)
+        terms=terms, df_bound=sum(reader.term_stats(terms)[t]["df"] for t in terms)
     )
     sb_t = side_raw.select(
         F.struct("doc_ids", "doclens").alias("sb")
@@ -1535,27 +1561,37 @@ def search_wand(
         assembled
         .groupBy("block_key")
         .agg(
-            F.size(F.collect_set("pb.term")).alias("n_terms_present"),
+            F.collect_set("pb.term").alias("present"),
             F.collect_list("pb").alias("blocks"),
             F.collect_list("sb").alias("side"),
             F.min("mdl").alias("min_doclen"),
             F.sort_array(F.collect_list("rm_id")).alias("removed_ids"),
         )
     )
-    # conjunctive: only doc ranges where EVERY term has postings survive
-    # (block-granular intersection); disjunctive: any query-term posting
-    # qualifies the group — either filter also drops sidecar-/removal-only
-    # groups (blocks none of the query terms touch)
-    if conjunctive:
-        grouped = grouped.filter(F.col("n_terms_present") == len(terms))
-    else:
-        grouped = grouped.filter(F.col("n_terms_present") >= 1)
+
+    def _lits(ts):
+        return F.array(*[F.lit(t) for t in ts])
+
+    # a group can hold an answer only when every required term and some
+    # scoring term are present; either test also drops sidecar-, removal-
+    # and filter-only groups (blocks no scoring term touches)
+    keep = None
+    if required:
+        keep = F.size(F.array_intersect("present", _lits(required))) == len(required)
+    if not set(required) & set(terms):
+        has_score = F.arrays_overlap("present", _lits(terms))
+        keep = has_score if keep is None else keep & has_score
+    grouped = grouped.filter(keep)
 
     def _ub(idf_t: float, max_tf: int, min_doclen: int) -> float:
         norm = k1 * (1.0 - b + b * min_doclen / avgdl)
         return idf_t * max_tf * (k1 + 1.0) / (max_tf + norm)
 
     from miru_spark.index import codec
+
+    def _member(ids, cand):
+        pos = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
+        return ids[pos] == cand
 
     def _wand(pdf_iter):
         heap: list[tuple[float, int]] = []  # min-heap of (score, doc_id), size <= k
@@ -1576,9 +1612,10 @@ def search_wand(
                 )
                 per_term_ub: dict[str, float] = {}
                 for blk in blocks:
-                    u = _ub(idf[blk["term"]], blk["max_tf"], int(min_dl))
                     t = blk["term"]
-                    per_term_ub[t] = max(per_term_ub.get(t, 0.0), u)
+                    if t in idf:
+                        u = _ub(idf[t], blk["max_tf"], int(min_dl))
+                        per_term_ub[t] = max(per_term_ub.get(t, 0.0), u)
                 ub = sum(per_term_ub.values())
                 # STRICT compare: the heap's total order is (score,
                 # doc_id) — a block whose bound exactly ties theta can
@@ -1589,8 +1626,58 @@ def search_wand(
                 if ub < theta():
                     continue  # block-max skip: cannot beat current top-k
                 base = int(block_key) << block_bits
-                # sidecar doclens decode only AFTER the block survives
-                # pruning (one copy per block, shared by every term)
+                # postings, filter terms included, decode only AFTER the
+                # block survives pruning; tf streams only for scoring terms
+                parts: dict[str, list] = {}
+                for blk in blocks:
+                    t = blk["term"]
+                    parts.setdefault(t, []).append((
+                        codec.decode_block_docids_codec(
+                            blk["doc_ids"], base, int(blk["codec"])),
+                        codec.decode_counts(blk["tfs"]) if t in idf else None,
+                    ))
+                decoded = {}
+                for t, chunks in parts.items():
+                    if len(chunks) == 1:
+                        decoded[t] = chunks[0]
+                        continue
+                    # merge same-key blocks from different shards
+                    # (disjoint ids within one doc range): concat + sort
+                    ids = np.concatenate([c[0] for c in chunks])
+                    order = np.argsort(ids, kind="stable")
+                    tfs = (np.concatenate([c[1] for c in chunks])[order]
+                           if t in idf else None)
+                    decoded[t] = (ids[order], tfs)
+                present = [t for t in terms if t in decoded]
+                if required:
+                    # intersect the required terms' ids, smallest first
+                    req = sorted((decoded[t][0] for t in required), key=len)
+                    cand = req[0]
+                    for ids in req[1:]:
+                        cand = np.intersect1d(cand, ids, assume_unique=True)
+                else:
+                    cand = np.unique(np.concatenate([decoded[t][0] for t in present]))
+
+                def _eval(node):
+                    if node[0] == "t":
+                        d = decoded.get(node[1])
+                        return (_member(d[0], cand) if d is not None
+                                else np.zeros(cand.size, dtype=bool))
+                    if node[0] == "not":
+                        return ~_eval(node[1])
+                    ms = [_eval(c) for c in node[1]]
+                    fold = np.logical_and if node[0] == "and" else np.logical_or
+                    return fold.reduce(ms)
+
+                if tree is not None and cand.size:
+                    cand = cand[_eval(tree)]
+                if removed.size and cand.size:
+                    cand = cand[~_member(removed, cand)]
+                if cand.size == 0:
+                    continue
+                # sidecar doclens: one gather per surviving block group —
+                # doclen depends only on the doc, so it is NOT fetched per
+                # term
                 s_parts = [
                     (
                         np.cumsum(
@@ -1607,64 +1694,16 @@ def search_wand(
                     side_dls = np.concatenate([c[1] for c in s_parts])
                     s_order = np.argsort(side_ids, kind="stable")
                     side_ids, side_dls = side_ids[s_order], side_dls[s_order]
-                parts: dict[str, list] = {}
-                for blk in blocks:
-                    parts.setdefault(blk["term"], []).append(
-                        (
-                            codec.decode_block_docids_codec(
-                                blk["doc_ids"], base, int(blk["codec"])
-                            ),
-                            codec.decode_counts(blk["tfs"]),
-                        )
-                    )
-                decoded = {}
-                for term, chunks in parts.items():
-                    if len(chunks) == 1:
-                        decoded[term] = chunks[0]
-                    else:
-                        # merge same-key blocks from different shards
-                        # (disjoint ids within one doc range): concat + sort
-                        ids = np.concatenate([c[0] for c in chunks])
-                        tfs = np.concatenate([c[1] for c in chunks])
-                        order = np.argsort(ids, kind="stable")
-                        decoded[term] = (ids[order], tfs[order])
-                present = [t for t in terms if t in decoded]
-                if conjunctive:
-                    # intersect doc ids across terms (AND)
-                    inter = decoded[present[0]][0]
-                    for t in present[1:]:
-                        inter = np.intersect1d(inter, decoded[t][0], assume_unique=True)
-                        if inter.size == 0:
-                            break
-                else:
-                    # union of doc ids (OR)
-                    inter = decoded[present[0]][0]
-                    for t in present[1:]:
-                        inter = np.union1d(inter, decoded[t][0])
-                if removed.size and inter.size:
-                    pos_r = np.searchsorted(removed, inter)
-                    hit = (pos_r < removed.size) & (removed[np.minimum(pos_r, removed.size - 1)] == inter)
-                    inter = inter[~hit]
-                if inter.size == 0:
-                    continue
-                # one doclen gather per block group — doclen depends only
-                # on the doc, so it is NOT re-fetched per term
-                dl = side_dls[np.searchsorted(side_ids, inter)].astype(np.float64)
+                dl = side_dls[np.searchsorted(side_ids, cand)].astype(np.float64)
                 norm = k1 * (1.0 - b + b * dl / avgdl)
-                scores = np.zeros(inter.size, dtype=np.float64)
+                scores = np.zeros(cand.size, dtype=np.float64)
                 for t in present:
                     ids, tfs = decoded[t]
-                    if conjunctive:
-                        member = np.full(inter.size, True)
-                        pos = np.searchsorted(ids, inter)
-                    else:
-                        pos = np.searchsorted(ids, inter)
-                        member = (pos < ids.size) & (ids[np.minimum(pos, ids.size - 1)] == inter)
-                        pos = np.minimum(pos, ids.size - 1)
+                    pos = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
                     tf = tfs[pos].astype(np.float64)
                     contrib = idf[t] * tf * (k1 + 1.0) / (tf + norm)
-                    scores += np.where(member, contrib, 0.0)
-                for s, d in zip(scores, inter):
+                    scores += np.where(ids[pos] == cand, contrib, 0.0)
+                for s, d in zip(scores, cand):
                     item = (float(s), int(d))
                     if cursor is not None and item >= cursor:
                         continue  # keyset continuation: already served
@@ -1677,330 +1716,199 @@ def search_wand(
         ).astype({"doc_id": "int64", "score": "float64"})
 
     local = grouped.mapInPandas(_wand, schema="doc_id long, score double")
-    out = local.orderBy(F.col("score").desc(), F.col("doc_id").desc()).limit(k)
-    # lazy display-field gather, same as search(): joins AFTER the limit
-    return _gather(reader, out, gather_fields)
+    return local.orderBy(F.col("score").desc(), F.col("doc_id").desc()).limit(k)
 
 
-def _wand_shape(ast, expander=None):
-    """Classify a parsed query for the WAND scale path.
+def _grounded(node) -> bool:
+    """True when every doc satisfying ``node`` holds a posting of one of
+    its positive unfielded (scoring) leaves: such a tree's answers are
+    all among the docs the WAND kernel enumerates. Fielded leaves,
+    ``*:*`` and negations ground nothing; an And is grounded by any
+    child, an Or only by all of them."""
+    if isinstance(node, qp.And):
+        return any(_grounded(c) for c in node.children)
+    if isinstance(node, qp.Or):
+        return all(_grounded(c) for c in node.children)
+    if isinstance(node, (qp.Not, qp.MatchAll)):
+        return False
+    return getattr(node, "field", None) is None
 
-    Returns ``(mode, terms, phrases, boosts, plain_terms, masks)`` when
-    the query is a flat AND/OR of unfielded plain terms (optionally
-    boosted, ``term^N``), quoted phrases, and (AND only) fielded
-    exact-match terms — the shapes whose top-k is exactly a WAND run
-    plus an order-preserving post-filter. ``terms`` is every scoring
-    term (plain + phrase constituents, deduped), ``boosts`` the per-term
-    max clause weight (only terms with a non-1 weight appear),
-    ``plain_terms`` the Term-leaf terms (the OR post-filter needs them:
-    a doc qualifies through a plain disjunct by CONTAINING that term,
-    through a phrase disjunct only by adjacency), ``masks`` the fielded
-    leaves' composite ``field:value`` vocabulary terms (candidate masks
-    that never score — search()'s semantics), ``neg_masks`` the
-    NOT-leaves' vocabulary terms (plain or composite: anti-masks, also
-    non-scoring, AND only — Lucene rejects NOT directly under OR).
-    Everything else returns None and the caller falls back to
-    :func:`search`:
 
-    - nested boolean / expansion / negated-phrase leaves change scoring
-      or candidate semantics in ways a flat WAND cannot express;
-    - a fielded leaf under OR admits docs with no scoring-term ranking
-      signal of their own (the disjunct alone qualifies them), which a
-      terms-only WAND pool cannot enumerate;
-    - at least one scoring term is required (a pure-mask query takes
-      search()'s TIME-ordering path, not a WAND run).
+def _eval_rejects(node) -> bool:
+    """True when :func:`_eval_candidates` rejects the tree loudly: an And
+    of negations only, or a Not directly under an Or, anywhere. search()
+    raises on these unless it fuses the tree, so the router must not
+    answer them either."""
+    if isinstance(node, qp.Not):
+        return _eval_rejects(node.child)
+    if not isinstance(node, (qp.And, qp.Or)):
+        return False
+    negs = [isinstance(c, qp.Not) for c in node.children]
+    if all(negs) if isinstance(node, qp.And) else any(negs):
+        return True
+    return any(_eval_rejects(c) for c in node.children)
+
+
+def _filter_tree(node, expansions, present):
+    """``node`` as the WAND kernel's filter over term postings:
+    ``("t", term)``, ``("and"|"or", children)``, ``("not", child)``, or
+    the constants True / False. A leaf is the OR of its dictionary
+    terms; a phrase is the AND of its terms (adjacency is checked after
+    the kernel); ``*:*`` is True. Terms outside ``present`` (the
+    dictionary) are False and constants fold, so an unsatisfiable query
+    is False before any scan."""
+    def fold(op, kids):
+        unit = op == "and"  # And's identity is True, Or's is False
+        out = []
+        for c in kids:
+            if c is (not unit):
+                return c
+            if c is not unit:
+                out.extend(c[1] if c[0] == op else [c])
+        return unit if not out else out[0] if len(out) == 1 else (op, tuple(out))
+
+    if isinstance(node, (qp.And, qp.Or)):
+        op = "and" if isinstance(node, qp.And) else "or"
+        return fold(op, [_filter_tree(c, expansions, present) for c in node.children])
+    if isinstance(node, qp.Not):
+        c = _filter_tree(node.child, expansions, present)
+        return (not c) if isinstance(c, bool) else ("not", c)
+    if isinstance(node, qp.MatchAll):
+        return True
+    ts = list(dict.fromkeys(_leaf_terms(node, expansions)))
+    op = "and" if isinstance(node, qp.Phrase) else "or"
+    return fold(op, [("t", t) if t in present else False for t in ts])
+
+
+class _WandShape(NamedTuple):
+    """How :func:`search_wand_query` answers a query on the WAND path.
+
+    ``kind``: ``"filter"`` (one kernel pass), ``"or_masks"`` (one kernel
+    pass, then zero-score mask docs), ``"phrase_and"`` / ``"phrase_or"``
+    (kernel pool + adjacency check, deepening). ``kernel``: the tree the
+    kernel filters by (phrases relaxed to their terms' AND, ``NOT
+    "a b"`` conjuncts left to the adjacency check)."""
+    kind: str
+    kernel: object
+    phrases: tuple = ()
+    neg_phrases: tuple = ()
+    or_masks: tuple = ()
+
+
+_OR_PHRASE_LEAVES = (qp.Term, qp.Phrase, qp.Prefix, qp.Wildcard, qp.Regexp, qp.Fuzzy)
+
+
+def _wand_shape(ast) -> _WandShape | None:
+    """Classify a parsed query for the WAND scale path (None: the caller
+    falls back to :func:`search`).
+
+    - ``filter``: any phrase-free tree whose answers all hold a scoring
+      term (:func:`_grounded`), at any nesting depth: AND/OR/NOT over
+      plain, boosted and expansion terms, fielded masks and ranges under
+      an AND, ``NOT field:value``, ``*:*`` beside a scoring conjunct.
+      The whole boolean filter runs inside the kernel: one pass, exact.
+    - ``or_masks``: a root OR whose ungrounded disjuncts are fielded
+      exact terms (``w OR lang:de``). The kernel ranks the scored docs
+      exactly; docs admitted only by a mask complete the answer at
+      score 0 (search()'s ``_or_admits_nonscoring`` semantics).
+    - ``phrase_and``: a phrase or a root AND whose phrase leaves are
+      conjuncts (``"a b"`` or ``NOT "a b"``) beside phrase-free
+      subtrees. ``phrase_or``: a root OR of unfielded terms, expansion
+      leaves and phrases. Both deepen: adjacency needs the positions
+      sidecar or the doc text, so the kernel yields a pool and the
+      adjacency check filters it.
+
+    Anything else — phrases nested deeper, phrases beside masks or
+    groups under an OR, pure-mask or pure-negation queries, and the
+    shapes search() rejects (:func:`_eval_rejects`) — is None.
     """
-    def _leaves_of(node, mode):
-        terms: list[str] = []
-        plain: list[str] = []
-        phrases: list[tuple[list[str], int]] = []
-        boosts: dict[str, float] = {}
-        masks: list[str] = []
-        neg_masks: list[str] = []
-        neg_phrases: list[tuple[list[str], int]] = []  # AND: NOT "a b"~N
-        req_groups: list[list[str]] = []  # AND mode: required any-of groups
-        all_groups: list[list[str]] = []  # OR mode: qualifying all-of groups
-
-        def _group_terms(child):
-            """Flatten a one-level nested group's member leaf into its
-            term list with boosts, or None when the member shape (Not /
-            fielded / phrase / deeper nesting / MatchAll) can't ride the
-            WAND path."""
-            if isinstance(child, qp.Not) or isinstance(
-                child, (qp.Phrase, qp.MatchAll, qp.And, qp.Or)
-            ):
-                return None
-            if getattr(child, "field", None) is not None:
-                return None
-            wb = float(getattr(child, "boost", 1.0))
-            if isinstance(child, qp.Term):
-                ts = [child.term]
-            elif expander is not None:
-                ts = expander(child)
-            else:
-                return None
-            for t in ts:
-                if t not in terms:
-                    terms.append(t)
-                boosts[t] = max(boosts[t], wb) if t in boosts else wb
-            return ts
-        children = node.children if isinstance(node, (qp.And, qp.Or)) else [node]
-        for c in children:
-            if isinstance(c, qp.Not):
-                # negated plain/fielded exact term = non-scoring
-                # anti-mask (search() anti-joins its postings); a negated
-                # PHRASE anti-masks via the phrase-match relation
-                # (positions sidecar or text verify) the same way —
-                # negated expansions need the dictionary — fallback
-                if mode == "and" and isinstance(c.child, qp.Term):
-                    if c.child.term not in neg_masks:
-                        neg_masks.append(c.child.term)
-                    continue
-                if mode == "and" and isinstance(c.child, qp.Phrase) \
-                        and getattr(c.child, "field", None) is None:
-                    neg_phrases.append(
-                        (list(c.child.terms),
-                         int(getattr(c.child, "slop", 0))))
-                    continue
-                return None
-            if getattr(c, "field", None) is not None:
-                # fielded exact term = non-scoring candidate mask. Under
-                # AND it post-filters the heap (required); under OR it is
-                # a qualifying disjunct that also ADMITS zero-score docs
-                # — the router unions the composite postings into the
-                # answer the same way search()'s _or_admits_nonscoring
-                # completes the exact path. Fielded expansion leaves need
-                # the dictionary — fallback.
-                if isinstance(c, qp.Term):
-                    if c.term not in masks:
-                        masks.append(c.term)
-                    continue
-                return None
-            if isinstance(c, qp.Or):
-                # one-level (a OR b) inside an AND = a required any-of
-                # group — the same shape as an expansion leaf's group;
-                # members may themselves be terms or expansions (any-of
-                # of any-ofs flattens). Deeper nesting falls back.
-                if mode != "and":
-                    return None
-                group: list[str] = []
-                for cc in c.children:
-                    ts = _group_terms(cc)
-                    if ts is None:
-                        return None
-                    for t in ts:
-                        if t not in group:
-                            group.append(t)
-                req_groups.append(group)
-                continue
-            if isinstance(c, qp.And):
-                # one-level (a AND b) inside an OR = a qualifying all-of
-                # group: a pool doc qualifies through this disjunct only
-                # by containing EVERY member term, so members must be
-                # plain terms (an expansion member would nest any-of
-                # inside all-of — fallback).
-                if mode != "or":
-                    return None
-                group = []
-                for cc in c.children:
-                    if not isinstance(cc, qp.Term) or cc.field is not None:
-                        return None
-                    ts = _group_terms(cc)
-                    if ts is None:
-                        return None
-                    for t in ts:
-                        if t not in group:
-                            group.append(t)
-                all_groups.append(group)
-                continue
-            wboost = float(getattr(c, "boost", 1.0))
-            if isinstance(c, qp.Term):
-                leaf_terms = [c.term]
-                if c.term not in plain:
-                    plain.append(c.term)
-            elif isinstance(c, qp.Phrase):
-                leaf_terms = list(c.terms)
-                phrases.append((leaf_terms, int(getattr(c, "slop", 0))))
-            elif expander is not None and isinstance(
-                c, (qp.Prefix, qp.Wildcard, qp.Regexp, qp.Fuzzy)
-            ):
-                # (TermRange never lands here: the grammar requires a
-                # field on ranges, so the fielded-leaf check above owns
-                # every range leaf)
-                # an expansion leaf is a disjunction of its dictionary
-                # terms: under OR (or alone at the root) it flattens into
-                # the WAND term pool, each expanded term scoring with the
-                # leaf's boost — exactly search()'s model. Inside an AND
-                # it becomes a REQUIRED any-of group: the run downgrades
-                # to disjunctive WAND (full-score order, so filtering
-                # stays rank-preserving) and the group post-filters the
-                # bounded heap like a mask.
-                leaf_terms = expander(c)
-                if mode == "and":
-                    req_groups.append(list(leaf_terms))
-                else:
-                    for t in leaf_terms:
-                        if t not in plain:
-                            plain.append(t)
-                if not leaf_terms:
-                    # unmatched expansion: under OR it contributes no
-                    # candidates and no terms (the exact path's empty
-                    # set); under AND its empty req group voids the query
-                    continue
-            else:
-                return None
-            for t in leaf_terms:
-                if t not in terms:
-                    terms.append(t)
-                # max over the leaves containing t, exactly like search()'s
-                # tboost — no 1.0 floor, so down-boosts (N < 1) apply; an
-                # unboosted sibling leaf still lifts the max back to 1.0
-                boosts[t] = max(boosts[t], wboost) if t in boosts else wboost
-        if not terms and not req_groups:
+    if isinstance(ast, qp.Not) or (not _fusible(ast) and _eval_rejects(ast)):
+        return None
+    kids = ast.children if isinstance(ast, (qp.And, qp.Or)) else [ast]
+    if not any(isinstance(l, qp.Phrase) for l in qp._all_leaves(ast)):
+        if _grounded(ast):
+            return _WandShape("filter", ast)
+        masks = [c for c in kids if not _grounded(c)]
+        if (isinstance(ast, qp.Or) and len(masks) < len(kids) and all(
+                isinstance(c, qp.Term) and c.field is not None for c in masks)):
+            return _WandShape("or_masks", ast, or_masks=tuple(c.term for c in masks))
+        return None
+    if isinstance(ast, (qp.And, qp.Phrase)):
+        pos = [c for c in kids if isinstance(c, qp.Phrase)]
+        neg = [c.child for c in kids
+               if isinstance(c, qp.Not) and isinstance(c.child, qp.Phrase)]
+        rest = [c for c in kids if not isinstance(c, qp.Phrase)
+                and not (isinstance(c, qp.Not) and isinstance(c.child, qp.Phrase))]
+        if any(isinstance(l, qp.Phrase) for c in rest for l in qp._all_leaves(c)):
             return None
-        if phrases and all_groups:
-            # phrase qualification (text/positions) and all-of group
-            # qualification (postings coverage) under one OR would need
-            # a union of two verify machineries — rare shape, fallback
+        if not pos and not any(_grounded(c) for c in rest):
             return None
-        if mode == "or" and masks and phrases:
-            # zero-score admission + phrase qualification under one OR:
-            # the text-verify path cannot express mask membership in a
-            # per-doc expression — rare shape, fallback
-            return None
-        boosts = {t: w for t, w in boosts.items() if w != 1.0}
-        return (terms, phrases, boosts, plain, masks, neg_masks,
-                neg_phrases, req_groups, all_groups)
-
-    if isinstance(ast, qp.Or):
-        r = _leaves_of(ast, "or")
-        return None if r is None else ("or", *r)
-    if isinstance(ast, (qp.Prefix, qp.Wildcard, qp.Regexp, qp.Fuzzy)):
-        # a bare unfielded expansion leaf is an OR of its expanded terms
-        r = _leaves_of(ast, "or")
-        return None if r is None else ("or", *r)
-    if isinstance(ast, (qp.And, qp.Term, qp.Phrase)):
-        r = _leaves_of(ast, "and")
-        return None if r is None else ("and", *r)
+        return _WandShape("phrase_and", qp.And(children=pos + rest),
+                          tuple(pos), tuple(neg))
+    if isinstance(ast, qp.Or) and all(
+            isinstance(c, _OR_PHRASE_LEAVES) and c.field is None for c in kids):
+        return _WandShape("phrase_or", ast,
+                          tuple(c for c in kids if isinstance(c, qp.Phrase)))
     return None
 
 
-def _heap_group_filter(
-    reader: IndexReader, heap: DataFrame, groups: list[list[str]],
-    *, require_all_groups: bool,
-) -> DataFrame:
-    """Filter a bounded (doc_id, score) heap by term-group coverage from
-    ONE term-pruned postings scan streamed against the broadcast heap
-    (the unbounded side never broadcasts).
+def _phrase_check(reader, ast, shape, expansions, stats, *, locale,
+                  use_stopwords, text_df, text_col, phrase_via):
+    """The adjacency check of a phrase shape: a function from a
+    (doc_id, score) pool to the pool docs that satisfy the query.
+    ``phrase_and``: every phrase conjunct matches and no negated one
+    does. ``phrase_or``: a plain disjunct's term is present or some
+    phrase matches. The pool is small and broadcast; the phrase-match
+    relation or the doc text streams past it."""
+    tdf, tcol, eff_stop, eff_locale, use_pos = _phrase_ctx_for(
+        reader, ast, locale=locale, use_stopwords=use_stopwords,
+        text_df=text_df, text_col=text_col, phrase_via=phrase_via)
+    or_terms = [
+        t for c in ast.children if not isinstance(c, qp.Phrase)
+        for t in _leaf_terms(c, expansions) if t in stats
+    ] if shape.kind == "phrase_or" else []
+    if use_pos:
+        # positional sidecar: adjacency decided index-side — no doc-text
+        # scan on the WAND path either
+        from miru_spark.index.positions import phrase_match_ids
 
-    ``require_all_groups=True`` — conjunctive: a doc survives when EVERY
-    group has >=1 member present (any-of groups under an AND; plain
-    required terms are singleton groups). ``False`` — disjunctive: a doc
-    survives when SOME group has ALL members present (all-of qualifier
-    groups under an OR; plain disjuncts are singleton groups)."""
-    gmap = _local_rel(
-        reader.spark, [(t, gi) for gi, g in enumerate(groups) for t in g],
-        "term string, gid int",
-    )
-    hits = (
-        reader.postings(terms=sorted({t for g in groups for t in g}))
-        .select("doc_id", "term")
-        .join(F.broadcast(heap.select("doc_id")), "doc_id")
-        .join(F.broadcast(gmap), "term")
-    )
-    if require_all_groups:
-        passing = (
-            hits.groupBy("doc_id")
-            .agg(F.size(F.collect_set("gid")).alias("ng"))
-            .filter(F.col("ng") == len(groups))
-            .select("doc_id")
-        )
+        def match(p):
+            return phrase_match_ids(reader, list(p.terms), getattr(p, "slop", 0))
+
+        if shape.kind == "phrase_and":
+            def check(pool):
+                for p in shape.phrases:
+                    pool = match(p).join(F.broadcast(pool), "doc_id").select("doc_id", "score")
+                for p in shape.neg_phrases:
+                    hit = match(p).join(F.broadcast(pool.select("doc_id")), "doc_id").distinct()
+                    pool = pool.join(F.broadcast(hit), "doc_id", "left_anti")
+                return pool
+            return check
+        qual = match(shape.phrases[0])
+        for p in shape.phrases[1:]:
+            qual = qual.union(match(p))
+        if or_terms:
+            qual = qual.union(reader.postings(terms=or_terms).select("doc_id"))
+        # a doc may qualify via several disjuncts; scores are per doc
+        return lambda pool: (qual.join(F.broadcast(pool), "doc_id")
+                             .select("doc_id", "score").dropDuplicates(["doc_id"]))
+    hits = [_phrase_hit_col(list(p.terms), tcol, eff_stop,
+                            slop=getattr(p, "slop", 0), locale=eff_locale)
+            for p in shape.phrases]
+    if shape.kind == "phrase_and":
+        hit = functools.reduce(lambda x, y: x & y, hits + [
+            ~_phrase_hit_col(list(p.terms), tcol, eff_stop,
+                             slop=getattr(p, "slop", 0), locale=eff_locale)
+            for p in shape.neg_phrases])
     else:
-        sizes = _local_rel(
-            reader.spark, [(gi, len(g)) for gi, g in enumerate(groups)],
-            "gid int, sz int")
-        passing = (
-            hits.groupBy("doc_id", "gid")
-            .agg(F.size(F.collect_set("term")).alias("nt"))
-            .join(F.broadcast(sizes), "gid")
-            .filter(F.col("nt") == F.col("sz"))
-            .select("doc_id")
-            .distinct()
-        )
-    return heap.join(F.broadcast(passing), "doc_id")
+        from miru_spark.analysis.tokenizer import tokens_col
 
-
-def _search_wand_coverage(
-    reader: IndexReader, ast, k: int, *, k1: float, b: float,
-    locale: str | None, use_stopwords: bool | None,
-    gather_fields: list[str] | None, after: tuple[float, int] | None,
-    first_pool: int | None, max_rounds: int,
-    text_df: DataFrame | None = None, text_col: str = "text",
-    phrase_via: str = "auto", max_expansion: int = 100,
-) -> DataFrame:
-    """Scale path for ANY fused-eligible boolean tree (see
-    :func:`_fusible`) that isn't one of the flat WAND shapes: arbitrary
-    nesting, NOT anywhere a grounded And allows. Enumeration and rank
-    come from disjunctive block-max WAND over the POSITIVE leaf terms —
-    every satisfying doc contains at least one (the _fusible invariant)
-    and negated terms never score, so the pool is ordered by the exact
-    path's full BM25 score. Candidacy is decided by the same coverage
-    machinery as :func:`search`'s fused plan, restricted to the bounded
-    heap: one term-pruned postings scan (positive AND negated terms)
-    streamed against the broadcast pool folds per-doc leaf-coverage
-    bits, and the boolean tree evaluates over them. Filtering a
-    full-score-ordered pool preserves global rank; shortfall deepens
-    the pool x4 (same loop as the phrase/mask router), and exhaustion
-    falls back to the exact path — never a silently-partial answer."""
-    expansions = _expand(reader, ast, max_expansion)
-    leaf_ix, term_leaves = _coverage_plan(ast, expansions)
-    all_terms = list(term_leaves)
-
-    pos_terms: list[str] = []
-    tboost: dict[str, float] = {}
-    for leaf in qp.positive_leaves(ast):
-        if leaf.field is not None:  # pragma: no cover - excluded by _fusible
-            continue
-        wb = float(getattr(leaf, "boost", 1.0))
-        for t in _leaf_terms(leaf, expansions):
-            if t not in pos_terms:
-                pos_terms.append(t)
-            tboost[t] = max(tboost[t], wb) if t in tboost else wb
-    if not pos_terms:
-        return _local_rel(reader.spark, [], "doc_id long, score double")
-    boosts = {t: w for t, w in tboost.items() if w != 1.0}
-
-    stats = reader.term_stats(all_terms)
-    plan = (leaf_ix, term_leaves, stats)
-
-    pool = int(first_pool) if first_pool else max(4 * k, 64)
-    for _ in range(max_rounds):
-        cand = search_wand(
-            reader, pos_terms, pool, k1=k1, b=b, mode="or", after=after,
-            boosts=boosts or None, locale=locale, use_stopwords=use_stopwords,
-            stem_terms=False,  # parser-analyzed leaves: already stemmed
-        ).localCheckpoint(eager=True)
-        n_cand = cand.count()
-        covered = _coverage_agg(reader, ast, expansions, heap=cand, plan=plan)
-        if covered is None:
-            verified = cand  # no query term indexed: cand is empty anyway
-        else:
-            # eager checkpoint: the shortfall test below COUNTS verified,
-            # and the caller's collect would otherwise re-run the whole
-            # coverage aggregation a second time — materialize once,
-            # serve both (same lifecycle as cand's checkpoint above)
-            verified = cand.join(
-                F.broadcast(covered), "doc_id").localCheckpoint(eager=True)
-        if n_cand < pool or verified.count() >= k:
-            out = verified.orderBy(
-                F.col("score").desc(), F.col("doc_id").desc()).limit(k)
-            return _gather(reader, out, gather_fields)
-        pool *= 4
-    return search(
-        reader, ast, k, k1=k1, b=b, locale=locale,
-        use_stopwords=use_stopwords, text_df=text_df, text_col=text_col,
-        phrase_via=phrase_via, gather_fields=gather_fields, after=after,
-    )
+        toks = tokens_col(F.col(tcol), use_stopwords=eff_stop, locale=eff_locale)
+        hit = functools.reduce(lambda x, y: x | y, hits + [
+            F.array_contains(toks, F.lit(t)) for t in or_terms])
+    text = tdf.select(F.col("doc_id").cast("long").alias("doc_id"), F.col(tcol))
+    return lambda pool: (text.join(F.broadcast(pool), "doc_id").filter(hit)
+                         .select("doc_id", "score"))
 
 
 def search_wand_query(
@@ -2023,323 +1931,123 @@ def search_wand_query(
 ) -> DataFrame:
     """One query entry point for the scale path: parse a Lucene-classic
     query string and answer it with block-max WAND whenever its shape
-    allows, falling back to :func:`search` otherwise. Rank-identical to
-    :func:`search` on every query, by construction:
+    allows (:func:`_wand_shape`), falling back to :func:`search`
+    otherwise. Rank-identical to :func:`search` on every query, by
+    construction.
 
-    - flat AND / OR of plain terms (optionally boosted, ``term^N`` —
-      the clause weight folds into the per-term idf, keeping the
-      block-max bound admissible) -> :func:`search_wand` directly;
-    - AND / OR of terms + quoted phrases (incl. ``"a b"~N`` slop) ->
-      WAND over the constituent terms (phrase terms score like ordinary
-      terms, exactly as :func:`search` — ``FullText.java:99-219``
-      model), then leaf-match-verify the bounded candidate heap against
-      ``text_df`` with the same JVM expressions the exact path uses
-      (AND: every phrase adjacency; OR: any phrase adjacency or any
-      plain term contained). Because every candidate outranks every
-      non-candidate in the (score desc, doc_id desc) total order,
-      filtering candidates preserves global rank; if fewer than k
-      survive, the pool is deepened (x4) and re-run — iterative
-      deepening, O(log(result rank)) bounded WAND rounds, each touching
-      only block-pruned postings, never the corpus. The loop also
-      terminates the moment a WAND round returns fewer rows than it
-      asked for (the candidate set is then complete). If ``max_rounds``
-      deepenings exhaust without either completeness condition, the
-      query falls back to the exact :func:`search` path rather than
-      returning a silently-partial answer.
-    - AND with fielded exact-match terms (``lang:en AND spark ...``) ->
-      WAND over the scoring terms, then each fielded leaf's composite
-      posting list masks the bounded heap (a non-scoring candidate
-      filter, exactly search()'s semantics — same deepening loop);
-    - AND with ``NOT term`` / ``NOT field:value`` clauses -> the negated
-      postings anti-mask the bounded heap (intersect-then-anti, so the
-      unbounded posting list streams against the broadcast heap);
-    - unfielded expansion leaves (prefix / wildcard / ``/regexp/`` /
-      fuzzy; ranges are always fielded in this grammar): under OR (or bare at the root) the leaf flattens
-      into the WAND pool as an OR of its dictionary expansions, each
-      expanded term scoring with the leaf's boost (search()'s exact
-      model, same default expansion cap); under AND the leaf becomes a
-      REQUIRED any-of group — the run downgrades to disjunctive WAND
-      (the pool is then ordered by the full BM25 score, so filtering
-      preserves rank) and one term-pruned postings scan against the
-      broadcast heap checks that every plain term and >=1 term of each
-      group is present, with the same deepening loop on shortfall;
-    - one-level nested boolean over unfielded terms: ``(a OR b) AND c``
-      -> the OR group rides the same required any-of machinery as an
-      expansion leaf (members may be terms or expansions);
-      ``(a AND b) OR c`` -> the AND group is a qualifying all-of
-      disjunct — the pool post-filters on per-(doc, group) coverage
-      from one term-pruned postings scan (plain disjuncts are
-      singleton groups);
-    - anything else (fielded leaves under OR, fielded expansions,
-      negated phrases, deeper nesting, phrase + all-of-group mixes
-      under OR, or any of ``search``'s mask kwargs) -> :func:`search`.
+    Phrase-free queries answer in ONE kernel pass (:func:`_wand_topk`).
+    The query compiles to scoring terms — the positive unfielded leaves'
+    terms, each with its max clause boost folded into the idf, exactly
+    search()'s model — and a boolean filter tree over every leaf's
+    dictionary terms (:func:`_filter_tree`): fielded masks and ranges,
+    ``NOT term`` / ``NOT field:value``, expansion leaves (prefix,
+    wildcard, ``/regexp/``, fuzzy; search()'s default cap of 100) and
+    nested AND/OR/NOT groups at any depth. The filter's terms ride the
+    kernel's exchange and the kernel decides membership per block, so
+    the heap holds only answers and its top-k is exact: no candidate
+    pool, no verify round. An unsatisfiable filter (a missing AND term,
+    an unmatched required expansion) answers empty without a scan.
 
-    ``first_pool`` seeds the candidate pool size (default
-    ``max(4k, 64)``); tests shrink it to force deepening rounds.
+    Two shapes still take more than the kernel run:
+
+    - a root OR with fielded disjuncts (``w OR lang:de``): docs admitted
+      only by a mask carry no scoring term, so when the kernel finds
+      fewer than k scored docs, the mask postings complete the answer
+      at score 0, doc_id desc (search()'s ``_or_admits_nonscoring``);
+      with ``after`` it falls back to search();
+    - phrases (``"a b"``, ``"a b"~N``, ``NOT "a b"`` as AND conjuncts;
+      phrases as OR disjuncts beside plain terms and expansions):
+      adjacency needs the positions sidecar or ``text_df``, so the
+      kernel (phrases relaxed to their terms' AND) yields a pool of
+      ``first_pool`` docs (default ``max(4k, 64)``) that the adjacency
+      check filters. Every pool doc outranks every non-pool doc, so
+      filtering preserves rank; with fewer than k survivors the pool
+      deepens x4, up to ``max_rounds`` rounds, and the loop stops early
+      once a run returns fewer docs than asked for (the pool was
+      complete). Exhaustion falls back to search() — never a
+      silently-partial answer. Each round collects the pool and the
+      survivors once each (bounded, via Arrow) and the top-k is taken
+      on the driver.
+
+    Anything else (phrases deeper in the tree, pure-mask or pure-
+    negation queries, or any of ``search``'s mask kwargs) -> search().
     """
     ast = _parse_for_index(reader, query, locale=locale, use_stopwords=use_stopwords)
-    if ast is None:
+    if ast is None or k <= 0:
         return _local_rel(reader.spark, [], "doc_id long, score double")
-
-    # lazy leaf expander: the dictionary is scanned only for expansion
-    # leaves _wand_shape actually reaches in an eligible position, at
-    # the same cap as search()'s default (shapes that fall back re-use
-    # search()'s own expansion; explicit max_expansion lands in
-    # search_kwargs and forces the fallback anyway)
-    _exp_cache: dict = {}
-
-    def _expander(leaf):
-        key = leaf.prefix if isinstance(leaf, qp.Prefix) else leaf
-        if key not in _exp_cache:
-            _exp_cache.update(_expand(reader, leaf, 100))
-        return _exp_cache.get(key, [])
-
-    shape = None if search_kwargs else _wand_shape(ast, _expander)
-    if shape is None:
-        if (not search_kwargs and _fusible(ast)
-                and not isinstance(ast, qp.Not)):
-            # not a flat shape, but still a pure boolean over unfielded
-            # text terms (arbitrary nesting, NOT inside): the fused
-            # coverage verifier answers it on the WAND scale path
-            return _search_wand_coverage(
-                reader, ast, k, k1=k1, b=b, locale=locale,
-                use_stopwords=use_stopwords, gather_fields=gather_fields,
-                after=after, first_pool=first_pool, max_rounds=max_rounds,
-                text_df=text_df, text_col=text_col, phrase_via=phrase_via,
-            )
+    shape = None if search_kwargs else _wand_shape(ast)
+    if shape is None or (shape.kind == "or_masks" and after is not None):
+        # (keyset paging through the zero-score admission region needs
+        # the exact path's cursor semantics — rare shape)
         return search(
             reader, ast, k, k1=k1, b=b, locale=locale,
             use_stopwords=use_stopwords, text_df=text_df, text_col=text_col,
-            gather_fields=gather_fields, after=after, **search_kwargs,
+            phrase_via=phrase_via, gather_fields=gather_fields, after=after,
+            **search_kwargs,
         )
-    (mode, terms, phrases, boosts, plain_terms, masks, neg_masks,
-     neg_phrases, req_groups, all_groups) = shape
-    if any(not g for g in req_groups):
-        # an AND-required expansion matched nothing in the dictionary:
-        # the conjunction is unsatisfiable (exact path: empty candidate
-        # intersection) — answer without touching postings
+    expansions = _expand(reader, shape.kernel, 100)
+    boosts = _max_boost_fold(
+        (t, float(getattr(leaf, "boost", 1.0)))
+        for leaf in qp.positive_leaves(shape.kernel) if leaf.field is None
+        for t in _leaf_terms(leaf, expansions))
+    stats = reader.term_stats(
+        [t for leaf in qp._all_leaves(shape.kernel) for t in _leaf_terms(leaf, expansions)])
+    tree = _filter_tree(shape.kernel, expansions, stats)
+    idf = {t: reader.idf(stats[t]["df"]) * w for t, w in boosts.items() if t in stats}
+    if tree is False or (not idf and shape.kind != "or_masks"):
         return _local_rel(reader.spark, [], "doc_id long, score double")
-    if mode == "or" and masks and after is not None:
-        # keyset paging through the zero-score admission region needs
-        # the exact path's cursor semantics — rare shape, fallback
-        return search(
-            reader, ast, k, k1=k1, b=b, locale=locale,
-            use_stopwords=use_stopwords, text_df=text_df, text_col=text_col,
-            gather_fields=gather_fields, after=after,
-        )
-    if (not phrases and not masks and not neg_masks and not neg_phrases
-            and not req_groups and not all_groups):
-        return search_wand(
-            reader, terms, k, k1=k1, b=b, mode=mode, after=after,
-            gather_fields=gather_fields, boosts=boosts or None,
-            locale=locale, use_stopwords=use_stopwords,
-            stem_terms=False,  # parser-analyzed leaves: already stemmed
-        )
+    # top-level required terms seed the kernel's candidates; the rest of
+    # the tree filters them
+    conj = tree[1] if isinstance(tree, tuple) and tree[0] == "and" else (tree,)
+    required = [c[1] for c in conj if isinstance(c, tuple) and c[0] == "t"]
+    rest = [c for c in conj if isinstance(c, tuple) and c[0] != "t"]
+    residual = None if not rest else rest[0] if len(rest) == 1 else ("and", tuple(rest))
 
-    # phrase/mask-bearing boolean: WAND candidates + leaf-match
-    # post-filter. AND: every phrase must verify and every fielded mask
-    # must contain the doc (plain terms are already guaranteed by the
-    # conjunctive WAND run). OR: a doc qualifies by CONTAINING any plain
-    # disjunct's term, or by adjacency of any phrase disjunct — the same
-    # candidate union search()'s _eval_candidates takes, and scores are
-    # over all terms present either way, so filtering the
-    # (total-order-ranked) WAND pool preserves global rank.
-    hit = None
-    pos_semi: list[DataFrame] = []  # AND mode: one semi-filter per phrase
-    neg_pos: list[DataFrame] = []  # AND mode: one anti-filter per NOT-phrase
-    pos_union: DataFrame | None = None  # OR mode: any-qualifier doc set
-    if phrases or neg_phrases:
-        # same resolution (and the same loud missing-text error) as every
-        # other entry point — _phrase_ctx_for is never None here because
-        # the shape carries phrase leaves (negated ones included)
-        tdf, tcol, eff_stop, eff_locale, use_pos = _phrase_ctx_for(
-            reader, ast, locale=locale, use_stopwords=use_stopwords,
-            text_df=text_df, text_col=text_col, phrase_via=phrase_via)
-        if use_pos:
-            # positional sidecar: adjacency decided index-side, so the
-            # verify step becomes posting-relation joins against the
-            # broadcast heap — no doc-text scan on the WAND path either
-            from miru_spark.index.positions import phrase_match_ids
+    def run(n):
+        return _wand_topk(reader, idf, n, k1=k1, b=b, after=after,
+                          required=required, tree=residual)
 
-            if mode == "and":
-                pos_semi = [
-                    phrase_match_ids(reader, list(p_terms), p_slop)
-                    for p_terms, p_slop in phrases
-                ]
-                neg_pos = [
-                    phrase_match_ids(reader, list(p_terms), p_slop)
-                    for p_terms, p_slop in neg_phrases
-                ]
-            else:
-                pos_union = phrase_match_ids(
-                    reader, list(phrases[0][0]), phrases[0][1])
-                for p_terms, p_slop in phrases[1:]:
-                    pos_union = pos_union.union(
-                        phrase_match_ids(reader, list(p_terms), p_slop))
-                if plain_terms:
-                    pos_union = pos_union.union(
-                        reader.postings(terms=plain_terms).select("doc_id"))
-        else:
-            text = tdf.select(
-                F.col("doc_id").cast("long").alias("doc_id"), F.col(tcol)
-            )
-            for p_terms, p_slop in phrases:
-                c = _phrase_hit_col(p_terms, text_col, eff_stop, slop=p_slop,
-                                    locale=eff_locale)
-                if hit is None:
-                    hit = c
-                else:
-                    hit = (hit & c) if mode == "and" else (hit | c)
-            for p_terms, p_slop in neg_phrases:  # AND-only by the shape
-                c = _phrase_hit_col(p_terms, text_col, eff_stop, slop=p_slop,
-                                    locale=eff_locale)
-                hit = ~c if hit is None else (hit & ~c)
-            if mode == "or" and plain_terms:
-                from miru_spark.analysis.tokenizer import tokens_col
+    spark = reader.spark
+    if shape.kind == "filter":
+        return _gather(reader, run(k), gather_fields)
+    if shape.kind == "or_masks":
+        sch = _arrow_schema("doc_id long, score double")
+        out = run(k).toArrow().cast(sch) if idf else sch.empty_table()
+        masks = [m for m in shape.or_masks if m in stats]
+        if out.num_rows < k and masks:
+            # mask-only docs: mask postings minus docs holding any
+            # scoring term, minus removals — all score 0, so they rank
+            # below every scored doc, doc_id desc among themselves
+            zero = reader.postings(terms=masks).select("doc_id").distinct()
+            if idf:
+                zero = zero.join(
+                    reader.postings(terms=list(idf)).select("doc_id"), "doc_id", "left_anti")
+            zero = (_anti_removed(reader, zero).withColumn("score", F.lit(0.0))
+                    .orderBy(F.col("doc_id").desc()).limit(k - out.num_rows))
+            out = pa.concat_tables([out, zero.toArrow().cast(sch)])
+        return _gather(reader, spark.createDataFrame(out), gather_fields)
 
-                toks = tokens_col(F.col(text_col), use_stopwords=eff_stop,
-                                  locale=eff_locale)
-                for t in plain_terms:
-                    hit = hit | F.array_contains(toks, F.lit(t))
-
-    # AND with required any-of-expansion groups: conjunctive WAND cannot
-    # require "one of these terms", so the RUN downgrades to disjunctive
-    # WAND over all scoring terms — the pool is then ordered by the FULL
-    # BM25 score (identical to the exact path's), so post-filtering it
-    # by the requirements preserves global rank. The requirements — every
-    # plain term present, plus >=1 term of each expansion group — apply
-    # below as ONE term-pruned postings scan against the broadcast heap.
-    run_mode = "or" if req_groups else mode
-    req_all: list[list[str]] = (
-        [[t] for t in plain_terms] + req_groups if req_groups else []
-    )
-
+    check = _phrase_check(
+        reader, ast, shape, expansions, stats, locale=locale,
+        use_stopwords=use_stopwords, text_df=text_df, text_col=text_col,
+        phrase_via=phrase_via)
     pool = int(first_pool) if first_pool else max(4 * k, 64)
-    verified = None
     for _ in range(max_rounds):
-        cand = search_wand(
-            reader, terms, pool, k1=k1, b=b, mode=run_mode, after=after,
-            boosts=boosts or None, locale=locale, use_stopwords=use_stopwords,
-            stem_terms=False,  # parser-analyzed leaves: already stemmed
-        ).localCheckpoint(eager=True)  # <= pool rows; reused twice below
-        n_cand = cand.count()
-        verified = cand
-        if all_groups:
-            # OR mode with all-of disjunct groups: a pool doc qualifies
-            # by containing any plain disjunct's term OR every member of
-            # some (a AND b) disjunct (plain terms are singleton groups)
-            # OR membership in a fielded mask's composite posting list
-            # (masks are singleton groups over the composite vocabulary)
-            verified = _heap_group_filter(
-                reader, verified,
-                [[t] for t in plain_terms] + all_groups
-                + ([[m] for m in masks] if mode == "or" else []),
-                require_all_groups=False)
-        if req_all:
-            # AND mode: a doc survives by covering ALL groups — every
-            # plain term (singleton groups) and >=1 member per any-of group
-            verified = _heap_group_filter(
-                reader, verified, req_all, require_all_groups=True)
-        if mode == "and":
-            for m in masks:
-                # composite-postings mask: stream the (term-pruned)
-                # postings scan against the broadcast <= pool-row heap —
-                # never the other way around; at corpus scale a keyword
-                # value's posting list is unbounded, the heap is not.
-                # (OR-mode masks never REMOVE pool docs — they only
-                # qualify/admit; handled above and in the zero-score
-                # completion below.)
-                verified = (
-                    reader.postings(terms=[m]).select("doc_id")
-                    .join(F.broadcast(verified), "doc_id")
-                    .select("doc_id", "score")
-                )
-        if neg_masks:
-            # NOT terms anti-mask the heap, exactly search()'s negative
-            # anti-join — but keep the big side streaming: a negated
-            # term's posting list is unbounded at corpus scale, so first
-            # intersect it with the broadcast heap (one term-pruned scan
-            # for all negated terms), then anti-join the tiny hit set
-            hit_neg = (
-                reader.postings(terms=neg_masks).select("doc_id")
-                .join(F.broadcast(verified.select("doc_id")), "doc_id")
-                .distinct()
-            )
-            verified = verified.join(
-                F.broadcast(hit_neg), "doc_id", "left_anti")
-        if hit is not None:
-            verified = (
-                text.join(F.broadcast(verified), "doc_id")
-                .filter(hit)
-                .select("doc_id", "score")
-            )
-        for m_df in pos_semi:
-            # stream the (term-pruned) phrase-match relation against the
-            # broadcast <= pool-row heap — same shape as the mask joins
-            verified = (
-                m_df.join(F.broadcast(verified), "doc_id")
-                .select("doc_id", "score")
-            )
-        for m_df in neg_pos:
-            # NOT "a b": the phrase-match relation anti-masks the heap —
-            # intersect the (unbounded) match relation with the
-            # broadcast heap first, then anti-join the tiny hit set
-            # (the neg_masks shape, with phrase adjacency as the mask)
-            hit_neg = (
-                m_df.join(F.broadcast(verified.select("doc_id")), "doc_id")
-                .distinct()
-            )
-            verified = verified.join(
-                F.broadcast(hit_neg), "doc_id", "left_anti")
-        if pos_union is not None:
-            verified = (
-                pos_union.join(F.broadcast(verified), "doc_id")
-                .select("doc_id", "score")
-                .dropDuplicates(["doc_id"])  # a doc may qualify via
-                # several disjuncts; scores are per-doc so any row wins
-            )
-        if verified is not cand:
-            # eager checkpoint of the filtered pool: the shortfall test
-            # below counts it, the OR-mask completion may count it
-            # again, and the caller's collect re-executes the whole
-            # mask/phrase verify chain otherwise — materialize once
-            # (<= pool rows), serve all three
-            verified = verified.localCheckpoint(eager=True)
-        if n_cand < pool or verified.count() >= k:
-            break  # candidate set complete, or enough survivors
+        cand = run(pool).toArrow()  # <= pool rows
+        verified = check(spark.createDataFrame(cand)).toArrow()
+        if cand.num_rows < pool or verified.num_rows >= k:
+            # the pool was complete, or enough survivors
+            top = verified.sort_by(
+                [("score", "descending"), ("doc_id", "descending")]).slice(0, k)
+            return _gather(reader, spark.createDataFrame(top), gather_fields)
         pool *= 4
-    else:
-        # max_rounds exhausted without either completeness condition:
-        # the survivor set may be missing docs the exact path would
-        # return. Never ship a silently-partial answer — fall back to
-        # the exact path (one corpus-scale scan, the price of a
-        # pathologically phrase-sparse conjunction).
-        return search(
-            reader, ast, k, k1=k1, b=b, locale=locale,
-            use_stopwords=use_stopwords, text_df=text_df,
-            text_col=text_col, phrase_via=phrase_via,
-            gather_fields=gather_fields, after=after,
-        )
-    if mode == "or" and masks:
-        # fielded disjuncts ADMIT docs with no scoring-term signal: when
-        # fewer than k scored docs qualify, the answer completes with
-        # zero-score members of the composite posting lists — exactly
-        # search()'s _or_admits_nonscoring completion, expressed as
-        # term-pruned postings scans (mask postings minus docs holding
-        # any scoring term, minus removals), ordered doc_id desc. Every
-        # scored doc outranks every zero-score doc in the (score desc,
-        # doc_id desc) total order, so appending preserves rank.
-        have = verified.count()
-        if have < k:
-            scored_docs = reader.postings(terms=terms).select("doc_id").distinct()
-            zero = (
-                reader.postings(terms=masks).select("doc_id").distinct()
-                .join(scored_docs, "doc_id", "left_anti")
-                .transform(lambda d: _anti_removed(reader, d))
-                .withColumn("score", F.lit(0.0))
-                .orderBy(F.col("doc_id").desc())
-                .limit(k - have)
-            )
-            verified = verified.select("doc_id", "score").unionByName(zero)
-    out = verified.orderBy(F.col("score").desc(), F.col("doc_id").desc()).limit(k)
-    return _gather(reader, out, gather_fields)
+    # max_rounds exhausted without either completeness condition: the
+    # survivors may miss docs the exact path would return — answer from
+    # the exact path (one corpus-scale scan, the price of a
+    # pathologically phrase-sparse query)
+    return search(
+        reader, ast, k, k1=k1, b=b, locale=locale,
+        use_stopwords=use_stopwords, text_df=text_df,
+        text_col=text_col, phrase_via=phrase_via,
+        gather_fields=gather_fields, after=after,
+    )
