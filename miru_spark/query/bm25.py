@@ -324,33 +324,53 @@ def _or_admits_nonscoring(node) -> bool:
     return False
 
 
-def _fusible(node, under_not: bool = False) -> bool:
-    """True when the whole tree is answerable by the SINGLE-PASS coverage
-    plan in :func:`search` (one postings decode + one groupBy instead of
-    a per-leaf candidate join plus a second scoring decode): every leaf
-    is an unfielded term-bearing leaf (no phrase / MatchAll / fielded
-    mask), every And outside a NOT keeps a positive child, and no Not
-    sits directly under an Or outside a NOT (the last two mirror
-    _eval_candidates' loud rejections, which the general path still
-    owns). Under these rules every doc satisfying the tree matches at
-    least one positive leaf's term — root leaf: itself; grounded And: its
-    positive child, recursively; Not-free Or: some child, recursively —
-    so the posting rows of the query's own terms are a COMPLETE candidate
-    source and no separate candidate evaluation is needed. Anything goes
-    inside a Not: no rows are ever needed from a negated subtree."""
+def _grounded(node) -> bool:
+    """True when every doc satisfying ``node`` holds a posting of one of
+    its positive unfielded (scoring) leaves: such a tree's answers are
+    all among the docs the WAND kernel enumerates. Fielded leaves,
+    ``*:*`` and negations ground nothing; an And is grounded by any
+    child, an Or only by all of them."""
     if isinstance(node, qp.And):
-        if not under_not and all(isinstance(c, qp.Not) for c in node.children):
-            return False
-        return all(_fusible(c, under_not) for c in node.children)
+        return any(_grounded(c) for c in node.children)
     if isinstance(node, qp.Or):
-        if not under_not and any(isinstance(c, qp.Not) for c in node.children):
-            return False
-        return all(_fusible(c, under_not) for c in node.children)
-    if isinstance(node, qp.Not):
-        return _fusible(node.child, True)
-    if isinstance(node, (qp.Phrase, qp.MatchAll)):
+        return all(_grounded(c) for c in node.children)
+    if isinstance(node, (qp.Not, qp.MatchAll)):
         return False
     return getattr(node, "field", None) is None
+
+
+def _eval_rejects(node, inside_not: bool = True) -> bool:
+    """True when :func:`_eval_candidates` rejects the tree loudly: an And
+    of negations only, or a Not directly under an Or, anywhere (with
+    ``inside_not=False``: outside every Not). search() raises on these
+    unless it fuses the tree, so the router must not answer them either."""
+    if isinstance(node, qp.Not):
+        return inside_not and _eval_rejects(node.child)
+    if not isinstance(node, (qp.And, qp.Or)):
+        return False
+    negs = [isinstance(c, qp.Not) for c in node.children]
+    if all(negs) if isinstance(node, qp.And) else any(negs):
+        return True
+    return any(_eval_rejects(c, inside_not) for c in node.children)
+
+
+def _fusible(node) -> bool:
+    """True when the whole tree is answerable by the SINGLE-PASS coverage
+    plan in :func:`search` (one postings decode + one groupBy instead of
+    a per-leaf candidate join plus a second scoring decode): every leaf,
+    negated ones included, is an unfielded term-bearing leaf (no phrase
+    / MatchAll / fielded mask), the tree is :func:`_grounded` (so the
+    posting rows of the query's own terms are a COMPLETE candidate
+    source; a root Not never is), and no shape :func:`_eval_candidates`
+    rejects sits outside a Not (it still owns those rejections). Any boolean
+    shape goes inside a Not: no rows are ever needed from a negated
+    subtree."""
+    return (
+        all(not isinstance(l, (qp.Phrase, qp.MatchAll)) and l.field is None
+            for l in qp._all_leaves(node))
+        and _grounded(node)
+        and not _eval_rejects(node, inside_not=False)
+    )
 
 
 def _coverage_plan(ast, expansions):
@@ -462,7 +482,7 @@ def _fused_candidate_set(
     weights (facet_counts, the TIME strategy). None when the tree isn't
     fused-eligible — callers fall back to :func:`_eval_candidates`,
     which keeps the loud rejections (pure negation, NOT under OR)."""
-    if not _fusible(ast) or isinstance(ast, qp.Not):
+    if not _fusible(ast):
         return None
     out = _coverage_agg(
         reader, ast, expansions, block_floor=block_floor, plan=plan)
@@ -598,10 +618,10 @@ def search(
     # non-phrase leaves under grounded and/or/not, candidates and scores
     # come from ONE postings decode + ONE groupBy (coverage aggregation)
     # instead of a per-leaf candidate join plus a second scoring decode.
-    # a bare root-level Not is a pure-negation query — the general path
-    # rejects it loudly (SearchError, like Lucene); never fuse it into a
-    # silently-empty answer.
-    fused = _fusible(ast) and not isinstance(ast, qp.Not)
+    # a bare root-level Not is a pure-negation query, never grounded, so
+    # never fused: the general path rejects it loudly (SearchError, like
+    # Lucene) rather than answering silently empty.
+    fused = _fusible(ast)
     if fused:
         leaf_ix, term_leaves = _coverage_plan(ast, expansions)
         all_terms = list(term_leaves)  # includes negated leaves' terms
@@ -1321,7 +1341,7 @@ def search_time_newest(
         return _local_rel(reader.spark, [], "doc_id long, score double")
     expansions = _expand(reader, ast, max_expansion)
 
-    if _fusible(ast) and not isinstance(ast, qp.Not):
+    if _fusible(ast):
         hi = reader.max_block_key()
         total = hi + 1
         # one dictionary collect + one broadcast map, shared by every
@@ -1493,6 +1513,7 @@ def _wand_topk(
     only docs that pass the filter: one run with ``k`` is exact.
     """
     terms = list(idf)
+    required = list(dict.fromkeys(required))  # the prefilter counts distinct terms
     filt = [t for t in dict.fromkeys([*required, *_tree_terms(tree)]) if t not in idf]
     avgdl, block_bits = reader.avgdl, reader.block_bits
     # continuation cursor: only items strictly below it in the
@@ -1507,8 +1528,13 @@ def _wand_topk(
     # lands only in its own slot). Round 2 ran two groupBys + two joins
     # here — three exchanges plus an explicit repartition — and the
     # fixed overhead showed up as a +56%/+47% WAND regression at sf0.1
-    # (VERDICT r2); the union plan is also the 100-TB shape: everything
-    # co-partitions on block_key in one shuffle.
+    # (VERDICT r2); the union plan is also the 100-TB shape for the
+    # scoring terms: everything co-partitions on block_key in one
+    # shuffle. Filter terms (masks, NOT terms, group members) shuffle
+    # ALL their blocks, including blocks no scoring term touches, which
+    # the group prefilter drops only after the exchange: shuffle bytes
+    # grow with the filter terms' df. That cost is measured only on
+    # indexes of a few blocks (see ROADMAP item 1).
     #
     # An incrementally-built index may hold several blocks of the same
     # term under one block_key (one per shard touching that doc range),
@@ -1719,36 +1745,6 @@ def _wand_topk(
     return local.orderBy(F.col("score").desc(), F.col("doc_id").desc()).limit(k)
 
 
-def _grounded(node) -> bool:
-    """True when every doc satisfying ``node`` holds a posting of one of
-    its positive unfielded (scoring) leaves: such a tree's answers are
-    all among the docs the WAND kernel enumerates. Fielded leaves,
-    ``*:*`` and negations ground nothing; an And is grounded by any
-    child, an Or only by all of them."""
-    if isinstance(node, qp.And):
-        return any(_grounded(c) for c in node.children)
-    if isinstance(node, qp.Or):
-        return all(_grounded(c) for c in node.children)
-    if isinstance(node, (qp.Not, qp.MatchAll)):
-        return False
-    return getattr(node, "field", None) is None
-
-
-def _eval_rejects(node) -> bool:
-    """True when :func:`_eval_candidates` rejects the tree loudly: an And
-    of negations only, or a Not directly under an Or, anywhere. search()
-    raises on these unless it fuses the tree, so the router must not
-    answer them either."""
-    if isinstance(node, qp.Not):
-        return _eval_rejects(node.child)
-    if not isinstance(node, (qp.And, qp.Or)):
-        return False
-    negs = [isinstance(c, qp.Not) for c in node.children]
-    if all(negs) if isinstance(node, qp.And) else any(negs):
-        return True
-    return any(_eval_rejects(c) for c in node.children)
-
-
 def _filter_tree(node, expansions, present):
     """``node`` as the WAND kernel's filter over term postings:
     ``("t", term)``, ``("and"|"or", children)``, ``("not", child)``, or
@@ -1756,7 +1752,9 @@ def _filter_tree(node, expansions, present):
     terms; a phrase is the AND of its terms (adjacency is checked after
     the kernel); ``*:*`` is True. Terms outside ``present`` (the
     dictionary) are False and constants fold, so an unsatisfiable query
-    is False before any scan."""
+    is False before any scan. Nested groups of the same operator
+    flatten and repeated children drop (``a AND (b AND a)`` is
+    ``("and", (a, b))``), so each required term is named once."""
     def fold(op, kids):
         unit = op == "and"  # And's identity is True, Or's is False
         out = []
@@ -1764,7 +1762,9 @@ def _filter_tree(node, expansions, present):
             if c is (not unit):
                 return c
             if c is not unit:
-                out.extend(c[1] if c[0] == op else [c])
+                for x in c[1] if c[0] == op else [c]:
+                    if x not in out:
+                        out.append(x)
         return unit if not out else out[0] if len(out) == 1 else (op, tuple(out))
 
     if isinstance(node, (qp.And, qp.Or)):

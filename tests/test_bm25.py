@@ -962,10 +962,12 @@ def test_router_flat_or_matches_exact(reader):
 
 
 def test_router_phrase_matches_exact(reader, oracle, corpus):
+    # the second query names a phrase term again as its own conjunct:
+    # the relaxed kernel tree must not require that term twice
     t1, t2 = _top_bigram(oracle)
-    q = f'"{t1} {t2}"'
-    _same_ranks(bm25.search_wand_query(reader, q, k=10, text_df=corpus),
-                bm25.search(reader, q, k=10, text_df=corpus))
+    for q in (f'"{t1} {t2}"', f'"{t1} {t2}" AND {t2}'):
+        _same_ranks(bm25.search_wand_query(reader, q, k=10, text_df=corpus),
+                    bm25.search(reader, q, k=10, text_df=corpus))
 
 
 def test_router_phrase_plus_term_deepens(reader, oracle, corpus):
@@ -1266,6 +1268,7 @@ _FILTER_SHAPES = [
     "the0 NOT w00000",                                 # NOT plain
     "the0 AND NOT lang:en",                            # NOT field:value
     "w0000* AND w00001",                               # prefix under AND
+    "w00001 AND w00001",                               # a term required twice
     "(w00001 OR w00002) AND w00004",                   # nested (a OR b) AND c
     "(w00001 AND w00004) OR w00050",                   # (a AND b) OR c
     "((w00001 OR w00002) AND NOT w00003) OR (w00050 AND NOT lang:de)",
@@ -1500,11 +1503,11 @@ def test_fused_never_claims_unfusible_shapes():
     bare root negation all stay on the general path."""
     pq = bm25.qp.parse_query
     for q in ['"w00001 w00002"', "lang:en AND w00001", "*:*",
-              "NOT w00001 NOT w00002", "w00001 OR NOT w00002"]:
-        ast = pq(q)
-        assert not (bm25._fusible(ast) and not isinstance(ast, bm25.qp.Not)), q
-    # root Not: _fusible may accept the subtree, but search() must not fuse
-    assert isinstance(pq("NOT w00001"), bm25.qp.Not)
+              "NOT w00001 NOT w00002", "w00001 OR NOT w00002", "NOT w00001",
+              'w00001 NOT "w00002 w00003"', "w00001 AND (w00002 OR NOT w00003)"]:
+        assert not bm25._fusible(pq(q)), q
+    # a rejected shape inside a Not needs no rows of its own
+    assert bm25._fusible(pq("w00001 NOT (w00002 OR NOT w00003)"))
 
 
 def test_pure_negation_raises_on_both_paths(reader):
