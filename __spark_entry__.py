@@ -281,12 +281,13 @@ def q_bm25_boost(spark, sf_dir):
 
 
 def q_bm25_batch(spark, sf_dir):
-    """Shared-scan batch serving: four queries answered from ONE
-    postings decode — the union of their terms prunes the scan, each
-    posting row fans out through a broadcast (query_id, term,
-    boost-weighted idf) map, and one groupBy(query_id, doc_id) both
-    sums BM25 and checks AND coverage; top-k per query is a window
-    partitioned by query_id. Per-query rank-identical to search()
+    """Batch serving: seven queries answered in ONE block-max WAND kernel
+    pass — the union of their terms gathered in one groupBy(block_key)
+    exchange, each block group decoded once per term and shared by every
+    query that reads it; top-k per query is a window partitioned by
+    query_id. With round_to every query keeps no heap bound (rounding
+    can reorder the top-k), so the kernel emits every answer and the
+    window cuts the rounded scores. Per-query rank-identical to search()
     (the reference's solver answers many concurrent queries per
     partition — MiruLowestLatencySolver; this is that amortization,
     declaratively)."""
@@ -297,14 +298,12 @@ def q_bm25_batch(spark, sf_dir):
         "or2": " OR ".join(_OR_TERMS),
         "boosted": "spark^2 AND query^0.5 AND data",
         "boost_or": "data^1.5 OR scan",
-        # round 5: non-flat shapes ride the SAME shared decode — the
-        # phrase's constituent terms score through the union-term scan
-        # with adjacency enforced by the shared phrase-match relation,
-        # and the fielded conjunct joins the coverage count as a
-        # zero-weight composite posting mask
+        # non-flat shapes ride the SAME kernel pass: the phrase's terms
+        # score like plain terms, with adjacency checked by the shared
+        # phrase-match relation; the fielded conjunct and the negated
+        # term are decided by the kernel's per-block filter
         "ph": 'data AND "table hash"',
         "fld": "lang:en AND spark AND query",
-        # negated term as a pos=0 row in the same coverage aggregation
         "notq": "spark AND query NOT merge",
     }
     return search_batch(_reader(spark, sf_dir), qs, k=10, round_to=4,
@@ -425,7 +424,7 @@ def q_bm25_wand_or_fielded(spark, sf_dir):
     docs that carry no scoring term at all — search_wand_query ranks the
     scored docs with one WAND kernel pass and completes the answer with
     zero-score members of the composite postings (postings-scan union,
-    doc_id desc), exactly search()'s _or_admits_nonscoring semantics.
+    doc_id desc), exactly search()'s zero-score completion.
     'dup' is the rarest term at sf0.01 (df=25), so k=30 genuinely
     crosses into the zero-score admission region."""
     from miru_spark.query.bm25 import search_wand_query

@@ -18,14 +18,16 @@ Two physical strategies:
   Spark's distributed TakeOrderedAndProject (``orderBy().limit(k)``) —
   a per-partition bounded heap merged on the driver, exactly the
   reference's heap + sorted answer merge (``FullTextAnswerMerger.java``).
-- ``search_wand`` / ``search_wand_query`` (scale path): blocks of all
-  query terms are co-grouped by ``block_key`` (for an AND only doc
-  ranges where *every* required term has postings survive — posting-list
-  intersection at block granularity), then a ``mapInPandas`` pass keeps
-  a per-partition bounded heap and skips decoding any block group whose
-  block-max BM25 upper bound cannot beat the current heap threshold
-  (block-max WAND). The query's boolean filter (fielded masks, NOT
-  terms, nested groups) is decided in the same pass, per block.
+- ``search_wand`` / ``search_wand_query`` / ``search_batch`` (scale
+  path, one kernel: ``_wand_topk``): blocks of all query terms are
+  co-grouped by ``block_key`` (for an AND only doc ranges where *every*
+  required term has postings survive — posting-list intersection at
+  block granularity), then a ``mapInPandas`` pass keeps a per-partition
+  bounded heap and skips decoding any block group whose block-max BM25
+  upper bound cannot beat the current heap threshold (block-max WAND).
+  The query's boolean filter (fielded masks, NOT terms, nested groups)
+  is decided in the same pass, per block. A batch shares the pass: one
+  exchange over the union of its queries' terms, a heap per query.
   Per-partition top-k is safe: the global top-k is contained in the
   union of per-partition top-k's.
 """
@@ -84,8 +86,8 @@ def _max_boost_fold(pairs) -> dict[str, float]:
     model (Lucene `term^N`): a term reached through several leaves
     scores once with the MAX weight, no implicit 1.0 floor (fractional
     down-boosts apply; an unboosted sibling lifts the max back to 1.0).
-    Shared by search(), search_batch() and the WAND router so the rule
-    cannot drift between paths."""
+    Shared by search() and the WAND kernel's compile step
+    (:func:`_compile_wand`) so the rule cannot drift between paths."""
     out: dict[str, float] = {}
     for t, w in pairs:
         out[t] = max(out[t], w) if t in out else w
@@ -167,32 +169,35 @@ def _phrase_hit_col(terms: list[str], text_col: str, use_stopwords: bool,
     phrases too) — no Python in the verify path."""
     from miru_spark.analysis.tokenizer import tokens_col
 
-    toks = tokens_col(F.col(text_col), use_stopwords=use_stopwords, locale=locale)
     n = len(terms)
     pat = F.array(*[F.lit(t) for t in terms])
-    # greatest(...,1) keeps the sequence ascending for docs shorter than
-    # the phrase; their (short) slice never equals pat
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)))
-    if slop <= 0:
-        return F.exists(idx, lambda i: F.slice(toks, i, n) == pat)
     # sloppy: greedy subsequence automaton over each (n + slop)-token
     # window — greedy matching is exact for subsequence containment, and
     # any in-order occurrence spanning <= n + slop tokens is contained in
     # the window starting at its first matched token
     w = n + slop
 
-    def _window_matches(i):
-        win = F.slice(toks, i, w)
-        state = F.aggregate(
-            win,
+    def _hit(toks):
+        # greatest(...,1) keeps the sequence ascending for docs shorter
+        # than the phrase; their (short) slice never equals pat
+        idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)))
+        if slop <= 0:
+            return F.exists(idx, lambda i: F.slice(toks, i, n) == pat)
+        return F.exists(idx, lambda i: F.aggregate(
+            F.slice(toks, i, w),
             F.lit(0),
             lambda acc, x: F.when(
                 (acc < n) & (x == F.element_at(pat, acc + 1)), acc + 1
             ).otherwise(acc),
-        )
-        return state >= n
+        ) >= n)
 
-    return F.exists(idx, _window_matches)
+    # bind the token array ONCE per row: the tokenizer expression used
+    # inside the per-start-index lambda would be evaluated again for
+    # every index. A lambda variable is never substituted back by the
+    # optimizer (a projected column can be, when a filter is pushed
+    # through the alias), so a one-element outer exists binds it.
+    toks = tokens_col(F.col(text_col), use_stopwords=use_stopwords, locale=locale)
+    return F.exists(F.array(toks), _hit)
 
 
 def _parse_for_index(reader: IndexReader, query, *, locale=None, use_stopwords=None):
@@ -290,38 +295,6 @@ def _eval_candidates(reader: IndexReader, node, expansions, phrase_ctx=None) -> 
             acc = acc.union(_eval_candidates(reader, c, expansions, phrase_ctx))
         return acc.distinct()
     raise SearchError(f"cannot evaluate node {node!r}")
-
-
-def _has_scoring_leaf(node) -> bool:
-    """True when the subtree contains at least one positive unfielded
-    leaf — the only leaves that contribute BM25 weight (fielded terms
-    and ``*:*`` are non-scoring masks; negations never score)."""
-    if isinstance(node, (qp.And, qp.Or)):
-        return any(_has_scoring_leaf(c) for c in node.children)
-    if isinstance(node, qp.Not):
-        return False
-    if isinstance(node, qp.MatchAll):
-        return False
-    return getattr(node, "field", None) is None
-
-
-def _or_admits_nonscoring(node) -> bool:
-    """True when some OR branch can admit a candidate through a subtree
-    with no scoring leaf (``spark OR lang:en``): such docs match the
-    boolean query but have no posting row under any scoring term, so
-    the scoring aggregation alone would silently drop them — the caller
-    must complete them with score 0. Conservative: an enclosing AND may
-    still guarantee a scoring term for every candidate, in which case
-    the completion join is redundant but harmless."""
-    if isinstance(node, qp.Or):
-        if any(not _has_scoring_leaf(c) for c in node.children):
-            return True
-        return any(_or_admits_nonscoring(c) for c in node.children)
-    if isinstance(node, qp.And):
-        return any(_or_admits_nonscoring(c) for c in node.children)
-    if isinstance(node, qp.Not):
-        return _or_admits_nonscoring(node.child)
-    return False
 
 
 def _grounded(node) -> bool:
@@ -711,12 +684,14 @@ def search(
             .groupBy("doc_id")
             .agg(F.sum("contrib").alias("score"))
         )
-        if _or_admits_nonscoring(ast):
+        if not _grounded(ast):
             # `spark OR lang:en`: a doc admitted only through the fielded
             # disjunct has no scoring-term posting row — complete it with
             # score 0 (matching the pure-mask path and facet_counts,
             # which both count such docs). Left join from the already-
-            # masked candidate set; scored docs keep their BM25 sum.
+            # masked candidate set; scored docs keep their BM25 sum. A
+            # grounded tree's every answer holds a scoring posting, so
+            # it needs no completion.
             scored = (
                 candidates.join(scored, "doc_id", "left")
                 .select(
@@ -853,98 +828,6 @@ def facet_counts(
     )
 
 
-def _batch_shape(ast):
-    """Shared-scan eligibility classifier for :func:`search_batch`
-    (round 5 widens it past flat term lists): returns
-    ``(mode, score_terms, mask_terms, phrases, neg_terms, neg_phrases)``
-    or None (fallback).
-
-    - ``score_terms``: {unfielded term: max boost} — plain terms plus
-      every positive phrase's constituent terms (phrase terms
-      contribute BM25 weight like ordinary terms, exactly as in
-      :func:`search`);
-    - ``mask_terms``: composite ``field:value`` terms of exact fielded
-      conjuncts — candidate MASKS that never score (search()'s fielded
-      semantics), folded into the coverage count with idf weight 0;
-    - ``phrases``: [(terms tuple, slop)] — adjacency requirements,
-      verified against ONE shared phrase-match relation over the
-      coverage-passed candidates;
-    - ``neg_terms``: terms (plain or composite) under NOT — a posting
-      row under any of them EXCLUDES the (query, doc), implemented as
-      pos=0 rows in the same coverage aggregation (never scored,
-      never counted toward n_req);
-    - ``neg_phrases``: [(terms tuple, slop)] under NOT — adjacency
-      matches exclude, via the same shared phrase relation.
-
-    Eligible: a single plain term / phrase, a flat OR of plain terms,
-    or a flat AND whose conjuncts are plain terms, unfielded phrases,
-    exact fielded terms, and NOTs of any of those — with at least one
-    scoring term (a pure-mask query takes search()'s TIME path, not a
-    BM25 scan; a pure-negation query is a loud error, as in search()).
-    Everything else (expansions, ranges, nesting, OR with masks)
-    delegates to search().
-    """
-    def _plain(c):
-        return isinstance(c, qp.Term) and c.field is None
-
-    def _mask(c):
-        return isinstance(c, qp.Term) and c.field is not None
-
-    def _phrase(c):
-        return isinstance(c, qp.Phrase)
-
-    def _neg(c):
-        return isinstance(c, qp.Not) and (
-            _plain(c.child) or _mask(c.child) or _phrase(c.child))
-
-    if isinstance(ast, (qp.Term, qp.Phrase)):
-        children = [ast]
-        mode = "and"
-    elif isinstance(ast, qp.Or) and all(_plain(c) for c in ast.children):
-        return ("or",
-                _max_boost_fold((c.term, float(getattr(c, "boost", 1.0)))
-                                for c in ast.children),
-                [], [], [], [])
-    elif isinstance(ast, qp.And) and all(
-            _plain(c) or _mask(c) or _phrase(c) or _neg(c)
-            for c in ast.children):
-        children = ast.children
-        mode = "and"
-    else:
-        return None
-    score: list[tuple[str, float]] = []
-    masks: list[str] = []
-    phrases: list[tuple[tuple, int]] = []
-    neg_terms: list[str] = []
-    neg_phrases: list[tuple[tuple, int]] = []
-    for c in children:
-        if _plain(c):
-            score.append((c.term, float(getattr(c, "boost", 1.0))))
-        elif _mask(c):
-            masks.append(c.term)
-        elif _phrase(c):
-            w = float(getattr(c, "boost", 1.0))
-            score.extend((t, w) for t in dict.fromkeys(c.terms))
-            phrases.append((tuple(c.terms), int(getattr(c, "slop", 0))))
-        elif _neg(c):
-            n = c.child
-            if _phrase(n):
-                neg_phrases.append(
-                    (tuple(n.terms), int(getattr(n, "slop", 0))))
-            else:
-                neg_terms.append(n.term)
-        else:
-            return None
-    if not score:
-        return None  # pure-mask: TIME-ordered zero-score path, not BM25
-    # dedup repeated phrases: each distinct requirement produces ONE
-    # coverage pseudo-row, so n_req must count it once
-    return (mode, _max_boost_fold(score), sorted(set(masks)),
-            list(dict.fromkeys(phrases)), sorted(set(neg_terms)),
-            list(dict.fromkeys(neg_phrases)))
-
-
-
 def _anti_removed(reader: IndexReader, df: DataFrame) -> DataFrame:
     """Anti-join the removal mask — skipped entirely on a removal-free
     index (the common case): an empty-relation anti-join still plans a
@@ -953,6 +836,7 @@ def _anti_removed(reader: IndexReader, df: DataFrame) -> DataFrame:
     if not reader.has_removals():
         return df
     return df.join(reader.removed_docs(), "doc_id", "left_anti")
+
 
 def search_batch(
     reader: IndexReader,
@@ -968,308 +852,76 @@ def search_batch(
     text_df: DataFrame | None = None,
     text_col: str = "text",
     phrase_via: str = "auto",
-    block_prune: bool | None = None,
 ) -> DataFrame:
-    """Answer MANY queries from ONE shared postings scan.
+    """Answer MANY queries in ONE block-max WAND kernel pass.
 
     Returns DataFrame(query_id string, rank long, doc_id long,
-    score double), per-query rank-identical to :func:`search` by
-    construction, ordered (query_id, rank), <= k rows per query.
+    score double), per-query rank-identical to :func:`search`, ordered
+    (query_id, rank), <= k rows per query.
 
     The serving-scale shape the reference's solver takes for free — many
     concurrent tenant queries against one partition
-    (``MiruLowestLatencySolver``) — re-expressed declaratively: the
-    union of every flat query's terms prunes ONE postings decode, each
-    posting row fans out to the queries containing its term via a
-    broadcast (query_id, term, weighted-idf) map, and one
-    groupBy(query_id, doc_id) both sums BM25 and counts matched terms
-    (AND coverage). Per-query cost amortizes the scan: N queries share
-    a single pass over the index instead of N passes.
-
-    Flat AND/OR term queries (incl. ``term^N`` boosts) ride the shared
-    scan, and — round 5 — so do AND queries with quoted PHRASES and
-    exact FIELDED conjuncts: phrase constituent terms score through the
-    same union-term decode (they weigh like ordinary terms, as in
-    search()), fielded masks join the coverage count as zero-weight
-    composite-term posting rows, and adjacency is enforced by ONE
-    shared phrase-match relation whose (query, doc) hits enter the same
-    coverage count as zero-weight pseudo-rows — so the single
-    groupBy(query_id, doc_id) still decides candidacy AND score for
-    every shared shape. NOT conjuncts ride too: negated terms (plain or
-    fielded) join the same aggregation as pos=0 rows whose presence
-    excludes the pair, and negated phrases anti-mask through the same
-    shared phrase relation. Any other parse (expansions, ranges,
-    nesting, OR over masks) is answered by :func:`search` per query and
-    unioned in — correct by delegation, still one Spark job. AND
-    semantics match search()'s fused plan: a conjunct absent from the
-    dictionary voids that query (coverage can never complete). Removals
-    are anti-joined once for the whole batch. The top-k per query is a
-    window partitioned by query_id — bounded per-group state, no global
-    sort.
+    (``MiruLowestLatencySolver``) — with one decode shared among queries
+    that have terms in common. Each query is classified by
+    :func:`_wand_shape` and compiled as :func:`search_wand_query`
+    compiles it (:func:`_compile_wand`: scoring terms with their max
+    boost folded into the idf, and a boolean filter tree). Every
+    ``filter`` query (terms, boosts, expansions, fielded masks, NOT
+    terms, nested groups) and every ``phrase_and`` query rides ONE
+    :func:`_wand_topk` pass: one ``groupBy(block_key)`` exchange over
+    the union of the queries' terms, each block group decoded once per
+    term, a heap and a block-max skip per query. A phrase query — and,
+    with ``round_to``, every query, because rounding can reorder the
+    top-k — keeps no heap bound and emits every doc that passes its
+    tree (phrases relaxed to their terms' AND); phrase adjacency then
+    comes from ONE shared phrase-match relation per distinct phrase
+    (:func:`_batch_phrase_filter`). Any other shape (a root OR with
+    fielded disjuncts, phrases under an OR or deeper, pure-mask queries,
+    and the shapes search() rejects) is answered by :func:`search` per
+    query and unioned in. A query whose filter is unsatisfiable (a
+    conjunct absent from the dictionary) is empty without a scan. The
+    top-k per query is a window partitioned by query_id — bounded
+    per-group state, no global sort.
     """
     out_schema = "query_id string, rank long, doc_id long, score double"
-    if not queries:
-        return _local_rel(reader.spark, [], out_schema)
-
-    # shared[qid] = (mode, {score term: boost}, [mask terms], [phrases],
-    #                [negated terms], [negated phrases])
-    shared: dict[str, tuple] = {}
+    kernel: dict[str, tuple] = {}  # qid -> (shape, expansions)
     fallback: dict[str, object] = {}
     for qid, q in queries.items():
         ast = _parse_for_index(
             reader, q, locale=locale, use_stopwords=use_stopwords)
         if ast is None:
             continue  # all-stopword query: empty, like search()
-        shape = _batch_shape(ast)
-        if shape is None:
+        shape = _wand_shape(ast)
+        if shape is not None and shape.kind in ("filter", "phrase_and"):
+            kernel[qid] = (shape, _expand(reader, shape.kernel, 100))
+        else:
             fallback[qid] = ast
-            continue
-        shared[qid] = shape
+    # one dictionary read for every kernel query's terms
+    reader.term_stats([t for shape, ex in kernel.values()
+                       for leaf in qp._all_leaves(shape.kernel)
+                       for t in _leaf_terms(leaf, ex)])
+    plans: dict[str, _WandPlan] = {}
+    for qid, (shape, ex) in kernel.items():
+        plan, _ = _compile_wand(reader, shape.kernel, ex)
+        if plan is not None and plan.idf:  # else provably empty
+            plans[qid] = plan._replace(
+                bounded=shape.kind == "filter" and round_to is None)
 
     parts: list[DataFrame] = []
-    if shared:
-        union_terms = sorted(
-            {t for _, tb, mk, _p, ng, _np in shared.values()
-             for t in (*tb, *mk, *ng)})
-        stats = reader.term_stats(union_terms)
-        # (query_id, term, idf*boost, pos) for indexed terms — mask
-        # terms ride with weight 0 (present for coverage, scoreless,
-        # the fused plan's trick), NEGATED terms with weight 0 and
-        # pos=0 (a posting row under one EXCLUDES the pair; they never
-        # count toward n_req — an unindexed negated term excludes
-        # nothing, like search()'s empty anti-join). n_req counts all
-        # POSITIVE conjuncts (terms, masks; indexed or not), so an
-        # unindexed AND conjunct leaves the query's coverage forever
-        # short — provably empty, like search()
-        qt_rows = [
-            (qid, t, reader.idf(stats[t]["df"]) * w, 1)
-            for qid, (_, tb, _mk, _p, _ng, _np) in shared.items()
-            for t, w in tb.items() if t in stats
-        ] + [
-            (qid, t, 0.0, 1)
-            for qid, (_, _tb, mk, _p, _ng, _np) in shared.items()
-            for t in mk if t in stats
-        ] + [
-            (qid, t, 0.0, 0)
-            for qid, (_, _tb, _mk, _p, ng, _np) in shared.items()
-            for t in ng if t in stats
-        ]
-        # n_req counts term + mask conjuncts (phrase ADJACENCY is
-        # enforced separately below, over the coverage-passed candidate
-        # set — but the phrase's constituent TERMS are conjuncts here)
-        req_rows = [
-            (qid, (len(tb) + len(mk)) if mode == "and" else 1)
-            for qid, (mode, tb, mk, _ph, _ng, _np) in shared.items()
-        ]
-        if qt_rows:
-            qt = F.broadcast(_local_rel(
-                reader.spark, qt_rows,
-                "query_id string, term string, widf double, pos int"))
-            req = F.broadcast(_local_rel(
-                reader.spark, req_rows, "query_id string, n_req int"))
-            union_idx_terms = sorted({t for _, t, _w, _pos in qt_rows})
-            # Block-coverage pruning (the shared-scan twin of
-            # search_wand's block-granular intersection): an AND query's
-            # matches can only live in blocks containing ALL its terms —
-            # a block is a doc-id range, so every posting of a matching
-            # doc co-locates. Computing the covered (query, block) set
-            # from the BLOCK-level relation (no decode) and restricting
-            # both the decode and each AND query's fan-out to it makes
-            # the decode volume proportional to co-occurring doc ranges,
-            # not to the union terms' full posting lists. The block
-            # relation pass costs ~2 extra small stages, so it pays only
-            # when the index actually has many blocks — "auto" turns it
-            # on past 64 blocks (a 5k-doc test index has 1-80; a
-            # 10^12-doc index has ~10^8).
-            # AND conjunct terms for block pruning: scoring terms AND
-            # mask terms are all required, so a covered block must hold
-            # every one of them (phrase constituents are in the scoring
-            # set; the phrase-match set is a subset of its terms' AND, so
-            # pruning by constituents never drops a phrase hit)
-            and_terms = {
-                qid: set(tb) | set(mk)
-                for qid, (mode, tb, mk, _p, _ng, _np) in shared.items()
-                if mode == "and"
-            }
-            # populated doc-block count from the manifests (driver-side);
-            # block_prune=True/False overrides the auto threshold
-            prune = (
-                block_prune if block_prune is not None
-                else reader.max_block_key() + 1 > 64
-            ) and bool(and_terms)
-            cov = None
-            if prune:
-                blk = reader.blocks(terms=union_idx_terms).select(
-                    "term", "block_key")
-                qt_and = F.broadcast(_local_rel(
-                    reader.spark,
-                    [(qid, t) for qid, ts in and_terms.items()
-                     for t in ts if t in stats],
-                    "query_id string, term string"))
-                req_and = F.broadcast(_local_rel(
-                    reader.spark, [(qid, len(ts)) for qid, ts in and_terms.items()],
-                    "query_id string, n_req int"))
-                # NO broadcast hint on cov/needed: their size scales with
-                # covered blocks (up to queries x blocks on wide-df AND
-                # terms over a 10^8-block index) — AQE picks broadcast
-                # when the runtime stats are small and a shuffled join
-                # when they are not, instead of a forced-collect OOM
-                cov = (
-                    blk.join(qt_and, "term")
-                    .groupBy("query_id", "block_key")
-                    .agg(F.size(F.collect_set("term")).alias("ntb"))
-                    .join(req_and, "query_id")
-                    .filter(F.col("ntb") >= F.col("n_req"))
-                    .select("query_id", "block_key")
-                )
-                or_terms = sorted({
-                    t for qid, (mode, tb, _mk, _p, _ng, _np) in shared.items()
-                    if mode == "or" for t in tb if t in stats
-                })
-                # blocks ANY query still needs: every block of an OR
-                # term, plus the AND-covered blocks
-                needed = cov.select("block_key").distinct()
-                if or_terms:
-                    needed = needed.union(
-                        blk.filter(F.col("term").isin(or_terms))
-                        .select("block_key")
-                    ).distinct()
-            src_blocks = reader.blocks(terms=union_idx_terms)
-            if prune:
-                src_blocks = src_blocks.join(needed, "block_key", "left_semi")
-            scored = (
-                reader.decode(
-                    src_blocks,
-                    sidecar=reader.pruned_doclens(
-                        union_idx_terms,
-                        df_bound=sum(stats[t]["df"] for t in union_idx_terms),
-                    ),
-                )
-                .join(qt, "term")
-                .withColumn(
-                    "contrib", _bm25_score_col(F.col("widf"), k1, b, reader.avgdl))
-            )
-            if prune:
-                # restrict each AND query's fan-out to its covered
-                # blocks (OR queries pass; the nt coverage filter below
-                # keeps correctness either way — this only drops rows
-                # that could never complete their conjunction)
-                or_qids = [qid for qid, (m, _t, _mk, _p, _ng, _np) in shared.items()
-                           if m == "or"]
-                scored = (
-                    scored.withColumn(
-                        "block_key",
-                        F.shiftright(F.col("doc_id"), reader.block_bits))
-                    .join(
-                        cov.withColumn("cv", F.lit(1)),
-                        ["query_id", "block_key"], "left")
-                    .filter(
-                        F.col("cv").isNotNull()
-                        | F.col("query_id").isin(or_qids))
-                )
-            # one aggregation decides candidacy AND score: nt counts
-            # POSITIVE conjunct rows (terms + masks), nbad counts
-            # negated-term rows — a doc survives with full positive
-            # coverage and zero negative hits
-            scored = (
-                scored.select("query_id", "doc_id", "contrib", "pos")
-                .groupBy("query_id", "doc_id")
-                .agg(F.sum("contrib").alias("score"),
-                     F.sum("pos").alias("nt"),
-                     (F.count(F.lit(1)) - F.sum("pos")).alias("nbad"))
-                .join(req, "query_id")
-                .filter((F.col("nt") >= F.col("n_req"))
-                        & (F.col("nbad") == 0))
-                .select("query_id", "doc_id", "score")
-            )
-            # shared phrase adjacency: ONE match relation per DISTINCT
-            # (terms, slop) across the whole batch, verified over the
-            # coverage-PASSED candidates (docs already known to hold
-            # every constituent term) — so the text-verify plan touches
-            # no postings at all (the batch keeps its single decode) and
-            # costs O(candidates), and the positions plan stays
-            # index-native. A (query, doc) survives when ALL its
-            # phrases verified (n_ph_ok == n_ph); phrase-free queries
-            # pass untouched.
-            ph_keys = sorted(
-                {ph for _, _tb, _mk, phs, _ng, nphs in shared.values()
-                 for ph in (*phs, *nphs)})
-            if ph_keys:
-                pctx = _phrase_ctx_for(
-                    reader,
-                    qp.Phrase(terms=tuple(ph_keys[0][0]), slop=ph_keys[0][1]),
-                    locale=locale, use_stopwords=use_stopwords,
-                    text_df=text_df, text_col=text_col,
-                    phrase_via=phrase_via)
-                _tdf, _tcol, p_stop, p_loc, use_pos = pctx
-                ph_rows = None
-                for terms, slop in ph_keys:
-                    # (query_id, good) pairs requiring this phrase:
-                    # good=1 when the phrase is a positive conjunct,
-                    # good=0 when negated — both verify over the SAME
-                    # shared match relation
-                    qids = [
-                        (qid, 1)
-                        for qid, (_m, _tb, _mk, phs, _ng, _np)
-                        in shared.items() if (terms, slop) in phs
-                    ] + [
-                        (qid, 0)
-                        for qid, (_m, _tb, _mk, _p, _ng, nphs)
-                        in shared.items() if (terms, slop) in nphs
-                    ]
-                    qids_df = F.broadcast(_local_rel(
-                        reader.spark, qids, "query_id string, good int"))
-                    if use_pos:
-                        from miru_spark.index.positions import phrase_match_ids
-
-                        verified = phrase_match_ids(
-                            reader, list(terms), slop).select("doc_id")
-                    else:
-                        cand = (
-                            scored.join(qids_df.select("query_id"),
-                                        "query_id", "left_semi")
-                            .select("doc_id").distinct()
-                        )
-                        verified = (
-                            _tdf.select(
-                                F.col("doc_id").cast("long").alias("doc_id"),
-                                F.col(_tcol))
-                            .join(cand, "doc_id", "left_semi")
-                            .filter(_phrase_hit_col(
-                                list(terms), _tcol, p_stop,
-                                slop=slop, locale=p_loc))
-                            .select("doc_id")
-                        )
-                    hit = verified.crossJoin(qids_df).select(
-                        "query_id", "doc_id", "good")
-                    ph_rows = hit if ph_rows is None else ph_rows.unionByName(hit)
-                phr_req = F.broadcast(_local_rel(
-                    reader.spark,
-                    [(qid, len(phs))
-                     for qid, (_m, _tb, _mk, phs, _ng, _np)
-                     in shared.items()],
-                    "query_id string, n_ph int"))
-                # a (query, doc) survives when ALL its positive phrases
-                # verified (n_ph_ok == n_ph) and NO negated phrase did
-                scored = (
-                    scored.join(phr_req, "query_id")
-                    .join(
-                        ph_rows.groupBy("query_id", "doc_id")
-                        .agg(F.sum("good").alias("n_ph_ok"),
-                             (F.count(F.lit(1)) - F.sum("good"))
-                             .alias("n_ph_bad")),
-                        ["query_id", "doc_id"], "left")
-                    .filter(((F.col("n_ph") == 0)
-                             | (F.coalesce("n_ph_ok", F.lit(0))
-                                == F.col("n_ph")))
-                            & (F.coalesce("n_ph_bad", F.lit(0)) == 0))
-                    .select("query_id", "doc_id", "score")
-                )
-            parts.append(scored)
+    if plans and k > 0:
+        scored = _wand_topk(reader, plans, k, k1=k1, b=b)
+        phrased = {qid: kernel[qid][0] for qid in plans
+                   if kernel[qid][0].kind == "phrase_and"}
+        if phrased:
+            scored = _batch_phrase_filter(
+                reader, scored, phrased, locale=locale,
+                use_stopwords=use_stopwords, text_df=text_df,
+                text_col=text_col, phrase_via=phrase_via)
+        parts.append(scored)
     for qid, ast in fallback.items():
         # round_to passes through: the delegate's top-k cut must happen
-        # on the same (rounded) scores as the flat path's, or a rounded
-        # tie at the k boundary breaks the rank-identity contract
+        # on the same (rounded) scores as the kernel queries' window, or
+        # a rounded tie at the k boundary breaks rank-identity
         parts.append(
             search(
                 reader, ast, k, k1=k1, b=b, round_to=round_to,
@@ -1279,10 +931,7 @@ def search_batch(
         )
     if not parts:
         return _local_rel(reader.spark, [], out_schema)
-    allq = parts[0]
-    for p in parts[1:]:
-        allq = allq.unionByName(p)
-    allq = _anti_removed(reader, allq)
+    allq = functools.reduce(DataFrame.unionByName, parts)
     if round_to is not None:
         allq = allq.withColumn("score", F.round("score", round_to))
     from pyspark.sql import Window
@@ -1309,6 +958,75 @@ def search_batch(
     # task; repartition keeps the shuffle boundary so the window stays
     # parallel and only the <= N*k final rows funnel into one sorter.
     return out.repartition(1).sortWithinPartitions("query_id", "rank")
+
+
+def _batch_phrase_filter(reader, scored, shapes, *, locale, use_stopwords,
+                         text_df, text_col, phrase_via):
+    """Phrase adjacency for the batch's ``phrase_and`` queries over the
+    kernel's (query_id, doc_id, score) output: a (query, doc) survives
+    when every phrase conjunct of the query matches the doc and no
+    negated one does; phrase-free queries pass untouched. ONE
+    phrase-match relation per distinct (terms, slop) across the batch:
+    the positions sidecar (index-native), or the doc text of the phrase
+    queries' kernel answers (docs known to hold every constituent term,
+    so the text verify costs O(candidates) and reads no postings)."""
+    def key(p):
+        return tuple(p.terms), int(getattr(p, "slop", 0))
+
+    keys = list(dict.fromkeys(key(p) for s in shapes.values()
+                              for p in (*s.phrases, *s.neg_phrases)))
+    ix = {kk: i for i, kk in enumerate(keys)}
+    # (query_id, phrase, good): good=1 for a conjunct, 0 for a negation
+    req = F.broadcast(_local_rel(reader.spark, list(dict.fromkeys(
+        [(qid, ix[key(p)], 1) for qid, s in shapes.items() for p in s.phrases]
+        + [(qid, ix[key(p)], 0) for qid, s in shapes.items() for p in s.neg_phrases])),
+        "query_id string, ph int, good int"))
+    first = next(p for s in shapes.values() for p in (*s.phrases, *s.neg_phrases))
+    tdf, tcol, eff_stop, eff_locale, use_pos = _phrase_ctx_for(
+        reader, first, locale=locale, use_stopwords=use_stopwords,
+        text_df=text_df, text_col=text_col, phrase_via=phrase_via)
+    if use_pos:
+        from miru_spark.index.positions import phrase_match_ids
+
+        hits = functools.reduce(DataFrame.unionByName, [
+            phrase_match_ids(reader, list(terms), slop)
+            .select("doc_id", F.lit(i).alias("ph"))
+            for (terms, slop), i in ix.items()])
+    else:
+        # the kernel's answers feed both the text candidates and the
+        # result. Both read them through ONE exchange, which AQE reuses,
+        # so the kernel runs once. The exchange keeps that form only if
+        # nothing is pushed below it: it partitions on every column (no
+        # column can be pruned under it), the candidate side filters
+        # after an aggregate (no predicate moves under it), and the
+        # kernel's columns are non-null (no inferred isnotnull filter).
+        # test_search_batch_phrase_and_fielded_shared pins this.
+        scored = scored.repartition(*scored.columns)
+        cand = (scored.groupBy("doc_id")
+                .agg(F.max(F.col("query_id").isin(list(shapes))).alias("need"))
+                .filter("need").select("doc_id"))
+        hit_ix = F.array(*[
+            F.when(_phrase_hit_col(list(terms), tcol, eff_stop, slop=slop,
+                                   locale=eff_locale), F.lit(i))
+            for (terms, slop), i in ix.items()])
+        hits = (
+            tdf.select(F.col("doc_id").cast("long").alias("doc_id"), F.col(tcol))
+            .join(cand, "doc_id", "left_semi")
+            .select("doc_id", F.explode(F.filter(hit_ix, lambda i: i.isNotNull())).alias("ph"))
+        )
+    agg = (hits.join(req, "ph").groupBy("query_id", "doc_id")
+           .agg(F.sum("good").alias("n_ok"),
+                (F.count(F.lit(1)) - F.sum("good")).alias("n_bad")))
+    n_ph = F.broadcast(_local_rel(
+        reader.spark, [(qid, len({key(p) for p in s.phrases})) for qid, s in shapes.items()],
+        "query_id string, n_ph int"))
+    return (
+        scored.join(n_ph, "query_id", "left")
+        .join(agg, ["query_id", "doc_id"], "left")
+        .filter((F.coalesce("n_ok", F.lit(0)) == F.coalesce("n_ph", F.lit(0)))
+                & (F.coalesce("n_bad", F.lit(0)) == 0))
+        .select("query_id", "doc_id", "score")
+    )
 
 
 def search_time_newest(
@@ -1422,6 +1140,11 @@ def search_wand(
     bound stays admissible (a boosted term's bound scales with its
     boost), so pruning never skips a block that could reach the heap.
 
+    The terms become a ``qp.And`` / ``qp.Or`` of boosted terms, compiled
+    (:func:`_compile_wand`) and run like any :func:`search_wand_query`
+    filter query; an AND with a term missing from the dictionary is
+    empty without a scan.
+
     Physical plan (:func:`_wand_topk`, the kernel every WAND answer
     runs): blocks of the query terms -> groupBy(block_key); with
     ``mode="and"`` only groups containing all |terms| survive
@@ -1433,8 +1156,6 @@ def search_wand(
     pruning does the most work for disjunctions. Per-doc scores are
     complete within one group either way: a doc's block_key is a function
     of its doc_id, so all its query-term postings co-group.
-    :func:`search_wand_query` runs the same kernel with a boolean filter
-    over further terms (fielded masks, NOT terms, nested groups).
     """
     if mode not in ("and", "or"):
         raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
@@ -1464,22 +1185,16 @@ def search_wand(
         from miru_spark.analysis.stem import stem
 
         terms = [stem(t, analyzer.stem_lang) for t in terms]
-    terms = list(dict.fromkeys(terms))
-    stats = reader.term_stats(terms)
-    if mode == "and" and len(stats) < len(terms):
-        # a term is missing -> empty AND
+    node = qp.And if mode == "and" else qp.Or
+    plan, _ = _compile_wand(reader, node(children=[
+        qp.Term(t, boost=boosts.get(t, 1.0) if boosts else 1.0)
+        for t in dict.fromkeys(terms)]), {})
+    if plan is None or not plan.idf:
+        # a missing AND term, or no term in the dictionary at all
         return _local_rel(reader.spark, [], "doc_id long, score double")
-    terms = [t for t in terms if t in stats]
-    if not terms:
-        return _local_rel(reader.spark, [], "doc_id long, score double")
-    idf = {
-        t: reader.idf(stats[t]["df"]) * (boosts.get(t, 1.0) if boosts else 1.0)
-        for t in terms
-    }
-    out = _wand_topk(reader, idf, k, k1=k1, b=b, after=after,
-                     required=terms if mode == "and" else ())
     # lazy display-field gather, same as search(): joins AFTER the limit
-    return _gather(reader, out, gather_fields)
+    return _gather(reader, _wand_one(reader, plan, k, k1=k1, b=b, after=after),
+                   gather_fields)
 
 
 def _tree_terms(tree) -> list[str]:
@@ -1493,31 +1208,84 @@ def _tree_terms(tree) -> list[str]:
     return [t for c in tree[1] for t in _tree_terms(c)]
 
 
-def _wand_topk(
-    reader: IndexReader, idf: dict[str, float], k: int, *,
-    k1: float, b: float, after: tuple[float, int] | None,
-    required=(), tree=None,
-) -> DataFrame:
-    """The block-max WAND kernel: DataFrame(doc_id, score), the top-k in
-    (score desc, doc_id desc) order.
+class _WandPlan(NamedTuple):
+    """One query compiled for :func:`_wand_topk`.
 
     ``idf``: scoring term -> boost-weighted idf (dictionary terms only);
-    a doc's score sums its scoring terms. ``required``: terms every
-    answer holds — their intersection seeds each block's candidates
-    (without any, the union of the scoring terms' doc ids does).
+    a doc's score sums its scoring terms. ``required``: distinct terms
+    every answer holds (:func:`_filter_tree` names each once; the
+    kernel's group prefilter counts them); their intersection seeds
+    each block's candidates (without any, the union of the scoring
+    terms' doc ids does).
     ``tree``: the rest of the boolean filter (:func:`_filter_tree`),
-    decided per block over those candidates. The filter's terms ride
-    the scoring terms' exchange: every posting of a doc lives in the
-    doc's own block, so membership is exact per block. The upper bound
-    sums scoring terms only, so it stays admissible, and the heap holds
-    only docs that pass the filter: one run with ``k`` is exact.
+    decided per block over those candidates. ``bounded``: False for a
+    query whose answer is filtered (phrase adjacency) or re-ordered
+    (``round_to``) after the kernel: it keeps no heap and no block-max
+    skip, and emits every doc that passes its tree."""
+    idf: dict
+    required: tuple = ()
+    tree: object = None
+    bounded: bool = True
+
+
+def _compile_wand(reader: IndexReader, kernel, expansions):
+    """Compile a query tree for the WAND kernel: ``(plan, stats)``.
+
+    Scoring terms are the positive unfielded leaves' dictionary terms,
+    each with its max clause boost folded into the idf (search()'s
+    model). The filter is :func:`_filter_tree` over every leaf's terms;
+    its top-level required terms seed the candidates and the rest is
+    the plan's residual tree. ``plan`` is None when the filter is
+    unsatisfiable (a missing AND term, an unmatched required
+    expansion): the query is empty without a scan."""
+    boosts = _max_boost_fold(
+        (t, float(getattr(leaf, "boost", 1.0)))
+        for leaf in qp.positive_leaves(kernel) if leaf.field is None
+        for t in _leaf_terms(leaf, expansions))
+    stats = reader.term_stats(
+        [t for leaf in qp._all_leaves(kernel) for t in _leaf_terms(leaf, expansions)])
+    tree = _filter_tree(kernel, expansions, stats)
+    if tree is False:
+        return None, stats
+    conj = tree[1] if isinstance(tree, tuple) and tree[0] == "and" else (tree,)
+    rest = [c for c in conj if isinstance(c, tuple) and c[0] != "t"]
+    return _WandPlan(
+        idf={t: reader.idf(stats[t]["df"]) * w for t, w in boosts.items() if t in stats},
+        required=tuple(c[1] for c in conj if isinstance(c, tuple) and c[0] == "t"),
+        tree=None if not rest else rest[0] if len(rest) == 1 else ("and", tuple(rest)),
+    ), stats
+
+
+def _wand_topk(
+    reader: IndexReader, plans: dict[str, _WandPlan], k: int, *,
+    k1: float, b: float, after: tuple[float, int] | None = None,
+) -> DataFrame:
+    """The block-max WAND kernel over a batch of compiled queries:
+    DataFrame(query_id, doc_id, score) holding, per partition, each
+    bounded query's top-k and every answer of an unbounded one. The
+    caller takes the global top-k per query.
+
+    All queries share ONE pass: the blocks of the union of their terms
+    (scoring and filter) and the doclens sidecar gather in one
+    ``groupBy(block_key)`` exchange, and each block group decodes a
+    term's postings at most once, for every query that reads it. Per
+    query, a group is skipped unless it holds every required term and
+    some scoring term, and (bounded queries) unless its block-max upper
+    bound can beat the query's heap threshold. The filter's terms are
+    exact per block: every posting of a doc lives in the doc's own
+    block. The upper bound sums scoring terms only, so it stays
+    admissible, and a heap holds only docs that pass the filter: one
+    run with ``k`` is exact. ``after``: keyset cursor, applied to every
+    query.
     """
-    terms = list(idf)
-    required = list(dict.fromkeys(required))  # the prefilter counts distinct terms
-    filt = [t for t in dict.fromkeys([*required, *_tree_terms(tree)]) if t not in idf]
+    terms = list(dict.fromkeys(t for p in plans.values() for t in p.idf))
+    scoring = set(terms)
+    filt = [t for t in dict.fromkeys(
+        t for p in plans.values() for t in (*p.required, *_tree_terms(p.tree)))
+        if t not in scoring]
     avgdl, block_bits = reader.avgdl, reader.block_bits
     # continuation cursor: only items strictly below it in the
-    # (score desc, doc_id desc) total order enter the heap
+    # (score desc, doc_id desc) total order are answers
     cursor = (float(after[0]), int(after[1])) if after is not None else None
 
     # ONE exchange for the whole block assembly: postings blocks (scoring
@@ -1598,16 +1366,17 @@ def _wand_topk(
     def _lits(ts):
         return F.array(*[F.lit(t) for t in ts])
 
-    # a group can hold an answer only when every required term and some
-    # scoring term are present; either test also drops sidecar-, removal-
-    # and filter-only groups (blocks no scoring term touches)
-    keep = None
-    if required:
-        keep = F.size(F.array_intersect("present", _lits(required))) == len(required)
-    if not set(required) & set(terms):
-        has_score = F.arrays_overlap("present", _lits(terms))
-        keep = has_score if keep is None else keep & has_score
-    grouped = grouped.filter(keep)
+    def _answerable(p):
+        # every required term and some scoring term present; this also
+        # drops sidecar-, removal- and filter-only groups
+        has_score = F.arrays_overlap("present", _lits(p.idf))
+        if not p.required:
+            return has_score
+        return (F.size(F.array_intersect("present", _lits(p.required)))
+                == len(p.required)) & has_score
+
+    grouped = grouped.filter(functools.reduce(
+        lambda x, y: x | y, [_answerable(p) for p in plans.values()]))
 
     def _ub(idf_t: float, max_tf: int, min_doclen: int) -> float:
         norm = k1 * (1.0 - b + b * min_doclen / avgdl)
@@ -1620,129 +1389,161 @@ def _wand_topk(
         return ids[pos] == cand
 
     def _wand(pdf_iter):
-        heap: list[tuple[float, int]] = []  # min-heap of (score, doc_id), size <= k
-
-        def theta():
-            return heap[0][0] if len(heap) >= k else -math.inf
+        # per query: a min-heap of (score, doc_id), size <= k (bounded),
+        # or the (doc_ids, scores) chunks of every answer (unbounded)
+        found: dict[str, list] = {q: [] for q in plans}
 
         for pdf in pdf_iter:
             for block_key, blocks, rem_ids, min_dl, side_chunks in zip(
                 pdf["block_key"], pdf["blocks"], pdf["removed_ids"],
                 pdf["min_doclen"], pdf["side"]
             ):
-                # null from the left join arrives as None/NaN
-                removed = (
-                    np.asarray(rem_ids, dtype=np.int64)
-                    if isinstance(rem_ids, (list, np.ndarray)) and len(rem_ids)
-                    else np.empty(0, dtype=np.int64)
-                )
-                per_term_ub: dict[str, float] = {}
-                for blk in blocks:
-                    t = blk["term"]
-                    if t in idf:
-                        u = _ub(idf[t], blk["max_tf"], int(min_dl))
-                        per_term_ub[t] = max(per_term_ub.get(t, 0.0), u)
-                ub = sum(per_term_ub.values())
-                # STRICT compare: the heap's total order is (score,
-                # doc_id) — a block whose bound exactly ties theta can
-                # still hold a doc scoring theta with a higher doc_id,
-                # which outranks heap[0] on the tie-break. `<=` would
-                # prune it and break rank-identity with search() on
-                # uniform-score corpora.
-                if ub < theta():
-                    continue  # block-max skip: cannot beat current top-k
                 base = int(block_key) << block_bits
-                # postings, filter terms included, decode only AFTER the
-                # block survives pruning; tf streams only for scoring terms
-                parts: dict[str, list] = {}
+                by_term: dict[str, list] = {}
                 for blk in blocks:
-                    t = blk["term"]
-                    parts.setdefault(t, []).append((
-                        codec.decode_block_docids_codec(
-                            blk["doc_ids"], base, int(blk["codec"])),
-                        codec.decode_counts(blk["tfs"]) if t in idf else None,
-                    ))
-                decoded = {}
-                for t, chunks in parts.items():
-                    if len(chunks) == 1:
-                        decoded[t] = chunks[0]
-                        continue
-                    # merge same-key blocks from different shards
-                    # (disjoint ids within one doc range): concat + sort
-                    ids = np.concatenate([c[0] for c in chunks])
-                    order = np.argsort(ids, kind="stable")
-                    tfs = (np.concatenate([c[1] for c in chunks])[order]
-                           if t in idf else None)
-                    decoded[t] = (ids[order], tfs)
-                present = [t for t in terms if t in decoded]
-                if required:
-                    # intersect the required terms' ids, smallest first
-                    req = sorted((decoded[t][0] for t in required), key=len)
-                    cand = req[0]
-                    for ids in req[1:]:
-                        cand = np.intersect1d(cand, ids, assume_unique=True)
-                else:
-                    cand = np.unique(np.concatenate([decoded[t][0] for t in present]))
+                    by_term.setdefault(blk["term"], []).append(blk)
+                max_tf = {t: max(int(blk["max_tf"]) for blk in bl)
+                          for t, bl in by_term.items() if t in scoring}
+                decoded: dict[str, tuple] = {}
 
-                def _eval(node):
+                def dec(t):
+                    # a term's postings, decoded once per group and only
+                    # for a query that survives the skip; tf only for a
+                    # scoring term. Same-key blocks from different
+                    # shards (disjoint ids in one doc range) concat+sort
+                    if t not in decoded:
+                        chunks = [(
+                            codec.decode_block_docids_codec(
+                                blk["doc_ids"], base, int(blk["codec"])),
+                            codec.decode_counts(blk["tfs"]) if t in scoring else None,
+                        ) for blk in by_term[t]]
+                        if len(chunks) == 1:
+                            decoded[t] = chunks[0]
+                        else:
+                            ids = np.concatenate([c[0] for c in chunks])
+                            order = np.argsort(ids, kind="stable")
+                            tfs = (np.concatenate([c[1] for c in chunks])[order]
+                                   if t in scoring else None)
+                            decoded[t] = (ids[order], tfs)
+                    return decoded[t]
+
+                def _eval(node, cand):
                     if node[0] == "t":
-                        d = decoded.get(node[1])
-                        return (_member(d[0], cand) if d is not None
+                        return (_member(dec(node[1])[0], cand) if node[1] in by_term
                                 else np.zeros(cand.size, dtype=bool))
                     if node[0] == "not":
-                        return ~_eval(node[1])
-                    ms = [_eval(c) for c in node[1]]
+                        return ~_eval(node[1], cand)
                     fold = np.logical_and if node[0] == "and" else np.logical_or
-                    return fold.reduce(ms)
+                    return fold.reduce([_eval(c, cand) for c in node[1]])
 
-                if tree is not None and cand.size:
-                    cand = cand[_eval(tree)]
-                if removed.size and cand.size:
-                    cand = cand[~_member(removed, cand)]
-                if cand.size == 0:
-                    continue
-                # sidecar doclens: one gather per surviving block group —
-                # doclen depends only on the doc, so it is NOT fetched per
-                # term
-                s_parts = [
-                    (
-                        np.cumsum(
-                            codec.varbyte_decode(sc["doc_ids"]).astype(np.int64)
-                        ) + base,
-                        codec.decode_counts(sc["doclens"]),
-                    )
-                    for sc in side_chunks
-                ]
-                if len(s_parts) == 1:
-                    side_ids, side_dls = s_parts[0]
-                else:
-                    side_ids = np.concatenate([c[0] for c in s_parts])
-                    side_dls = np.concatenate([c[1] for c in s_parts])
-                    s_order = np.argsort(side_ids, kind="stable")
-                    side_ids, side_dls = side_ids[s_order], side_dls[s_order]
-                dl = side_dls[np.searchsorted(side_ids, cand)].astype(np.float64)
-                norm = k1 * (1.0 - b + b * dl / avgdl)
-                scores = np.zeros(cand.size, dtype=np.float64)
-                for t in present:
-                    ids, tfs = decoded[t]
-                    pos = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
-                    tf = tfs[pos].astype(np.float64)
-                    contrib = idf[t] * tf * (k1 + 1.0) / (tf + norm)
-                    scores += np.where(ids[pos] == cand, contrib, 0.0)
-                for s, d in zip(scores, cand):
-                    item = (float(s), int(d))
-                    if cursor is not None and item >= cursor:
-                        continue  # keyset continuation: already served
-                    if len(heap) < k:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        yield pd.DataFrame(
-            {"doc_id": [d for _, d in heap], "score": [s for s, _ in heap]}
-        ).astype({"doc_id": "int64", "score": "float64"})
+                removed = side = None
+                for q, p in plans.items():
+                    present = [t for t in p.idf if t in by_term]
+                    if not present or any(t not in by_term for t in p.required):
+                        continue
+                    heap = found[q]
+                    if p.bounded and len(heap) >= k:
+                        ub = sum(_ub(p.idf[t], max_tf[t], int(min_dl)) for t in present)
+                        # STRICT compare: the heap's total order is
+                        # (score, doc_id) — a block whose bound exactly
+                        # ties theta can still hold a doc scoring theta
+                        # with a higher doc_id, which outranks heap[0] on
+                        # the tie-break. `<=` would prune it and break
+                        # rank-identity with search() on uniform-score
+                        # corpora.
+                        if ub < heap[0][0]:
+                            continue  # block-max skip: cannot beat this top-k
+                    if p.required:
+                        # intersect the required terms' ids, smallest first
+                        req = sorted((dec(t)[0] for t in p.required), key=len)
+                        cand = req[0]
+                        for ids in req[1:]:
+                            cand = np.intersect1d(cand, ids, assume_unique=True)
+                    else:
+                        cand = np.unique(np.concatenate([dec(t)[0] for t in present]))
+                    if p.tree is not None and cand.size:
+                        cand = cand[_eval(p.tree, cand)]
+                    if removed is None:
+                        # null from an absent removal log arrives as None/NaN
+                        removed = (
+                            np.asarray(rem_ids, dtype=np.int64)
+                            if isinstance(rem_ids, (list, np.ndarray)) and len(rem_ids)
+                            else np.empty(0, dtype=np.int64)
+                        )
+                    if removed.size and cand.size:
+                        cand = cand[~_member(removed, cand)]
+                    if cand.size == 0:
+                        continue
+                    if side is None:
+                        # sidecar doclens: one decode per block group,
+                        # shared by every query — doclen depends only on
+                        # the doc, so it is NOT fetched per term
+                        s_parts = [
+                            (
+                                np.cumsum(
+                                    codec.varbyte_decode(sc["doc_ids"]).astype(np.int64)
+                                ) + base,
+                                codec.decode_counts(sc["doclens"]),
+                            )
+                            for sc in side_chunks
+                        ]
+                        side_ids = np.concatenate([c[0] for c in s_parts])
+                        side_dls = np.concatenate([c[1] for c in s_parts])
+                        if len(s_parts) > 1:
+                            s_order = np.argsort(side_ids, kind="stable")
+                            side_ids, side_dls = side_ids[s_order], side_dls[s_order]
+                        side = (side_ids, side_dls)
+                    dl = side[1][np.searchsorted(side[0], cand)].astype(np.float64)
+                    norm = k1 * (1.0 - b + b * dl / avgdl)
+                    scores = np.zeros(cand.size, dtype=np.float64)
+                    for t in present:
+                        ids, tfs = dec(t)
+                        pos = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
+                        tf = tfs[pos].astype(np.float64)
+                        contrib = p.idf[t] * tf * (k1 + 1.0) / (tf + norm)
+                        scores += np.where(ids[pos] == cand, contrib, 0.0)
+                    if cursor is not None:
+                        # keyset continuation: drop what was already served
+                        below = (scores < cursor[0]) | (
+                            (scores == cursor[0]) & (cand < cursor[1]))
+                        cand, scores = cand[below], scores[below]
+                    if not p.bounded:
+                        heap.append((cand, scores))
+                        continue
+                    for s, d in zip(scores, cand):
+                        item = (float(s), int(d))
+                        if len(heap) < k:
+                            heapq.heappush(heap, item)
+                        elif item > heap[0]:
+                            heapq.heapreplace(heap, item)
+        qids, ids, scores = [], [], []
+        for q, got in found.items():
+            if plans[q].bounded:
+                got = [(np.array([d for _, d in got], dtype=np.int64),
+                        np.array([s for s, _ in got], dtype=np.float64))]
+            for d, s in got:
+                qids.extend([q] * d.size)
+                ids.append(d)
+                scores.append(s)
+        yield pd.DataFrame({
+            "query_id": pd.Series(qids, dtype=object),
+            "doc_id": np.concatenate(ids) if ids else np.empty(0, np.int64),
+            "score": np.concatenate(scores) if scores else np.empty(0, np.float64),
+        }).astype({"doc_id": "int64", "score": "float64"})
 
-    local = grouped.mapInPandas(_wand, schema="doc_id long, score double")
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").desc()).limit(k)
+    # non-null columns: no inferred isnotnull filter lands between the
+    # kernel and a consumer (see _batch_phrase_filter's exchange reuse)
+    return grouped.mapInPandas(
+        _wand, schema="query_id string not null, doc_id long not null, score double not null")
+
+
+def _wand_one(reader: IndexReader, plan: _WandPlan, k: int, *, k1: float, b: float,
+              after: tuple[float, int] | None = None) -> DataFrame:
+    """One query through the kernel: DataFrame(doc_id, score), the top-k
+    in (score desc, doc_id desc) order."""
+    return (_wand_topk(reader, {"": plan}, k, k1=k1, b=b, after=after)
+            .select("doc_id", "score")
+            .orderBy(F.col("score").desc(), F.col("doc_id").desc()).limit(k))
 
 
 def _filter_tree(node, expansions, present):
@@ -1810,7 +1611,7 @@ def _wand_shape(ast) -> _WandShape | None:
     - ``or_masks``: a root OR whose ungrounded disjuncts are fielded
       exact terms (``w OR lang:de``). The kernel ranks the scored docs
       exactly; docs admitted only by a mask complete the answer at
-      score 0 (search()'s ``_or_admits_nonscoring`` semantics).
+      score 0 (search()'s zero-score completion of an ungrounded tree).
     - ``phrase_and``: a phrase or a root AND whose phrase leaves are
       conjuncts (``"a b"`` or ``NOT "a b"``) beside phrase-free
       subtrees. ``phrase_or``: a root OR of unfielded terms, expansion
@@ -1936,7 +1737,8 @@ def search_wand_query(
     construction.
 
     Phrase-free queries answer in ONE kernel pass (:func:`_wand_topk`).
-    The query compiles to scoring terms — the positive unfielded leaves'
+    The query compiles (:func:`_compile_wand`, shared with
+    :func:`search_batch`) to scoring terms — the positive unfielded leaves'
     terms, each with its max clause boost folded into the idf, exactly
     search()'s model — and a boolean filter tree over every leaf's
     dictionary terms (:func:`_filter_tree`): fielded masks and ranges,
@@ -1953,7 +1755,7 @@ def search_wand_query(
     - a root OR with fielded disjuncts (``w OR lang:de``): docs admitted
       only by a mask carry no scoring term, so when the kernel finds
       fewer than k scored docs, the mask postings complete the answer
-      at score 0, doc_id desc (search()'s ``_or_admits_nonscoring``);
+      at score 0, doc_id desc (search()'s zero-score completion);
       with ``after`` it falls back to search();
     - phrases (``"a b"``, ``"a b"~N``, ``NOT "a b"`` as AND conjuncts;
       phrases as OR disjuncts beside plain terms and expansions):
@@ -1986,42 +1788,28 @@ def search_wand_query(
             **search_kwargs,
         )
     expansions = _expand(reader, shape.kernel, 100)
-    boosts = _max_boost_fold(
-        (t, float(getattr(leaf, "boost", 1.0)))
-        for leaf in qp.positive_leaves(shape.kernel) if leaf.field is None
-        for t in _leaf_terms(leaf, expansions))
-    stats = reader.term_stats(
-        [t for leaf in qp._all_leaves(shape.kernel) for t in _leaf_terms(leaf, expansions)])
-    tree = _filter_tree(shape.kernel, expansions, stats)
-    idf = {t: reader.idf(stats[t]["df"]) * w for t, w in boosts.items() if t in stats}
-    if tree is False or (not idf and shape.kind != "or_masks"):
+    plan, stats = _compile_wand(reader, shape.kernel, expansions)
+    if plan is None or (not plan.idf and shape.kind != "or_masks"):
         return _local_rel(reader.spark, [], "doc_id long, score double")
-    # top-level required terms seed the kernel's candidates; the rest of
-    # the tree filters them
-    conj = tree[1] if isinstance(tree, tuple) and tree[0] == "and" else (tree,)
-    required = [c[1] for c in conj if isinstance(c, tuple) and c[0] == "t"]
-    rest = [c for c in conj if isinstance(c, tuple) and c[0] != "t"]
-    residual = None if not rest else rest[0] if len(rest) == 1 else ("and", tuple(rest))
 
     def run(n):
-        return _wand_topk(reader, idf, n, k1=k1, b=b, after=after,
-                          required=required, tree=residual)
+        return _wand_one(reader, plan, n, k1=k1, b=b, after=after)
 
     spark = reader.spark
     if shape.kind == "filter":
         return _gather(reader, run(k), gather_fields)
     if shape.kind == "or_masks":
         sch = _arrow_schema("doc_id long, score double")
-        out = run(k).toArrow().cast(sch) if idf else sch.empty_table()
+        out = run(k).toArrow().cast(sch) if plan.idf else sch.empty_table()
         masks = [m for m in shape.or_masks if m in stats]
         if out.num_rows < k and masks:
             # mask-only docs: mask postings minus docs holding any
             # scoring term, minus removals — all score 0, so they rank
             # below every scored doc, doc_id desc among themselves
             zero = reader.postings(terms=masks).select("doc_id").distinct()
-            if idf:
+            if plan.idf:
                 zero = zero.join(
-                    reader.postings(terms=list(idf)).select("doc_id"), "doc_id", "left_anti")
+                    reader.postings(terms=list(plan.idf)).select("doc_id"), "doc_id", "left_anti")
             zero = (_anti_removed(reader, zero).withColumn("score", F.lit(0.0))
                     .orderBy(F.col("doc_id").desc()).limit(k - out.num_rows))
             out = pa.concat_tables([out, zero.toArrow().cast(sch)])

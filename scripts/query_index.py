@@ -8,7 +8,7 @@ Usage::
     python scripts/query_index.py --index /tmp/idx --queries-file batch.json -k 10
 
 Batch mode (``--queries-file``, JSON {id: query} or one query per line)
-answers every query from ONE shared postings scan (``search_batch``) and
+answers every query in ONE shared WAND kernel pass (``search_batch``) and
 reports total + amortized per-query latency.
 """
 
@@ -30,8 +30,8 @@ def main() -> None:
     g.add_argument("--query", default=None)
     g.add_argument("--queries-file", default=None, metavar="FILE",
                    help="batch mode: JSON object {query_id: query} or one "
-                        "query per line; all queries share ONE postings "
-                        "scan (search_batch)")
+                        "query per line; all queries share ONE WAND kernel "
+                        "pass (search_batch)")
     ap.add_argument("-k", type=int, default=10)
     ap.add_argument("--wand", action="store_true", help="block-max WAND path (flat term list)")
     ap.add_argument("--or", dest="use_or", action="store_true",

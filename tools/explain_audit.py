@@ -78,49 +78,33 @@ def main() -> int:
         must_not=["CartesianProduct"],
     )
 
-    # batch serving with NON-FLAT shapes (round 5): phrase + fielded +
-    # NOT queries must share the flat queries' postings decode — the
-    # whole batch plan reads the postings relation ONCE (the text-plan
-    # phrase verify runs over coverage-passed candidates, not postings)
+    # batch serving: flat, fielded, NOT and phrase queries all ride ONE
+    # WAND kernel pass over one shared block exchange, with no separate
+    # postings decode. Counted on the executed plan: the text phrase
+    # verify reads the kernel's answers through an exchange that AQE
+    # reuses, which only the final adaptive plan shows
     from miru_spark.query.bm25 import search_batch
 
     tdf = E._read(spark, sf_dir, "documents")
-
-    def _decodes(p):
-        # the postings DECODE kernel is the expensive pass; raw FileScan
-        # line counts mislead here because Spark's dynamic-partition-
-        # pruning subquery on the doclens sidecar REPRINTS the postings
-        # subtree (SubqueryAdaptiveBroadcast with broadcast reuse — no
-        # second read at runtime), so count the decode kernels instead
-        return p.count("MapInPandas _decode")
-
-    # (1) flat + fielded + NOT batch: all three shapes fold into the
-    # single coverage aggregation over ONE shared postings decode
-    plan_mix = plan_of(search_batch(
-        r, {"a": "spark AND query", "f": "lang:en AND spark",
-            "n": "spark NOT merge"}, k=10, block_prune=False))
-    n_mix = _decodes(plan_mix)
-    # (2) adding a PHRASE must not add a decode either: the text verify
-    # runs over the coverage-passed candidates (the coverage subtree is
-    # referenced twice; its exchange is AQE-reused at runtime), and the
-    # positions plan reads the positions sidecar, never postings
-    plan_ph = plan_of(search_batch(
-        r, {"a": "spark AND query", "p": 'data AND "table hash"'},
-        k=10, text_df=tdf, block_prune=False))
-    n_ph = _decodes(plan_ph)
-    print(f"-- bm25_batch_shared: decodes mix={n_mix} phrase={n_ph} "
-          f"(want 1 each), CartesianProduct="
-          f"{'Y' if 'CartesianProduct' in plan_mix + plan_ph else 'N'}")
-    if n_mix != 1:
-        failures.append(
-            f"bm25_batch_shared: {n_mix} postings decodes in "
-            "flat+fielded+NOT batch (want 1)")
-    if n_ph != 1:
-        failures.append(
-            f"bm25_batch_shared: {n_ph} postings decodes in phrase "
-            "batch (want 1)")
-    if "CartesianProduct" in plan_mix + plan_ph:
-        failures.append("bm25_batch_shared: CartesianProduct")
+    mix = {"a": "spark AND query", "f": "lang:en AND spark", "n": "spark NOT merge"}
+    phrase = {"a": "spark AND query", "p": 'data AND "table hash"'}
+    for name, df in (
+        ("mix", search_batch(r, mix, k=10)),
+        ("phrase", search_batch(r, phrase, k=10, text_df=tdf)),
+        ("phrase_text", search_batch(r, phrase, k=10, text_df=tdf, phrase_via="text")),
+    ):
+        df.collect()
+        p = plan_of(df).split("== Initial Plan ==")[0]
+        n_kernel, n_decode = p.count("MapInPandas _wand"), p.count("MapInPandas _decode")
+        print(f"-- bm25_batch_shared[{name}]: kernel passes={n_kernel} (want 1), "
+              f"decodes={n_decode} (want 0), "
+              f"CartesianProduct={'Y' if 'CartesianProduct' in p else 'N'}")
+        if n_kernel != 1 or n_decode:
+            failures.append(
+                f"bm25_batch_shared[{name}]: {n_kernel} kernel passes, "
+                f"{n_decode} postings decodes (want 1 and 0)")
+        if "CartesianProduct" in p:
+            failures.append(f"bm25_batch_shared[{name}]: CartesianProduct")
 
     check(
         "q1_pricing",
