@@ -1478,8 +1478,11 @@ def _build_wave(
                 post_aggs.append(F.sum(F.when(c, F.col("n"))).alias(f"nd_{s}"))
                 post_aggs.append(F.sum(F.when(c, F.col("sum_tf"))).alias(f"sd_{s}"))
             blocks = blocks.observe(obs_post, *post_aggs)
-        # files stay sorted by term -> parquet row-group min/max stats
-        # prune term lookups
+        # files stay sorted by term, so parquet row-group min/max stats
+        # could prune term lookups; that needs a file of several row
+        # groups, and a shard's postings file is usually one (module
+        # docstring of miru_spark.index.reader): a term-filtered scan
+        # then reads the whole file
         blocks.write.mode("overwrite").option("compression", "zstd") \
             .partitionBy("shard").parquet(post_root)
         phases["postings_write"] = round(time.monotonic() - wall_start, 2)

@@ -44,6 +44,16 @@ _DECODED_SCHEMA = T.StructType(
 )
 
 
+def sql_strings(values) -> str:
+    """``values`` as comma-separated Spark SQL string literals, so a term
+    list costs one ``F.expr`` parse instead of a py4j call per ``F.lit``.
+    ``\\`` and ``'`` are escaped; ``$`` becomes ``\\u0024`` because SQL
+    text passes through Spark's ``${var}`` substitution."""
+    return ", ".join(
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024") + "'"
+        for v in values)
+
+
 def _regexp_required_prefix(pattern: str) -> str:
     """Longest literal prefix every match of ``pattern`` must carry —
     the dictionary-scan prune key. Soundness rules (a wrong prefix
@@ -164,12 +174,13 @@ class IndexReader:
     ) -> DataFrame:
         """Sidecar slice covering the blocks the given terms touch.
 
-        The postings scan prunes by term at the parquet level, but the
-        sidecar has no term column — a bare scan would decode EVERY
-        block's doclens (the whole corpus, per query). The prune is a
-        BROADCAST LEFT-SEMI JOIN of the sidecar against the light
-        (shard, block_key) header relation of the term-pruned postings
-        scan: fully distributed, no driver round-trip in the query path
+        The postings scan filters by term (parquet row groups are
+        skipped only when a file spans several; see the module
+        docstring), but the sidecar has no term column — a bare scan
+        would decode EVERY block's doclens (the whole corpus, per
+        query). The prune is a BROADCAST LEFT-SEMI JOIN of the sidecar
+        against the light (shard, block_key) header relation of the
+        term-pruned postings scan: fully distributed, no driver round-trip in the query path
         (round 2 collected the header set into an ``isin`` literal —
         a scheduler hop per query plus multi-thousand-element predicate
         codegen; VERDICT r2 §wrong #3). The header relation reads two
@@ -212,7 +223,7 @@ class IndexReader:
         df = self._rel("postings")
         conds = []
         if terms:
-            conds.append(F.col("term").isin(list(terms)))
+            conds.append(F.expr(f"term IN ({sql_strings(terms)})"))
         for p in prefixes or []:
             conds.append(F.col("term").startswith(p))
         if conds:

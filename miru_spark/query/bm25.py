@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from miru_spark.index.reader import IndexReader
+from miru_spark.index.reader import IndexReader, sql_strings
 from miru_spark.query import parser as qp
 
 K1_DEFAULT = 1.2
@@ -881,7 +881,8 @@ def search_batch(
     query and unioned in. A query whose filter is unsatisfiable (a
     conjunct absent from the dictionary) is empty without a scan. The
     top-k per query is a window partitioned by query_id — bounded
-    per-group state, no global sort.
+    per-group state, no global sort — and its exchange is the last one:
+    the (query_id, rank) order is sorted in the window's own stage.
     """
     out_schema = "query_id string, rank long, doc_id long, score double"
     kernel: dict[str, tuple] = {}  # qid -> (shape, expansions)
@@ -950,14 +951,18 @@ def search_batch(
         out = F.broadcast(out).join(
             reader.doc_store().select("doc_id", *gather_fields), "doc_id"
         ).select("query_id", "rank", "doc_id", "score", *gather_fields)
-    # presentation order WITHOUT a range exchange: orderBy() samples for
-    # range partitioning — an extra pass for <= N*k result rows. NOTE:
-    # repartition(1), not coalesce(1) — coalesce is narrow and would
-    # merge INTO the window stage, running the whole per-query ranking
-    # (corpus-scale candidate sets) and any gather join as one serial
-    # task; repartition keeps the shuffle boundary so the window stays
-    # parallel and only the <= N*k final rows funnel into one sorter.
-    return out.repartition(1).sortWithinPartitions("query_id", "rank")
+    # presentation order with no exchange of its own: the window's
+    # query_id exchange is the last one. For k up to the optimizer's
+    # windowGroupLimitThreshold, Spark plans a partial WindowGroupLimit
+    # below that exchange, so each map task ships at most k rows per
+    # query and coalesce(1) merges into a window stage whose input is
+    # bounded by partitions x queries x k. A larger k, or a gather join
+    # (it streams the doc store, which must stay parallel), keeps the
+    # shuffle boundary of repartition(1) instead.
+    limited = k <= int(reader.spark.conf.get(
+        "spark.sql.optimizer.windowGroupLimitThreshold"))
+    one = out.coalesce(1) if limited and not gather_fields else out.repartition(1)
+    return one.sortWithinPartitions("query_id", "rank")
 
 
 def _batch_phrase_filter(reader, scored, shapes, *, locale, use_stopwords,
@@ -1003,7 +1008,7 @@ def _batch_phrase_filter(reader, scored, shapes, *, locale, use_stopwords,
         # test_search_batch_phrase_and_fielded_shared pins this.
         scored = scored.repartition(*scored.columns)
         cand = (scored.groupBy("doc_id")
-                .agg(F.max(F.col("query_id").isin(list(shapes))).alias("need"))
+                .agg(F.max(F.expr(f"query_id IN ({sql_strings(shapes)})")).alias("need"))
                 .filter("need").select("doc_id"))
         hit_ix = F.array(*[
             F.when(_phrase_hit_col(list(terms), tcol, eff_stop, slop=slop,
@@ -1363,20 +1368,19 @@ def _wand_topk(
         )
     )
 
-    def _lits(ts):
-        return F.array(*[F.lit(t) for t in ts])
-
     def _answerable(p):
         # every required term and some scoring term present; this also
         # drops sidecar-, removal- and filter-only groups
-        has_score = F.arrays_overlap("present", _lits(p.idf))
+        has_score = f"arrays_overlap(present, array({sql_strings(p.idf)}))"
         if not p.required:
             return has_score
-        return (F.size(F.array_intersect("present", _lits(p.required)))
-                == len(p.required)) & has_score
+        return (f"size(array_intersect(present, array({sql_strings(p.required)})))"
+                f" = {len(p.required)} AND {has_score}")
 
-    grouped = grouped.filter(functools.reduce(
-        lambda x, y: x | y, [_answerable(p) for p in plans.values()]))
+    # one SQL text for the whole batch: a single py4j call, not one per
+    # query and term
+    grouped = grouped.filter(F.expr(
+        " OR ".join(f"({_answerable(p)})" for p in plans.values())))
 
     def _ub(idf_t: float, max_tf: int, min_doclen: int) -> float:
         norm = k1 * (1.0 - b + b * min_doclen / avgdl)

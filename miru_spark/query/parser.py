@@ -347,7 +347,9 @@ class _Parser:
                 boost=boost,
             )
         if ":" in t:
-            if "[" in t or "{" in t:
+            fname, _, value = t.partition(":")
+            # a quoted value is one exact keyword value, braces included
+            if ("[" in t or "{" in t) and not value.startswith('"'):
                 raise QueryParseError(f"bad range {t!r} (expected field:[lo TO hi])")
             if has_tilde:
                 raise QueryParseError(
@@ -356,7 +358,6 @@ class _Parser:
             # fielded term: keyword fields are exact-match (no analysis,
             # KeywordAnalyzer semantics) against the composite
             # "field:value" posting term the builder wrote
-            fname, _, value = t.partition(":")
             if value.startswith("/") and value.endswith("/") and len(value) >= 2:
                 pat = value[1:-1]
                 if not pat:

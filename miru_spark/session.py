@@ -12,6 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """32g, or half the host's physical RAM when that is less: a heap
+    the host cannot back lets the JVM grow until the host kills it."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20
+    except (AttributeError, OSError, ValueError):
+        return "32g"
+    return f"{min(32 << 10, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "miru_spark",
     cores: int | str | None = None,
@@ -47,7 +57,8 @@ def get_spark(
         # pay per-batch Python/IPC overhead ~7x more for nothing (kernels
         # are numpy-vectorized; 64Ki rows is still only a few MB)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("MIRU_SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory",
+                os.environ.get("MIRU_SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # zstd shuffle/spill blocks (lz4 default): the postings exchange

@@ -346,6 +346,9 @@ def test_fielded_quoted_value():
         Term("source:src 1", field="source"),
         Term("source:src2", field="source"),
     ])
+    # a quoted value is one exact keyword value, braces included
+    assert parse_query('tag:"${spark.app.name}"') == Term(
+        "tag:${spark.app.name}", field="tag")
 
 
 def test_field_group_rejects_fuzzy_and_unclosed():

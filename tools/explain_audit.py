@@ -80,7 +80,8 @@ def main() -> int:
 
     # batch serving: flat, fielded, NOT and phrase queries all ride ONE
     # WAND kernel pass over one shared block exchange, with no separate
-    # postings decode. Counted on the executed plan: the text phrase
+    # postings decode, and the mixed batch adds one exchange after the
+    # kernel. Counted on the executed plan: the text phrase
     # verify reads the kernel's answers through an exchange that AQE
     # reuses, which only the final adaptive plan shows
     from miru_spark.query.bm25 import search_batch
@@ -105,6 +106,18 @@ def main() -> int:
                 f"{n_decode} postings decodes (want 1 and 0)")
         if "CartesianProduct" in p:
             failures.append(f"bm25_batch_shared[{name}]: CartesianProduct")
+        if name == "mix":
+            # above the kernel only the window's query_id exchange: the
+            # presentation order coalesces into the window stage
+            above = p[:p.index("MapInPandas _wand")] if n_kernel else p
+            n_above = sum(1 for ln in above.splitlines()
+                          if ln.strip(" +-:").startswith("Exchange "))
+            print(f"-- bm25_batch_shared[mix]: exchanges above kernel={n_above} "
+                  f"(want 1), REPARTITION_BY_NUM={'Y' if 'REPARTITION_BY_NUM' in p else 'N'}")
+            if n_above != 1 or "REPARTITION_BY_NUM" in p:
+                failures.append(
+                    f"bm25_batch_shared[mix]: {n_above} exchanges above the kernel "
+                    "(want 1) or a REPARTITION_BY_NUM exchange")
 
     check(
         "q1_pricing",
