@@ -33,22 +33,38 @@ __version__ = "0.1.0"
 # and before 3.13 each zipimporter re-reads its whole archive directory
 # there: 16 importers (pyspark.zip sub-packages, py4j, the spark-core jar),
 # 26,672 entries, 0.74 of a task's 0.96 s worker setup in cProfile (4 CPUs,
-# Python 3.11.7). Inside a task (a TaskContext is set), re-read only an
-# archive whose (mtime, size) changed since this importer last read it.
+# Python 3.11.7). The guard re-reads only an archive whose (mtime, size)
+# changed since this importer last read it. The worker daemon
+# (miru_spark.worker_daemon, set by session.get_spark) installs it before
+# it forks any worker; a worker started any other way installs it here,
+# when a task first imports this package.
 if sys.version_info < (3, 13):
     import os
     import zipimport
 
-    def _invalidate_if_changed(self, _reread=zipimport.zipimporter.invalidate_caches):
+    def _archive_sig(self):
         try:
             st = os.stat(self.archive)
-            sig = (st.st_mtime_ns, st.st_size)
         except OSError:
-            sig = None
+            return None
+        return (st.st_mtime_ns, st.st_size)
+
+    def _invalidate_if_changed(self, _reread=zipimport.zipimporter.invalidate_caches):
+        sig = _archive_sig(self)
         if sig is None or sig != getattr(self, "_dir_sig", None):
             _reread(self)
             self._dir_sig = sig
 
+    def _install_zip_guard(record: bool = False) -> None:
+        """Install the guard. ``record``: take each live zipimporter's
+        directory as current, so its next invalidation re-reads nothing
+        unless the archive changes."""
+        zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+        if record:
+            for imp in list(sys.path_importer_cache.values()):
+                if isinstance(imp, zipimport.zipimporter):
+                    imp._dir_sig = _archive_sig(imp)
+
     _tc = sys.modules.get("pyspark.taskcontext")
     if _tc is not None and _tc.TaskContext.get() is not None:
-        zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+        _install_zip_guard()

@@ -350,21 +350,11 @@ class IndexReader:
 
     def postings(
         self, terms: list[str] | None = None, prefixes: list[str] | None = None,
-        df_bound: int | None = None, block_floor: int | None = None,
+        df_bound: int | None = None,
     ) -> DataFrame:
-        """Decoded posting rows for the given terms.
-
-        ``block_floor``: restrict to blocks with ``block_key >= floor``
-        (newest doc ranges — block_key is monotone in doc_id). The
-        predicate prunes the postings AND sidecar scans at parquet
-        row-group granularity, the physical basis of the TIME strategy's
-        newest-first early termination."""
-        blocks = self.blocks(terms, prefixes)
-        side = self.pruned_doclens(terms, prefixes, df_bound=df_bound)
-        if block_floor is not None and block_floor > 0:
-            blocks = blocks.filter(F.col("block_key") >= int(block_floor))
-            side = side.filter(F.col("block_key") >= int(block_floor))
-        return self.decode(blocks, sidecar=side)
+        """Decoded posting rows for the given terms."""
+        return self.decode(self.blocks(terms, prefixes),
+                           sidecar=self.pruned_doclens(terms, prefixes, df_bound=df_bound))
 
     def max_block_key(self) -> int:
         """Highest populated block_key, from the shard manifests'

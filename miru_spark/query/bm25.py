@@ -11,25 +11,32 @@ keeping the same candidate-set semantics and total ordering.
 
 Two physical strategies:
 
-- ``search`` (exact): candidate set from boolean algebra over decoded
-  posting doc-sets (AND -> inner join, OR -> union distinct, NOT ->
-  left_anti — the or/and/andNot bitmap family, ``MiruBitmaps.java:87-131``),
-  then score = sum of per-term BM25 contributions grouped by doc_id, then
-  Spark's distributed TakeOrderedAndProject (``orderBy().limit(k)``) —
-  a per-partition bounded heap merged on the driver, exactly the
+- The block-max WAND kernel (``_wand_topk``) answers every query whose
+  answers all hold a scoring term (:func:`_wand_shape` ``filter``), from
+  every entry point: ``search``, ``search_wand``, ``search_wand_query``,
+  ``search_batch``, ``search_time_newest`` and ``facet_counts``. Blocks
+  of all query terms are co-grouped by ``block_key`` (for an AND only
+  doc ranges where *every* required term has postings survive —
+  posting-list intersection at block granularity), then a
+  ``mapInPandas`` pass keeps a per-partition bounded heap and skips
+  decoding any block group whose block-max BM25 upper bound cannot beat
+  the current heap threshold (block-max WAND). The query's boolean
+  filter (fielded masks, NOT terms, nested groups) is decided in the
+  same pass, per block. A batch shares the pass: one exchange over the
+  union of its queries' terms, a heap per query. Per-partition top-k is
+  safe: the global top-k is contained in the union of per-partition
+  top-k's. Masks (constraint, authz), rounding and the TIME and facet
+  orders take every answer of an unbounded run instead of a heap. The
+  kernel's Spark code does not depend on the query: term lists reach it
+  as literal values, so a new query reuses the compiled classes.
+- The candidate join (``_eval_candidates``) answers phrases, pure masks
+  and ungrounded ORs: boolean algebra over decoded posting doc-sets
+  (AND -> inner join, OR -> union distinct, NOT -> left_anti — the
+  or/and/andNot bitmap family, ``MiruBitmaps.java:87-131``), then score
+  = sum of per-term BM25 contributions grouped by doc_id, then Spark's
+  distributed TakeOrderedAndProject (``orderBy().limit(k)``) — a
+  per-partition bounded heap merged on the driver, exactly the
   reference's heap + sorted answer merge (``FullTextAnswerMerger.java``).
-- ``search_wand`` / ``search_wand_query`` / ``search_batch`` (scale
-  path, one kernel: ``_wand_topk``): blocks of all query terms are
-  co-grouped by ``block_key`` (for an AND only doc ranges where *every*
-  required term has postings survive — posting-list intersection at
-  block granularity), then a ``mapInPandas`` pass keeps a per-partition
-  bounded heap and skips decoding any block group whose block-max BM25
-  upper bound cannot beat the current heap threshold (block-max WAND).
-  The query's boolean filter (fielded masks, NOT terms, nested groups)
-  is decided in the same pass, per block. A batch shares the pass: one
-  exchange over the union of its queries' terms, a heap per query.
-  Per-partition top-k is safe: the global top-k is contained in the
-  union of per-partition top-k's.
 """
 
 from __future__ import annotations
@@ -47,6 +54,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from miru_spark.index import codec
+from miru_spark.index.builder import _DOCLENS_SCHEMA, _POSTINGS_SCHEMA
 from miru_spark.index.reader import IndexReader, sql_strings
 from miru_spark.query import parser as qp
 
@@ -315,8 +324,8 @@ def _grounded(node) -> bool:
 def _eval_rejects(node, inside_not: bool = True) -> bool:
     """True when :func:`_eval_candidates` rejects the tree loudly: an And
     of negations only, or a Not directly under an Or, anywhere (with
-    ``inside_not=False``: outside every Not). search() raises on these
-    unless it fuses the tree, so the router must not answer them either."""
+    ``inside_not=False``: outside every Not). :func:`_wand_shape` refuses
+    these, so every entry point raises on them alike."""
     if isinstance(node, qp.Not):
         return inside_not and _eval_rejects(node.child)
     if not isinstance(node, (qp.And, qp.Or)):
@@ -327,142 +336,17 @@ def _eval_rejects(node, inside_not: bool = True) -> bool:
     return any(_eval_rejects(c, inside_not) for c in node.children)
 
 
-def _fusible(node) -> bool:
-    """True when the whole tree is answerable by the SINGLE-PASS coverage
-    plan in :func:`search` (one postings decode + one groupBy instead of
-    a per-leaf candidate join plus a second scoring decode): every leaf,
-    negated ones included, is an unfielded term-bearing leaf (no phrase
-    / MatchAll / fielded mask), the tree is :func:`_grounded` (so the
-    posting rows of the query's own terms are a COMPLETE candidate
-    source; a root Not never is), and no shape :func:`_eval_candidates`
-    rejects sits outside a Not (it still owns those rejections). Any boolean
-    shape goes inside a Not: no rows are ever needed from a negated
-    subtree."""
-    return (
-        all(not isinstance(l, (qp.Phrase, qp.MatchAll)) and l.field is None
-            for l in qp._all_leaves(node))
-        and _grounded(node)
-        and not _eval_rejects(node, inside_not=False)
-    )
-
-
-def _coverage_plan(ast, expansions):
-    """(leaf -> coverage-bit index, term -> sorted bit list) for the
-    fused plan. Leaves are frozen dataclasses, so equal leaves in
-    different tree positions share a bit (same term set, same truth
-    value). A leaf whose expansion is empty gets a bit no term carries —
-    its array_contains is constantly false, exactly the general path's
-    empty candidate set for an unmatched prefix/fuzzy/range."""
-    leaf_ix: dict = {}
-    term_leaves: dict[str, set[int]] = {}
-
-    def walk(n):
-        if isinstance(n, (qp.And, qp.Or)):
-            for c in n.children:
-                walk(c)
-        elif isinstance(n, qp.Not):
-            walk(n.child)
-        else:
-            ix = leaf_ix.setdefault(n, len(leaf_ix))
-            for t in _leaf_terms(n, expansions):
-                term_leaves.setdefault(t, set()).add(ix)
-
-    walk(ast)
-    return leaf_ix, term_leaves
-
-
-def _coverage_expr(node, leaf_ix, covered):
-    """The boolean tree re-expressed over the per-doc covered-bit array:
-    leaf -> array_contains(covered, bit), And/Or/Not -> & | ~."""
-    if isinstance(node, qp.And):
-        cols = [_coverage_expr(c, leaf_ix, covered) for c in node.children]
-        out = cols[0]
-        for c in cols[1:]:
-            out = out & c
-        return out
-    if isinstance(node, qp.Or):
-        cols = [_coverage_expr(c, leaf_ix, covered) for c in node.children]
-        out = cols[0]
-        for c in cols[1:]:
-            out = out | c
-        return out
-    if isinstance(node, qp.Not):
-        return ~_coverage_expr(node.child, leaf_ix, covered)
-    return F.array_contains(covered, leaf_ix[node])
-
-
-def _coverage_agg(
-    reader: IndexReader, ast, expansions, *,
-    idf_by_term: dict | None = None,
-    block_floor: int | None = None, plan: tuple | None = None,
-    k1: float = K1_DEFAULT, b: float = B_DEFAULT,
-) -> DataFrame | None:
-    """The ONE coverage pipeline behind every fused answer: decode the
-    query terms' postings once (``block_floor`` prunes to the newest
-    blocks), join the broadcast (term -> [idf,] leaf-bits) map, fold per-doc covered bits
-    in one groupBy (summing BM25 when ``idf_by_term`` is given — terms
-    absent from the map score 0), and evaluate the boolean tree over the
-    bits. Returns DataFrame(doc_id[, score]); None when NO query term
-    exists in the dictionary (the caller's provably-empty case — never
-    scan with an empty term filter). ``plan`` reuses a precomputed
-    ``(leaf_ix, term_leaves, stats)`` across deepening rounds."""
-    if plan is None:
-        leaf_ix, term_leaves = _coverage_plan(ast, expansions)
-        stats = reader.term_stats(list(term_leaves))
-    else:
-        leaf_ix, term_leaves, stats = plan
-    cov_terms = [t for t in term_leaves if t in stats]
-    if not cov_terms:
-        return None
-    if idf_by_term is not None:
-        map_df = _local_rel(
-            reader.spark,
-            [(t, float(idf_by_term.get(t, 0.0)), sorted(term_leaves[t]))
-             for t in cov_terms],
-            "term string, idf double, leaf_ids array<int>")
-    else:
-        map_df = _local_rel(
-            reader.spark, [(t, sorted(term_leaves[t])) for t in cov_terms],
-            "term string, leaf_ids array<int>")
-    rows = reader.postings(
-        terms=cov_terms,
-        df_bound=sum(stats[t]["df"] for t in cov_terms),
-        block_floor=block_floor,
-    )
-    rows = rows.join(F.broadcast(map_df), "term")
-    covered = F.array_distinct(F.flatten(F.collect_list("leaf_ids"))).alias("covered")
-    if idf_by_term is not None:
-        out = (
-            rows.withColumn(
-                "contrib", _bm25_score_col(F.col("idf"), k1, b, reader.avgdl))
-            .groupBy("doc_id")
-            .agg(F.sum("contrib").alias("score"), covered)
-        )
-    else:
-        out = rows.groupBy("doc_id").agg(covered)
-    out = out.filter(_coverage_expr(ast, leaf_ix, F.col("covered")))
-    return (out.select("doc_id", "score") if idf_by_term is not None
-            else out.select("doc_id"))
-
-
-def _fused_candidate_set(
-    reader: IndexReader, ast, expansions, block_floor: int | None = None,
-    plan: tuple | None = None,
-) -> DataFrame | None:
-    """Score-free twin of :func:`search`'s fused plan: the distinct
-    candidate doc_ids of a fused-eligible boolean tree from ONE postings
-    decode + ONE groupBy, for callers that need candidates without BM25
-    weights (facet_counts, the TIME strategy). None when the tree isn't
-    fused-eligible — callers fall back to :func:`_eval_candidates`,
-    which keeps the loud rejections (pure negation, NOT under OR)."""
-    if not _fusible(ast):
-        return None
-    out = _coverage_agg(
-        reader, ast, expansions, block_floor=block_floor, plan=plan)
-    if out is None:
-        # no query term exists in the dictionary -> empty candidate set
-        return reader.spark.range(0).select(F.col("id").alias("doc_id"))
-    return out
+def _masked(reader: IndexReader, cands: DataFrame, constraint, authz,
+            authz_field: str) -> DataFrame:
+    """The ``constraint`` and ``authz`` masks as semi-joins on a
+    candidate relation (doc_id, ...)."""
+    if constraint is not None:
+        mask = reader.doc_store().filter(constraint).select("doc_id")
+        cands = cands.join(mask, "doc_id", "left_semi")
+    if authz is not None:
+        cands = cands.join(
+            composite_authz(reader, authz, authz_field), "doc_id", "left_semi")
+    return cands
 
 
 def _zero_score_topk(
@@ -470,18 +354,13 @@ def _zero_score_topk(
     constraint=None, authz=None, authz_field="authz",
     after: tuple[float, int] | None = None,
 ) -> DataFrame:
-    """Shared tail of every zero-score (TIME-ordering) answer: the
-    constraint / authz / removal masks, the keyset cursor, and the
-    newest-first top-k. Every row scores 0, so ``after=(s, d)`` reduces
-    to: all rows qualify when s > 0, rows with doc_id < d when s == 0,
-    none when s < 0 (the cursor outranks every zero-score row)."""
-    if constraint is not None:
-        mask = reader.doc_store().filter(constraint).select("doc_id")
-        cands = cands.join(mask, "doc_id", "left_semi")
-    if authz is not None:
-        cands = cands.join(
-            composite_authz(reader, authz, authz_field), "doc_id", "left_semi")
-    cands = _anti_removed(reader, cands)
+    """Shared tail of every zero-score (TIME-ordering) answer over
+    removal-free candidates: the constraint / authz masks, the keyset
+    cursor, and the newest-first top-k. Every row scores 0, so
+    ``after=(s, d)`` reduces to: all rows qualify when s > 0, rows with
+    doc_id < d when s == 0, none when s < 0 (the cursor outranks every
+    zero-score row)."""
+    cands = _masked(reader, cands, constraint, authz, authz_field)
     if after is not None:
         a_score, a_doc = float(after[0]), int(after[1])
         if a_score == 0.0:
@@ -518,6 +397,16 @@ def search(
     """Top-k BM25: returns DataFrame(doc_id long, score double), ordered
     (score desc, doc_id desc), limited to k.
 
+    Plan: a query whose answers all hold a scoring term
+    (:func:`_wand_shape` ``filter``: terms, boosts, expansions, fielded
+    masks and NOT terms under an AND, nested groups) runs the block-max
+    WAND kernel (:func:`_wand_topk`), as :func:`search_wand_query` does.
+    With ``constraint``, ``authz`` or ``round_to`` the kernel keeps every
+    answer instead of a heap: the masks semi-join its answers, and
+    rounding can reorder the top-k. Phrases, pure masks and ORs with a
+    fielded disjunct take the candidate join (:func:`_eval_candidates`)
+    and a scoring decode.
+
     ``text_df``: (doc_id, <text_col>) relation — the doc store or the
     source table — required only when the query contains a quoted
     ``"exact phrase"``. Phrase candidates come from the posting-list AND
@@ -549,17 +438,37 @@ def search(
     ``warc_ts`` BETWEEN range), ANDed into the candidate set exactly
     like the reference's constraints/time-range/authz masks
     (``FullTextCustomQuestion.java:89-114``). The mask is a semi-join
-    against the (slim) doc store, so postings of excluded docs never
-    reach the scorer.
+    against the (slim) doc store.
     """
+    empty = "doc_id long, score double"
     ast = _parse_for_index(reader, query, locale=locale, use_stopwords=use_stopwords)
     if ast is None:
-        return _local_rel(reader.spark, [], "doc_id long, score double")
+        return _local_rel(reader.spark, [], empty)
     expansions = _expand(reader, ast, max_expansion)
+
+    shape = _wand_shape(ast)
+    if shape is not None and shape.kind == "filter":
+        plan, _ = _compile_wand(reader, ast, expansions)
+        if plan is None or not plan.idf or k <= 0:
+            # unsatisfiable, or no scoring term in the dictionary
+            return _gather(reader, _local_rel(reader.spark, [], empty), gather_fields)
+        if constraint is None and authz is None and round_to is None:
+            return _gather(reader, _wand_one(reader, plan, k, k1=k1, b=b, after=after),
+                           gather_fields)
+        scored = _masked(reader, _wand_topk(
+            reader, {"": plan._replace(bounded=False)}, k, k1=k1, b=b,
+        ).select("doc_id", "score"), constraint, authz, authz_field)
+        return _ranked_topk(reader, scored, k, round_to, after, gather_fields)
 
     phrase_ctx = _phrase_ctx_for(
         reader, ast, locale=locale, use_stopwords=use_stopwords,
         text_df=text_df, text_col=text_col, phrase_via=phrase_via)
+    # candidate set: the boolean tree's docs, masked; tombstoned docs
+    # never reach the scorer (the reference ANDs ¬removal into every
+    # answer, FullTextCustomQuestion.java:89)
+    candidates = _anti_removed(reader, _masked(
+        reader, _eval_candidates(reader, ast, expansions, phrase_ctx),
+        constraint, authz, authz_field))
 
     # fielded leaves (``lang:en``) are exact-match candidate MASKS — they
     # intersect the answer like the reference's constraints/authz filters
@@ -581,34 +490,13 @@ def search(
         # score 0 (the reference's prime ordering / TIME strategy,
         # ``FullText.java:222-251``). The keyset cursor applies here
         # too — zero scores make it a pure doc_id cut.
-        cands = _eval_candidates(reader, ast, expansions, phrase_ctx)
-        out = _zero_score_topk(
-            reader, cands, k, constraint=constraint, authz=authz,
-            authz_field=authz_field, after=after)
+        out = _zero_score_topk(reader, candidates, k, after=after)
         return _gather(reader, out, gather_fields, time_order=True)
 
-    # single-pass eligibility: when the whole tree is unfielded
-    # non-phrase leaves under grounded and/or/not, candidates and scores
-    # come from ONE postings decode + ONE groupBy (coverage aggregation)
-    # instead of a per-leaf candidate join plus a second scoring decode.
-    # a bare root-level Not is a pure-negation query, never grounded, so
-    # never fused: the general path rejects it loudly (SearchError, like
-    # Lucene) rather than answering silently empty.
-    fused = _fusible(ast)
-    if fused:
-        leaf_ix, term_leaves = _coverage_plan(ast, expansions)
-        all_terms = list(term_leaves)  # includes negated leaves' terms
-        stats = reader.term_stats(all_terms)
-    else:
-        stats = reader.term_stats(pos_terms)
+    stats = reader.term_stats(pos_terms)
     # Lucene-classic `term^N` boost: the clause weight multiplies the
-    # term's score contribution (BoostQuery semantics). BM25's per-term
-    # contribution is linear in idf, so the boost folds into the
-    # broadcast idf relation; a term reached through several leaves
-    # (e.g. `spark^2 OR spark`) scores once with the max boost, matching
-    # this engine's dedup-terms-then-sum scoring model. The max ranges
-    # over the leaves that CONTAIN the term only — no implicit 1.0 floor,
-    # so a down-boost (`noise^0.1`, N < 1) genuinely down-weights.
+    # term's score contribution (BoostQuery semantics), folded into the
+    # broadcast idf relation with the kernel's rule (_max_boost_fold).
     # NB: the weight variable must NOT be named `b` — that is the BM25
     # length-normalization parameter in this scope.
     tboost = _max_boost_fold(
@@ -619,53 +507,7 @@ def search(
         (t, reader.idf(stats[t]["df"]) * tboost.get(t, 1.0))
         for t in pos_terms if t in stats
     ]
-    idf_df = _local_rel(reader.spark, idf_rows, "term string, idf double")
-
-    if fused and idf_rows:
-        # fused plan: decode the query terms' postings ONCE; each row
-        # joins the broadcast (term, idf, leaf-bits) map (negated-leaf-
-        # only terms carry idf 0 — present for coverage, scoreless);
-        # one groupBy sums BM25 and folds the covered-bit set; the
-        # boolean tree evaluates over the bits. Identical result set and
-        # scores to the general path (dedup-terms-then-sum model), one
-        # decode and one exchange instead of three decodes and two.
-        # (idf_rows non-empty => >=1 indexed term => never None here)
-        scored = _coverage_agg(
-            reader, ast, expansions, idf_by_term=dict(idf_rows),
-            plan=(leaf_ix, term_leaves, stats), k1=k1, b=b)
-        if constraint is not None:
-            scored = scored.join(
-                reader.doc_store().filter(constraint).select("doc_id"),
-                "doc_id", "left_semi")
-        if authz is not None:
-            scored = scored.join(
-                composite_authz(reader, authz, authz_field), "doc_id", "left_semi")
-        scored = _anti_removed(reader, scored)
-        candidates = None
-    elif fused:
-        # fused tree, but no positive term exists in the dictionary:
-        # provably empty (every satisfying doc contains a positive leaf
-        # term — the _fusible invariant). Answer directly rather than
-        # routing to _eval_candidates, whose loud shape rejections don't
-        # cover every fused-only shape — the general path must never be
-        # reached on data-dependent conditions for a fused query.
-        scored = _local_rel(reader.spark, [], "doc_id long, score double")
-        candidates = None
-    else:
-        candidates = _eval_candidates(reader, ast, expansions, phrase_ctx)
-        if constraint is not None:
-            mask = reader.doc_store().filter(constraint).select("doc_id")
-            candidates = candidates.join(mask, "doc_id", "left_semi")
-        if authz is not None:
-            candidates = candidates.join(
-                composite_authz(reader, authz, authz_field), "doc_id", "left_semi")
-        # removal mask: tombstoned docs never reach the scorer (the
-        # reference ANDs ¬removal into every answer, FullTextCustomQuestion.java:89)
-        candidates = _anti_removed(reader, candidates)
-
-    if candidates is None:
-        pass  # fused: scored is complete
-    elif not idf_rows:
+    if not idf_rows:
         # no query term exists in the dictionary: skip the scoring scan
         # entirely — postings(terms=[]) would otherwise read the WHOLE
         # postings relation (an empty isin is no filter), a corpus scan
@@ -673,6 +515,7 @@ def search(
         # (mask-admitted disjuncts) rank as score 0.
         scored = candidates.withColumn("score", F.lit(0.0))
     else:
+        idf_df = _local_rel(reader.spark, idf_rows, "term string, idf double")
         scored = (
             reader.postings(
                 terms=[t for t, _ in idf_rows],
@@ -689,9 +532,7 @@ def search(
             # disjunct has no scoring-term posting row — complete it with
             # score 0 (matching the pure-mask path and facet_counts,
             # which both count such docs). Left join from the already-
-            # masked candidate set; scored docs keep their BM25 sum. A
-            # grounded tree's every answer holds a scoring posting, so
-            # it needs no completion.
+            # masked candidate set; scored docs keep their BM25 sum.
             scored = (
                 candidates.join(scored, "doc_id", "left")
                 .select(
@@ -699,6 +540,13 @@ def search(
                     F.coalesce("score", F.lit(0.0)).alias("score"),
                 )
             )
+    return _ranked_topk(reader, scored, k, round_to, after, gather_fields)
+
+
+def _ranked_topk(reader: IndexReader, scored: DataFrame, k: int, round_to,
+                 after, gather_fields) -> DataFrame:
+    """search()'s tail over every (doc_id, score) answer: rounding, the
+    keyset cursor on the rounded score, the top-k and the gather."""
     if round_to is not None:
         scored = scored.withColumn("score", F.round("score", round_to))
     if after is not None:
@@ -798,8 +646,9 @@ def facet_counts(
     gather`` over the answer bitmap). Returns DataFrame(value, n),
     ordered (n desc, value) and limited to k.
 
-    Plan: boolean candidate evaluation (same index-side machinery as
-    :func:`search` — no scoring pass), removals anti-joined, one
+    Plan: the query's docs from one unbounded WAND kernel run (a
+    ``filter`` shape, :func:`_wand_shape`) or the candidate join
+    (:func:`_eval_candidates`, removals anti-joined), then one
     semi-pruned doc-store join, one partial-aggregated groupBy, top-k
     via TakeOrderedAndProject. Cost is O(candidates), never a corpus
     scan."""
@@ -807,13 +656,17 @@ def facet_counts(
     if ast is None:
         return _local_rel(reader.spark, [], "value string, n long")
     expansions = _expand(reader, ast, max_expansion)
-    phrase_ctx = _phrase_ctx_for(
-        reader, ast, locale=locale, use_stopwords=use_stopwords,
-        text_df=text_df, text_col=text_col, phrase_via=phrase_via)
-    cands = _fused_candidate_set(reader, ast, expansions)
-    if cands is None:
-        cands = _eval_candidates(reader, ast, expansions, phrase_ctx)
-    cands = _anti_removed(reader, cands)
+    shape = _wand_shape(ast)
+    if shape is not None and shape.kind == "filter":
+        plan, _ = _compile_wand(reader, ast, expansions)
+        if plan is None or not plan.idf:
+            return _local_rel(reader.spark, [], "value string, n long")
+        cands = _kernel_ids(reader, plan)
+    else:
+        phrase_ctx = _phrase_ctx_for(
+            reader, ast, locale=locale, use_stopwords=use_stopwords,
+            text_df=text_df, text_col=text_col, phrase_via=phrase_via)
+        cands = _anti_removed(reader, _eval_candidates(reader, ast, expansions, phrase_ctx))
     # docs missing the facet field are SKIPPED, as Lucene/miru faceting
     # does — without this a corpus-scale null bucket can occupy the top-k
     return (
@@ -1047,69 +900,66 @@ def search_time_newest(
     ``after``: the same keyset cursor as :func:`search` (zero scores
     make it a pure doc_id cut).
 
-    Fused-eligible trees answer with newest-first EARLY TERMINATION —
-    the reference's descending-iterator behavior made physical: the
-    postings/sidecar scans are pruned to the newest blocks
+    A ``filter`` shape (:func:`_wand_shape`) answers with newest-first
+    EARLY TERMINATION — the reference's descending-iterator behavior
+    made physical: each round is one unbounded WAND kernel run whose
+    postings and sidecar scans are pruned to the newest blocks
     (``block_key >= floor``, a parquet row-group predicate), the window
-    quadrupling until k answers survive the constraint/authz/removal
-    masks or the index is exhausted. Doc ids are monotone in block_key,
-    so a full window's top-k is the global top-k; at 10^12 docs a TIME
-    query touches O(k) recent blocks, never the full posting lists.
-    Per-doc coverage stays complete under the floor because every
-    posting of a doc (any term) lives in the doc's own block.
-    ``first_span`` seeds the window (blocks); tests shrink it to force
-    deepening rounds."""
+    quadrupling until k answers survive the constraint/authz masks or
+    the index is exhausted. Doc ids are monotone in block_key, so a full
+    window's top-k is the global top-k; at 10^12 docs a TIME query
+    touches O(k) recent blocks, never the full posting lists. The kernel
+    decides each doc within its own block, where every posting of the
+    doc lives, so the floor never changes a doc's membership. Window
+    sizes are powers of 4, so an index has only a few distinct floors
+    and the scans' compiled code is reused across queries.
+    ``first_span`` seeds the window (blocks, rounded up to a power of
+    4); tests shrink it to force deepening rounds. Other shapes take
+    the candidate join (:func:`_eval_candidates`)."""
     ast = _parse_for_index(reader, query, locale=locale, use_stopwords=use_stopwords)
     if ast is None:
         return _local_rel(reader.spark, [], "doc_id long, score double")
     expansions = _expand(reader, ast, max_expansion)
-
-    if _fusible(ast):
-        hi = reader.max_block_key()
-        total = hi + 1
-        # one dictionary collect + one broadcast map, shared by every
-        # deepening round (only the block floor varies)
-        leaf_ix, term_leaves = _coverage_plan(ast, expansions)
-        stats = reader.term_stats(list(term_leaves))
-        plan = (leaf_ix, term_leaves, stats)
-        if first_span:
-            span = int(first_span)
-        else:
-            # seed the window so ~4k candidates are expected inside it:
-            # Σdf over the query's terms spread across all blocks is an
-            # upper-bound density (exact for single terms, optimistic
-            # for ANDs — the x4 deepening absorbs the miss)
-            density = sum(s["df"] for s in stats.values()) / max(total, 1)
-            span = max(1, math.ceil(4 * k / max(density, 0.25)))
-        for _ in range(max_rounds):
-            floor = max(0, hi - span + 1)
-            cands = _fused_candidate_set(
-                reader, ast, expansions, block_floor=floor or None, plan=plan)
-            # one bounded collect per round: the (<= k, newest-first)
-            # answer comes back through Arrow and is served as a local
-            # relation (a LocalTableScan), so the caller's collect runs
-            # no job
-            out = _zero_score_topk(
-                reader, cands, k, constraint=constraint, authz=authz,
-                authz_field=authz_field, after=after,
-            ).toArrow()
-            if floor == 0 or out.num_rows >= k:
-                return reader.spark.createDataFrame(out)
-            span *= 4
-        # pathological miss-rate (masks rejecting nearly everything):
-        # answer from the full index rather than looping further
-        cands = _fused_candidate_set(reader, ast, expansions, plan=plan)
-    else:
-        # phrase-bearing (or otherwise non-fused) trees: the same phrase
+    masks = {"constraint": constraint, "authz": authz, "authz_field": authz_field,
+             "after": after}
+    shape = _wand_shape(ast)
+    if shape is None or shape.kind != "filter":
+        # phrase-bearing (or otherwise non-kernel) trees: the same phrase
         # context every other entry point builds — positional sidecar
         # when usable, text verify otherwise, loud error when neither
         phrase_ctx = _phrase_ctx_for(
             reader, ast, locale=locale, use_stopwords=use_stopwords,
             text_df=text_df, text_col=text_col, phrase_via=phrase_via)
-        cands = _eval_candidates(reader, ast, expansions, phrase_ctx)
-    return _zero_score_topk(
-        reader, cands, k, constraint=constraint, authz=authz,
-        authz_field=authz_field, after=after)
+        cands = _anti_removed(reader, _eval_candidates(reader, ast, expansions, phrase_ctx))
+        return _zero_score_topk(reader, cands, k, **masks)
+    plan, stats = _compile_wand(reader, ast, expansions)
+    if plan is None or not plan.idf:
+        return _local_rel(reader.spark, [], "doc_id long, score double")
+    hi = reader.max_block_key()
+    if first_span:
+        want = int(first_span)
+    else:
+        # seed the window so ~4k candidates are expected inside it: Σdf
+        # over the scoring terms spread across all blocks upper-bounds
+        # the answers' density (every answer holds a scoring term)
+        density = sum(stats[t]["df"] for t in plan.idf) / (hi + 1)
+        want = max(1, math.ceil(4 * k / max(density, 0.25)))
+    span = 1
+    while span < want:
+        span *= 4
+    for _ in range(max_rounds):
+        floor = max(0, hi - span + 1)
+        # one bounded collect per round: the (<= k, newest-first) answer
+        # comes back through Arrow and is served as a local relation (a
+        # LocalTableScan), so the caller's collect runs no job
+        out = _zero_score_topk(
+            reader, _kernel_ids(reader, plan, block_floor=floor), k, **masks).toArrow()
+        if floor == 0 or out.num_rows >= k:
+            return reader.spark.createDataFrame(out)
+        span *= 4
+    # pathological miss-rate (masks rejecting nearly everything): answer
+    # from the full index rather than looping further
+    return _zero_score_topk(reader, _kernel_ids(reader, plan), k, **masks)
 
 
 # ----------------------------------------------------------------------
@@ -1261,9 +1111,24 @@ def _compile_wand(reader: IndexReader, kernel, expansions):
     ), stats
 
 
+# The kernel's block-assembly struct types, from the builder's fixed
+# schemas: a postings block and a doclens sidecar block
+_PB_COLS = ("term", "n", "max_tf", "codec", "doc_ids", "tfs")
+_SB_COLS = ("doc_ids", "doclens")
+_PB_TYPE = T.StructType([_POSTINGS_SCHEMA[c] for c in _PB_COLS]).simpleString()
+_SB_TYPE = T.StructType([_DOCLENS_SCHEMA[c] for c in _SB_COLS]).simpleString()
+
+
+def _sql_lits(values) -> str:
+    """:func:`sql_strings` for a ``spark.sql(text, **dfs)`` text, which
+    passes through ``str.format``: braces in a value are doubled."""
+    return sql_strings(values).replace("{", "{{").replace("}", "}}")
+
+
 def _wand_topk(
     reader: IndexReader, plans: dict[str, _WandPlan], k: int, *,
     k1: float, b: float, after: tuple[float, int] | None = None,
+    block_floor: int | None = None,
 ) -> DataFrame:
     """The block-max WAND kernel over a batch of compiled queries:
     DataFrame(query_id, doc_id, score) holding, per partition, each
@@ -1281,18 +1146,21 @@ def _wand_topk(
     block. The upper bound sums scoring terms only, so it stays
     admissible, and a heap holds only docs that pass the filter: one
     run with ``k`` is exact. ``after``: keyset cursor, applied to every
-    query.
+    query. ``block_floor``: only blocks with ``block_key >= floor``
+    (the TIME strategy's newest-first window).
+
+    The plan is one SQL text, and its generated code does not depend on
+    the queries: the group prefilter reads the per-query term lists
+    from one array literal, which Spark passes to the generated code as
+    a value. Only the scan's ``term IN (...)`` list, which keeps the
+    parquet pushdown, compiles once per term count (up to the
+    optimizer's InSet threshold) and once per floor.
     """
     terms = list(dict.fromkeys(t for p in plans.values() for t in p.idf))
     scoring = set(terms)
     filt = [t for t in dict.fromkeys(
         t for p in plans.values() for t in (*p.required, *_tree_terms(p.tree)))
         if t not in scoring]
-    avgdl, block_bits = reader.avgdl, reader.block_bits
-    # continuation cursor: only items strictly below it in the
-    # (score desc, doc_id desc) total order are answers
-    cursor = (float(after[0]), int(after[1])) if after is not None else None
-
     # ONE exchange for the whole block assembly: postings blocks (scoring
     # and filter terms), the doclens sidecar, and the removal log union
     # into a single relation tagged by nullable struct columns, then ONE
@@ -1317,228 +1185,215 @@ def _wand_topk(
     # upper bound. pruned_doclens pushes the scoring terms' block set
     # down to the sidecar scan via a broadcast semi-join (the sidecar
     # has no term column of its own).
-    posts_raw = reader.blocks(terms=terms + filt)
-    pb_t = posts_raw.select(
-        F.struct("term", "n", "max_tf", "codec", "doc_ids", "tfs").alias("pb")
-    ).schema["pb"].dataType.simpleString()
-    side_raw = reader.pruned_doclens(
-        terms=terms, df_bound=sum(reader.term_stats(terms)[t]["df"] for t in terms)
-    )
-    sb_t = side_raw.select(
-        F.struct("doc_ids", "doclens").alias("sb")
-    ).schema["sb"].dataType.simpleString()
-    posts = posts_raw.select(
-        "block_key",
-        F.struct("term", "n", "max_tf", "codec", "doc_ids", "tfs").alias("pb"),
-        F.lit(None).cast(sb_t).alias("sb"),
-        F.lit(None).cast("int").alias("mdl"),
-        F.lit(None).cast("long").alias("rm_id"),
-    )
-    side = side_raw.select(
-        "block_key",
-        F.lit(None).cast(pb_t).alias("pb"),
-        F.struct("doc_ids", "doclens").alias("sb"),
-        F.col("min_doclen").cast("int").alias("mdl"),
-        F.lit(None).cast("long").alias("rm_id"),
-    )
-    # removal mask rides the same exchange (NOT a driver-collected
+    #
+    # The removal mask rides the same exchange (NOT a driver-collected
     # closure — the removal log is usually a small delta, but nothing
     # bounds it at 100x scale): each surviving block group carries only
     # ITS removed ids, sorted for searchsorted. Whether a removal log
     # exists is decided here, when the query is built (as _anti_removed
     # does): a removal-free index unions no removal relation at all.
-    assembled = posts.unionByName(side)
+    rels = {
+        "posts": reader.blocks(terms=terms + filt),
+        "side": reader.pruned_doclens(
+            terms=terms, df_bound=sum(reader.term_stats(terms)[t]["df"] for t in terms)),
+    }
+    floor = f" WHERE block_key >= {int(block_floor)}" if block_floor else ""
+    pb = "named_struct(" + ", ".join(f"'{c}', {c}" for c in _PB_COLS) + ")"
+    sb = "named_struct(" + ", ".join(f"'{c}', {c}" for c in _SB_COLS) + ")"
+    parts = [
+        f"SELECT block_key, {pb} AS pb, CAST(NULL AS {_SB_TYPE}) AS sb,"
+        f" CAST(NULL AS INT) AS mdl, CAST(NULL AS BIGINT) AS rm_id FROM {{posts}}{floor}",
+        f"SELECT block_key, CAST(NULL AS {_PB_TYPE}), {sb}, min_doclen,"
+        f" CAST(NULL AS BIGINT) FROM {{side}}{floor}",
+    ]
     if reader.has_removals():
-        assembled = assembled.unionByName(reader.removed_docs().select(
-            F.shiftright(F.col("doc_id"), block_bits).alias("block_key"),
-            F.lit(None).cast(pb_t).alias("pb"),
-            F.lit(None).cast(sb_t).alias("sb"),
-            F.lit(None).cast("int").alias("mdl"),
-            F.col("doc_id").alias("rm_id"),
-        ))
-    grouped = (
-        assembled
-        .groupBy("block_key")
-        .agg(
-            F.collect_set("pb.term").alias("present"),
-            F.collect_list("pb").alias("blocks"),
-            F.collect_list("sb").alias("side"),
-            F.min("mdl").alias("min_doclen"),
-            F.sort_array(F.collect_list("rm_id")).alias("removed_ids"),
-        )
-    )
+        rels["removed"] = reader.removed_docs()
+        parts.append(
+            f"SELECT shiftright(doc_id, {reader.block_bits}), CAST(NULL AS {_PB_TYPE}),"
+            f" CAST(NULL AS {_SB_TYPE}), CAST(NULL AS INT), doc_id FROM {{removed}}")
+    # a group is answerable for a query when every required term (r) and
+    # some scoring term (s) is present; this also drops sidecar-,
+    # removal- and filter-only groups
+    answerable = ", ".join(
+        f"named_struct('r', CAST(array({_sql_lits(p.required)}) AS array<string>),"
+        f" 's', array({_sql_lits(p.idf)}))" for p in plans.values())
+    grouped = reader.spark.sql(
+        "SELECT block_key, blocks, side, min_doclen, removed_ids FROM ("
+        " SELECT block_key, collect_set(pb.term) AS present,"
+        " collect_list(pb) AS blocks, collect_list(sb) AS side,"
+        " min(mdl) AS min_doclen, sort_array(collect_list(rm_id)) AS removed_ids"
+        f" FROM ({' UNION ALL '.join(parts)}) GROUP BY block_key)"
+        f" WHERE exists(array({answerable}), p ->"
+        " size(array_intersect(present, p.r)) = size(p.r)"
+        " AND arrays_overlap(present, p.s))",
+        **rels)
+    kernel = functools.partial(
+        _wand, plans=plans, k=k, k1=k1, b=b, avgdl=reader.avgdl,
+        block_bits=reader.block_bits,
+        # continuation cursor: only items strictly below it in the
+        # (score desc, doc_id desc) total order are answers
+        cursor=(float(after[0]), int(after[1])) if after is not None else None)
+    kernel.__name__ = "_wand"  # the plan's MapInPandas node names it
+    # non-null columns: no inferred isnotnull filter lands between the
+    # kernel and a consumer (see _batch_phrase_filter's exchange reuse)
+    return grouped.mapInPandas(
+        kernel, schema="query_id string not null, doc_id long not null, score double not null")
 
-    def _answerable(p):
-        # every required term and some scoring term present; this also
-        # drops sidecar-, removal- and filter-only groups
-        has_score = f"arrays_overlap(present, array({sql_strings(p.idf)}))"
-        if not p.required:
-            return has_score
-        return (f"size(array_intersect(present, array({sql_strings(p.required)})))"
-                f" = {len(p.required)} AND {has_score}")
 
-    # one SQL text for the whole batch: a single py4j call, not one per
-    # query and term
-    grouped = grouped.filter(F.expr(
-        " OR ".join(f"({_answerable(p)})" for p in plans.values())))
+def _member(ids, cand):
+    pos = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
+    return ids[pos] == cand
+
+
+def _wand(pdf_iter, *, plans, k, k1, b, avgdl, block_bits, cursor):
+    """The Python side of :func:`_wand_topk`, bound by
+    ``functools.partial``: a module-level function pickles by reference."""
+    scoring = {t for p in plans.values() for t in p.idf}
 
     def _ub(idf_t: float, max_tf: int, min_doclen: int) -> float:
         norm = k1 * (1.0 - b + b * min_doclen / avgdl)
         return idf_t * max_tf * (k1 + 1.0) / (max_tf + norm)
 
-    from miru_spark.index import codec
+    # per query: a min-heap of (score, doc_id), size <= k (bounded),
+    # or the (doc_ids, scores) chunks of every answer (unbounded)
+    found: dict[str, list] = {q: [] for q in plans}
 
-    def _member(ids, cand):
-        pos = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
-        return ids[pos] == cand
+    for pdf in pdf_iter:
+        for block_key, blocks, rem_ids, min_dl, side_chunks in zip(
+            pdf["block_key"], pdf["blocks"], pdf["removed_ids"],
+            pdf["min_doclen"], pdf["side"]
+        ):
+            base = int(block_key) << block_bits
+            by_term: dict[str, list] = {}
+            for blk in blocks:
+                by_term.setdefault(blk["term"], []).append(blk)
+            max_tf = {t: max(int(blk["max_tf"]) for blk in bl)
+                      for t, bl in by_term.items() if t in scoring}
+            decoded: dict[str, tuple] = {}
 
-    def _wand(pdf_iter):
-        # per query: a min-heap of (score, doc_id), size <= k (bounded),
-        # or the (doc_ids, scores) chunks of every answer (unbounded)
-        found: dict[str, list] = {q: [] for q in plans}
-
-        for pdf in pdf_iter:
-            for block_key, blocks, rem_ids, min_dl, side_chunks in zip(
-                pdf["block_key"], pdf["blocks"], pdf["removed_ids"],
-                pdf["min_doclen"], pdf["side"]
-            ):
-                base = int(block_key) << block_bits
-                by_term: dict[str, list] = {}
-                for blk in blocks:
-                    by_term.setdefault(blk["term"], []).append(blk)
-                max_tf = {t: max(int(blk["max_tf"]) for blk in bl)
-                          for t, bl in by_term.items() if t in scoring}
-                decoded: dict[str, tuple] = {}
-
-                def dec(t):
-                    # a term's postings, decoded once per group and only
-                    # for a query that survives the skip; tf only for a
-                    # scoring term. Same-key blocks from different
-                    # shards (disjoint ids in one doc range) concat+sort
-                    if t not in decoded:
-                        chunks = [(
-                            codec.decode_block_docids_codec(
-                                blk["doc_ids"], base, int(blk["codec"])),
-                            codec.decode_counts(blk["tfs"]) if t in scoring else None,
-                        ) for blk in by_term[t]]
-                        if len(chunks) == 1:
-                            decoded[t] = chunks[0]
-                        else:
-                            ids = np.concatenate([c[0] for c in chunks])
-                            order = np.argsort(ids, kind="stable")
-                            tfs = (np.concatenate([c[1] for c in chunks])[order]
-                                   if t in scoring else None)
-                            decoded[t] = (ids[order], tfs)
-                    return decoded[t]
-
-                def _eval(node, cand):
-                    if node[0] == "t":
-                        return (_member(dec(node[1])[0], cand) if node[1] in by_term
-                                else np.zeros(cand.size, dtype=bool))
-                    if node[0] == "not":
-                        return ~_eval(node[1], cand)
-                    fold = np.logical_and if node[0] == "and" else np.logical_or
-                    return fold.reduce([_eval(c, cand) for c in node[1]])
-
-                removed = side = None
-                for q, p in plans.items():
-                    present = [t for t in p.idf if t in by_term]
-                    if not present or any(t not in by_term for t in p.required):
-                        continue
-                    heap = found[q]
-                    if p.bounded and len(heap) >= k:
-                        ub = sum(_ub(p.idf[t], max_tf[t], int(min_dl)) for t in present)
-                        # STRICT compare: the heap's total order is
-                        # (score, doc_id) — a block whose bound exactly
-                        # ties theta can still hold a doc scoring theta
-                        # with a higher doc_id, which outranks heap[0] on
-                        # the tie-break. `<=` would prune it and break
-                        # rank-identity with search() on uniform-score
-                        # corpora.
-                        if ub < heap[0][0]:
-                            continue  # block-max skip: cannot beat this top-k
-                    if p.required:
-                        # intersect the required terms' ids, smallest first
-                        req = sorted((dec(t)[0] for t in p.required), key=len)
-                        cand = req[0]
-                        for ids in req[1:]:
-                            cand = np.intersect1d(cand, ids, assume_unique=True)
+            def dec(t):
+                # a term's postings, decoded once per group and only
+                # for a query that survives the skip; tf only for a
+                # scoring term. Same-key blocks from different
+                # shards (disjoint ids in one doc range) concat+sort
+                if t not in decoded:
+                    chunks = [(
+                        codec.decode_block_docids_codec(
+                            blk["doc_ids"], base, int(blk["codec"])),
+                        codec.decode_counts(blk["tfs"]) if t in scoring else None,
+                    ) for blk in by_term[t]]
+                    if len(chunks) == 1:
+                        decoded[t] = chunks[0]
                     else:
-                        cand = np.unique(np.concatenate([dec(t)[0] for t in present]))
-                    if p.tree is not None and cand.size:
-                        cand = cand[_eval(p.tree, cand)]
-                    if removed is None:
-                        # null from an absent removal log arrives as None/NaN
-                        removed = (
-                            np.asarray(rem_ids, dtype=np.int64)
-                            if isinstance(rem_ids, (list, np.ndarray)) and len(rem_ids)
-                            else np.empty(0, dtype=np.int64)
-                        )
-                    if removed.size and cand.size:
-                        cand = cand[~_member(removed, cand)]
-                    if cand.size == 0:
-                        continue
-                    if side is None:
-                        # sidecar doclens: one decode per block group,
-                        # shared by every query — doclen depends only on
-                        # the doc, so it is NOT fetched per term
-                        s_parts = [
-                            (
-                                np.cumsum(
-                                    codec.varbyte_decode(sc["doc_ids"]).astype(np.int64)
-                                ) + base,
-                                codec.decode_counts(sc["doclens"]),
-                            )
-                            for sc in side_chunks
-                        ]
-                        side_ids = np.concatenate([c[0] for c in s_parts])
-                        side_dls = np.concatenate([c[1] for c in s_parts])
-                        if len(s_parts) > 1:
-                            s_order = np.argsort(side_ids, kind="stable")
-                            side_ids, side_dls = side_ids[s_order], side_dls[s_order]
-                        side = (side_ids, side_dls)
-                    dl = side[1][np.searchsorted(side[0], cand)].astype(np.float64)
-                    norm = k1 * (1.0 - b + b * dl / avgdl)
-                    scores = np.zeros(cand.size, dtype=np.float64)
-                    for t in present:
-                        ids, tfs = dec(t)
-                        pos = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
-                        tf = tfs[pos].astype(np.float64)
-                        contrib = p.idf[t] * tf * (k1 + 1.0) / (tf + norm)
-                        scores += np.where(ids[pos] == cand, contrib, 0.0)
-                    if cursor is not None:
-                        # keyset continuation: drop what was already served
-                        below = (scores < cursor[0]) | (
-                            (scores == cursor[0]) & (cand < cursor[1]))
-                        cand, scores = cand[below], scores[below]
-                    if not p.bounded:
-                        heap.append((cand, scores))
-                        continue
-                    for s, d in zip(scores, cand):
-                        item = (float(s), int(d))
-                        if len(heap) < k:
-                            heapq.heappush(heap, item)
-                        elif item > heap[0]:
-                            heapq.heapreplace(heap, item)
-        qids, ids, scores = [], [], []
-        for q, got in found.items():
-            if plans[q].bounded:
-                got = [(np.array([d for _, d in got], dtype=np.int64),
-                        np.array([s for s, _ in got], dtype=np.float64))]
-            for d, s in got:
-                qids.extend([q] * d.size)
-                ids.append(d)
-                scores.append(s)
-        yield pd.DataFrame({
-            "query_id": pd.Series(qids, dtype=object),
-            "doc_id": np.concatenate(ids) if ids else np.empty(0, np.int64),
-            "score": np.concatenate(scores) if scores else np.empty(0, np.float64),
-        }).astype({"doc_id": "int64", "score": "float64"})
+                        ids = np.concatenate([c[0] for c in chunks])
+                        order = np.argsort(ids, kind="stable")
+                        tfs = (np.concatenate([c[1] for c in chunks])[order]
+                               if t in scoring else None)
+                        decoded[t] = (ids[order], tfs)
+                return decoded[t]
 
-    # non-null columns: no inferred isnotnull filter lands between the
-    # kernel and a consumer (see _batch_phrase_filter's exchange reuse)
-    return grouped.mapInPandas(
-        _wand, schema="query_id string not null, doc_id long not null, score double not null")
+            def _eval(node, cand):
+                if node[0] == "t":
+                    return (_member(dec(node[1])[0], cand) if node[1] in by_term
+                            else np.zeros(cand.size, dtype=bool))
+                if node[0] == "not":
+                    return ~_eval(node[1], cand)
+                fold = np.logical_and if node[0] == "and" else np.logical_or
+                return fold.reduce([_eval(c, cand) for c in node[1]])
+
+            removed = side = None
+            for q, p in plans.items():
+                present = [t for t in p.idf if t in by_term]
+                if not present or any(t not in by_term for t in p.required):
+                    continue
+                heap = found[q]
+                if p.bounded and len(heap) >= k:
+                    ub = sum(_ub(p.idf[t], max_tf[t], int(min_dl)) for t in present)
+                    # STRICT compare: the heap's total order is
+                    # (score, doc_id) — a block whose bound exactly
+                    # ties theta can still hold a doc scoring theta
+                    # with a higher doc_id, which outranks heap[0] on
+                    # the tie-break. `<=` would prune it and break
+                    # rank-identity on uniform-score corpora.
+                    if ub < heap[0][0]:
+                        continue  # block-max skip: cannot beat this top-k
+                if p.required:
+                    # intersect the required terms' ids, smallest first
+                    req = sorted((dec(t)[0] for t in p.required), key=len)
+                    cand = req[0]
+                    for ids in req[1:]:
+                        cand = np.intersect1d(cand, ids, assume_unique=True)
+                else:
+                    cand = np.unique(np.concatenate([dec(t)[0] for t in present]))
+                if p.tree is not None and cand.size:
+                    cand = cand[_eval(p.tree, cand)]
+                if removed is None:
+                    # null from an absent removal log arrives as None/NaN
+                    removed = (
+                        np.asarray(rem_ids, dtype=np.int64)
+                        if isinstance(rem_ids, (list, np.ndarray)) and len(rem_ids)
+                        else np.empty(0, dtype=np.int64)
+                    )
+                if removed.size and cand.size:
+                    cand = cand[~_member(removed, cand)]
+                if cand.size == 0:
+                    continue
+                if side is None:
+                    # sidecar doclens: one decode per block group,
+                    # shared by every query — doclen depends only on
+                    # the doc, so it is NOT fetched per term
+                    s_parts = [
+                        (
+                            np.cumsum(
+                                codec.varbyte_decode(sc["doc_ids"]).astype(np.int64)
+                            ) + base,
+                            codec.decode_counts(sc["doclens"]),
+                        )
+                        for sc in side_chunks
+                    ]
+                    side_ids = np.concatenate([c[0] for c in s_parts])
+                    side_dls = np.concatenate([c[1] for c in s_parts])
+                    if len(s_parts) > 1:
+                        s_order = np.argsort(side_ids, kind="stable")
+                        side_ids, side_dls = side_ids[s_order], side_dls[s_order]
+                    side = (side_ids, side_dls)
+                dl = side[1][np.searchsorted(side[0], cand)].astype(np.float64)
+                norm = k1 * (1.0 - b + b * dl / avgdl)
+                scores = np.zeros(cand.size, dtype=np.float64)
+                for t in present:
+                    ids, tfs = dec(t)
+                    pos = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
+                    tf = tfs[pos].astype(np.float64)
+                    contrib = p.idf[t] * tf * (k1 + 1.0) / (tf + norm)
+                    scores += np.where(ids[pos] == cand, contrib, 0.0)
+                if cursor is not None:
+                    # keyset continuation: drop what was already served
+                    below = (scores < cursor[0]) | (
+                        (scores == cursor[0]) & (cand < cursor[1]))
+                    cand, scores = cand[below], scores[below]
+                if not p.bounded:
+                    heap.append((cand, scores))
+                    continue
+                for s, d in zip(scores, cand):
+                    item = (float(s), int(d))
+                    if len(heap) < k:
+                        heapq.heappush(heap, item)
+                    elif item > heap[0]:
+                        heapq.heapreplace(heap, item)
+    qids, ids, scores = [], [], []
+    for q, got in found.items():
+        if plans[q].bounded:
+            got = [(np.array([d for _, d in got], dtype=np.int64),
+                    np.array([s for s, _ in got], dtype=np.float64))]
+        for d, s in got:
+            qids.extend([q] * d.size)
+            ids.append(d)
+            scores.append(s)
+    yield pd.DataFrame({
+        "query_id": pd.Series(qids, dtype=object),
+        "doc_id": np.concatenate(ids) if ids else np.empty(0, np.int64),
+        "score": np.concatenate(scores) if scores else np.empty(0, np.float64),
+    }).astype({"doc_id": "int64", "score": "float64"})
 
 
 def _wand_one(reader: IndexReader, plan: _WandPlan, k: int, *, k1: float, b: float,
@@ -1548,6 +1403,15 @@ def _wand_one(reader: IndexReader, plan: _WandPlan, k: int, *, k1: float, b: flo
     return (_wand_topk(reader, {"": plan}, k, k1=k1, b=b, after=after)
             .select("doc_id", "score")
             .orderBy(F.col("score").desc(), F.col("doc_id").desc()).limit(k))
+
+
+def _kernel_ids(reader: IndexReader, plan: _WandPlan,
+                block_floor: int | None = None) -> DataFrame:
+    """DataFrame(doc_id) of every answer of one query, removals
+    excluded: an unbounded kernel run (the scores go unused)."""
+    return _wand_topk(reader, {"": plan._replace(bounded=False)}, 0,
+                      k1=K1_DEFAULT, b=B_DEFAULT,
+                      block_floor=block_floor).select("doc_id")
 
 
 def _filter_tree(node, expansions, present):
@@ -1625,14 +1489,20 @@ def _wand_shape(ast) -> _WandShape | None:
 
     Anything else — phrases nested deeper, phrases beside masks or
     groups under an OR, pure-mask or pure-negation queries, and the
-    shapes search() rejects (:func:`_eval_rejects`) — is None.
+    shapes :func:`_eval_candidates` rejects (:func:`_eval_rejects`) — is
+    None. Every entry point answers a ``filter`` shape on the kernel.
     """
-    if isinstance(ast, qp.Not) or (not _fusible(ast) and _eval_rejects(ast)):
+    phrased = any(isinstance(l, qp.Phrase) for l in qp._all_leaves(ast))
+    grounded = not phrased and _grounded(ast)
+    # the kernel decides any boolean inside a Not, so a filter tree is
+    # refused only for what _eval_candidates rejects outside every Not;
+    # the other shapes can reach _eval_candidates, which rejects anywhere
+    if isinstance(ast, qp.Not) or _eval_rejects(ast, inside_not=not grounded):
         return None
+    if grounded:
+        return _WandShape("filter", ast)
     kids = ast.children if isinstance(ast, (qp.And, qp.Or)) else [ast]
-    if not any(isinstance(l, qp.Phrase) for l in qp._all_leaves(ast)):
-        if _grounded(ast):
-            return _WandShape("filter", ast)
+    if not phrased:
         masks = [c for c in kids if not _grounded(c)]
         if (isinstance(ast, qp.Or) and len(masks) < len(kids) and all(
                 isinstance(c, qp.Term) and c.field is not None for c in masks)):

@@ -60,6 +60,10 @@ def get_spark(
         .config("spark.driver.memory",
                 os.environ.get("MIRU_SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
+        # Python workers fork from a daemon that has the zip-import guard
+        # installed (miru_spark/__init__.py), so a new worker's first
+        # task skips the archive re-reads too
+        .config("spark.python.daemon.module", "miru_spark.worker_daemon")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # zstd shuffle/spill blocks (lz4 default): the postings exchange
         # is text-heavy and compresses ~2x better under zstd — measured

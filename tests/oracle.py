@@ -99,6 +99,62 @@ class OracleIndex:
         scored.sort(key=lambda x: (-x[0], -x[1]))
         return [(d, s) for s, d in scored[:k]]
 
+    def match(self, node, fields: dict | None = None) -> set[int]:
+        """Docs satisfying a parsed query tree: And / Or / Not over terms,
+        prefixes, wildcards, fuzzy terms, ``*:*`` and fielded exact terms
+        (``fields``: field -> {doc_id: value}). The set algebra of the
+        engine's boolean model, evaluated doc by doc."""
+        from miru_spark.query import parser as qp
+
+        every = set(self.tf)
+        if isinstance(node, qp.Not):
+            return every - self.match(node.child, fields)
+        if isinstance(node, qp.And):
+            out = every
+            for c in node.children:
+                out = out & self.match(c, fields)
+            return out
+        if isinstance(node, qp.Or):
+            out: set[int] = set()
+            for c in node.children:
+                out |= self.match(c, fields)
+            return out
+        if isinstance(node, qp.MatchAll):
+            return every
+        if isinstance(node, qp.Term) and node.field is not None:
+            value = node.term.split(":", 1)[1]
+            return {d for d, v in (fields or {})[node.field].items() if v == value}
+        return self.candidates_or(self.leaf_terms(node))
+
+    def leaf_terms(self, leaf) -> list[str]:
+        from miru_spark.query import parser as qp
+
+        if isinstance(leaf, qp.Term):
+            return [leaf.term]
+        if isinstance(leaf, qp.Prefix):
+            return self.expand_prefix(leaf.prefix)
+        if isinstance(leaf, qp.Wildcard):
+            return self.expand_wildcard(leaf.pattern)
+        if isinstance(leaf, qp.Fuzzy):
+            return self.expand_fuzzy(leaf.term, leaf.max_edits)
+        raise NotImplementedError(leaf)
+
+    def search(self, node, k: int, fields: dict | None = None,
+               removed: set[int] = frozenset()) -> list[tuple[int, float]]:
+        """Top-k of a parsed query tree: the docs it matches minus
+        ``removed``, scored over its positive unfielded leaves' terms,
+        each term once with its largest boost."""
+        from miru_spark.query import parser as qp
+
+        boosts: dict[str, float] = {}
+        for leaf in qp.positive_leaves(node):
+            if getattr(leaf, "field", None) is None and not isinstance(leaf, qp.MatchAll):
+                for t in self.leaf_terms(leaf):
+                    w = getattr(leaf, "boost", 1.0)
+                    boosts[t] = max(boosts.get(t, w), w)
+        return self.topk(self.match(node, fields) - set(removed), list(boosts), k,
+                         boosts=boosts)
+
 
 def levenshtein(a: str, b: str) -> int:
     """Plain DP edit distance (the pytest twin of F.levenshtein)."""

@@ -1483,11 +1483,17 @@ def test_wand_stopword_override_parity(spark, tmp_path):
     assert bm25.search_wand_query(r, q, k=10, use_stopwords=False).collect() == []
 
 
+def _general_path(monkeypatch):
+    """Force every entry point onto the candidate join (_eval_candidates):
+    no query classifies as a kernel shape."""
+    monkeypatch.setattr(bm25, "_wand_shape", lambda ast: None)
+
+
 def test_fused_plan_matches_general_path(reader, oracle, monkeypatch):
-    """The single-pass coverage plan (one postings decode + one groupBy)
-    must return the exact rows/scores of the general candidate-join plan
-    on every fused-eligible query shape: AND, OR, nested, NOT under AND,
-    prefix expansion, boost, and a dictionary-miss term."""
+    """search() answers every filter shape on the WAND kernel; it must
+    return the exact rows/scores of the candidate-join plan: AND, OR,
+    nested, NOT under AND, prefix expansion, boost, and a
+    dictionary-miss term."""
     queries = [
         "w00000",
         "w00001 AND w00004",
@@ -1501,26 +1507,34 @@ def test_fused_plan_matches_general_path(reader, oracle, monkeypatch):
         "w00001 OR (NOT w00002 w00003)",
     ]
     for q in queries:
-        assert bm25._fusible(bm25.qp.parse_query(q)), q
-        fused = [(r["doc_id"], round(r["score"], 9))
-                 for r in bm25.search(reader, q, k=25, max_expansion=1000).collect()]
-        monkeypatch.setattr(bm25, "_fusible", lambda *a, **k: False)
+        assert bm25._wand_shape(bm25.qp.parse_query(q)).kind == "filter", q
+        kernel = [(r["doc_id"], round(r["score"], 9))
+                  for r in bm25.search(reader, q, k=25, max_expansion=1000).collect()]
+        _general_path(monkeypatch)
         general = [(r["doc_id"], round(r["score"], 9))
                    for r in bm25.search(reader, q, k=25, max_expansion=1000).collect()]
         monkeypatch.undo()
-        assert fused == general, q
+        assert kernel == general, q
 
 
 def test_fused_never_claims_unfusible_shapes():
-    """Phrases, fielded masks, *:*, all-negated ANDs, NOT-under-OR, and
-    bare root negation all stay on the general path."""
+    """Phrases, pure masks, *:*, an OR with a mask disjunct, all-negated
+    ANDs, NOT-under-OR and bare root negation are no kernel filter shape;
+    the last four are refused outright, as _eval_candidates refuses them."""
     pq = bm25.qp.parse_query
-    for q in ['"w00001 w00002"', "lang:en AND w00001", "*:*",
-              "NOT w00001 NOT w00002", "w00001 OR NOT w00002", "NOT w00001",
-              'w00001 NOT "w00002 w00003"', "w00001 AND (w00002 OR NOT w00003)"]:
-        assert not bm25._fusible(pq(q)), q
-    # a rejected shape inside a Not needs no rows of its own
-    assert bm25._fusible(pq("w00001 NOT (w00002 OR NOT w00003)"))
+    for q in ['"w00001 w00002"', "lang:en", "*:*", "w00001 OR lang:en",
+              'w00001 NOT "w00002 w00003"']:
+        shape = bm25._wand_shape(pq(q))
+        assert shape is None or shape.kind != "filter", q
+    for q in ["NOT w00001 NOT w00002", "w00001 OR NOT w00002", "NOT w00001",
+              "w00001 AND (w00002 OR NOT w00003)"]:
+        assert bm25._wand_shape(pq(q)) is None, q
+    # a rejected shape inside a Not needs no rows of its own, beside a
+    # fielded mask too; the kernel decides it per block
+    for q in ["w00001 NOT (w00002 OR NOT w00003)",
+              "lang:en AND w00001 NOT (w00002 OR NOT w00003)",
+              "lang:en AND w00001", "*:* AND w00001"]:
+        assert bm25._wand_shape(pq(q)).kind == "filter", q
 
 
 def test_pure_negation_raises_on_both_paths(reader):
@@ -1532,30 +1546,30 @@ def test_pure_negation_raises_on_both_paths(reader):
 
 
 def test_fused_candidates_match_general_in_facets_and_time(reader, oracle, corpus, monkeypatch):
-    """facet_counts and search_time_newest answer fused-eligible queries
-    through the single-pass candidate plan; both must equal the general
-    _eval_candidates plan row-for-row."""
+    """facet_counts and search_time_newest take a filter shape's docs
+    from an unbounded kernel run; both must equal the candidate-join
+    plan row-for-row."""
     from miru_spark.query.bm25 import facet_counts
 
     for q in ["w00001 AND w00004", "(w00003 OR w00050) -w00001", "w0000*"]:
-        fused_f = [(r["value"], r["n"]) for r in
-                   facet_counts(reader, q, "lang", k=10, max_expansion=1000).collect()]
-        fused_t = [(r["doc_id"], r["score"]) for r in
-                   bm25.search_time_newest(reader, q, k=30, max_expansion=1000).collect()]
-        monkeypatch.setattr(bm25, "_fusible", lambda *a, **k: False)
+        kernel_f = [(r["value"], r["n"]) for r in
+                    facet_counts(reader, q, "lang", k=10, max_expansion=1000).collect()]
+        kernel_t = [(r["doc_id"], r["score"]) for r in
+                    bm25.search_time_newest(reader, q, k=30, max_expansion=1000).collect()]
+        _general_path(monkeypatch)
         gen_f = [(r["value"], r["n"]) for r in
                  facet_counts(reader, q, "lang", k=10, max_expansion=1000).collect()]
         gen_t = [(r["doc_id"], r["score"]) for r in
                  bm25.search_time_newest(reader, q, k=30, max_expansion=1000).collect()]
         monkeypatch.undo()
-        assert fused_f == gen_f, q
-        assert fused_t == gen_t, q
+        assert kernel_f == gen_f, q
+        assert kernel_t == gen_t, q
 
 
 def test_time_newest_pruned_matches_full(reader, oracle, monkeypatch):
-    """Block-pruned TIME strategy must equal the unpruned plan: multi-
-    term boolean shapes, constraint masks, keyset paging, and a 1-block
-    first span that forces deepening rounds."""
+    """Block-pruned TIME strategy must equal the unpruned candidate-join
+    plan: multi-term boolean shapes, keyset paging, and a 1-block first
+    span that forces deepening rounds."""
     for q, kw in [
         ("w00001", {}),
         ("w00001 OR w00004", {}),
@@ -1567,7 +1581,7 @@ def test_time_newest_pruned_matches_full(reader, oracle, monkeypatch):
         k = kw.pop("k", 12)
         got = [r["doc_id"] for r in
                bm25.search_time_newest(reader, q, k=k, **kw).collect()]
-        monkeypatch.setattr(bm25, "_fusible", lambda *a, **kk: False)
+        _general_path(monkeypatch)
         want = [r["doc_id"] for r in
                 bm25.search_time_newest(reader, q, k=k, **kw).collect()]
         monkeypatch.undo()
@@ -1580,7 +1594,7 @@ def test_time_newest_pruned_with_constraint(spark, corpus, fielded_reader, monke
     got = [r["doc_id"] for r in bm25.search_time_newest(
         fielded_reader, "w00001", k=8, constraint=F.col("lang") == "en",
         first_span=1).collect()]
-    monkeypatch.setattr(bm25, "_fusible", lambda *a, **kk: False)
+    _general_path(monkeypatch)
     want = [r["doc_id"] for r in bm25.search_time_newest(
         fielded_reader, "w00001", k=8,
         constraint=F.col("lang") == "en").collect()]
@@ -1589,16 +1603,16 @@ def test_time_newest_pruned_with_constraint(spark, corpus, fielded_reader, monke
 
 
 def test_fused_only_shapes_never_reach_general_path(reader, monkeypatch):
-    """A fused-eligible shape the general evaluator would reject
-    (NOT-under-OR inside a negated subtree) must answer consistently
-    whether or not its positive terms exist in the dictionary — never
-    flip to a data-dependent SearchError."""
+    """A kernel shape the candidate join would reject (NOT-under-OR
+    inside a negated subtree) must answer consistently whether or not
+    its positive terms exist in the dictionary — never flip to a
+    data-dependent SearchError."""
     q_hit = "w00001 AND NOT (w00002 OR NOT w00003)"
     q_miss = "zzztypo AND NOT (w00002 OR NOT w00003)"
-    assert bm25._fusible(bm25.qp.parse_query(q_hit))
+    assert bm25._wand_shape(bm25.qp.parse_query(q_hit)).kind == "filter"
 
     def boom(*a, **kw):  # pragma: no cover
-        raise AssertionError("fused query must not reach _eval_candidates")
+        raise AssertionError("a kernel shape must not reach _eval_candidates")
 
     monkeypatch.setattr(bm25, "_eval_candidates", boom)
     assert bm25.search(reader, q_hit, k=5).collect()  # answers
@@ -1821,6 +1835,110 @@ def test_sidecar_prune_path_matches_unpruned(spark, built_index, monkeypatch):
         _assert_rank_identical(got[name], [(x["doc_id"], x["score"]) for x in rows])
 
 
+# filter shapes that search(), search_wand_query() and search_batch() all
+# answer on the WAND kernel, so they agree by construction; each is
+# checked against the pure-Python OracleIndex instead
+_KERNEL_ORACLE_SHAPES = [
+    "w00001 AND w00004",
+    "w00050 OR w00003",
+    "w00001 NOT w00000",
+    "w0000* AND w00001",
+    "w00001~1 OR w00050",
+    "(w00001 OR w00002) AND w00004",
+    "(w00001 AND w00004) OR w00050",
+    "((w00001 OR w00002) AND NOT w00003) OR w00050",
+    "w00001^3 AND w00004",
+    "w00050^2 OR w00003^0.5 OR w00002",
+    "w00001 AND NOT (w00002 OR NOT w00003)",
+    "w00001 OR zzznotaterm",
+    *_FILTER_SHAPES,
+    "lang:en AND w00001 NOT (w00002 OR NOT w00003)",
+    "*:* AND w00004",
+]
+
+
+def test_kernel_shapes_match_oracle(fielded_reader, oracle, corpus):
+    """Every entry point that runs the kernel answers each filter shape
+    as the OracleIndex does: ranked top-k (search, search_wand_query,
+    search_batch), newest-k (search_time_newest) and lang facets."""
+    from collections import Counter
+
+    langs = {r["doc_id"]: r["lang"] for r in corpus.select("doc_id", "lang").collect()}
+    k = 15
+    want, docs = {}, {}
+    for q in _KERNEL_ORACLE_SHAPES:
+        ast = bm25._parse_for_index(fielded_reader, q)
+        assert bm25._wand_shape(ast).kind == "filter", q
+        want[q] = oracle.search(ast, k, fields={"lang": langs})
+        docs[q] = oracle.match(ast, fields={"lang": langs})
+        assert want[q], q
+    rows = bm25.search_batch(
+        fielded_reader, {str(i): q for i, q in enumerate(_KERNEL_ORACLE_SHAPES)},
+        k=k).collect()
+    for i, q in enumerate(_KERNEL_ORACLE_SHAPES):
+        _assert_rank_identical(bm25.search(fielded_reader, q, k=k).collect(), want[q])
+        _assert_rank_identical(
+            bm25.search_wand_query(fielded_reader, q, k=k).collect(), want[q])
+        _assert_rank_identical(
+            sorted((r for r in rows if r["query_id"] == str(i)), key=lambda r: r["rank"]),
+            want[q])
+        newest = [r["doc_id"] for r in
+                  bm25.search_time_newest(fielded_reader, q, k=k).collect()]
+        assert newest == sorted(docs[q], reverse=True)[:k], q
+        facets = {r["value"]: r["n"] for r in
+                  bm25.facet_counts(fielded_reader, q, "lang", k=10).collect()}
+        assert facets == dict(Counter(langs[d] for d in docs[q])), q
+
+
+def test_compiled_code_is_reused(spark, reader):
+    """The kernel's generated code does not depend on the query. Once
+    each shape has run, a batch of other queries and a second call of
+    each shape with other terms (the same term count) compile no class.
+    The scan's term list compiles once per term count up to the
+    optimizer's IN-to-set threshold (10), so both batches name more
+    terms than that. TIME windows are powers of 4, so an index has a
+    fixed ladder of block floors: the warm-up call walks all of it."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles(fn):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        fn()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    def batch(qs):
+        return lambda: bm25.search_batch(reader, qs, k=10).collect()
+
+    calls = {
+        "batch": (
+            batch({"a": "the0 AND w00002", "b": "w00002 OR w00005 OR w00010",
+                   "c": "w00007 AND w00009 NOT w00001", "d": "(w00004 OR w00006) AND the0",
+                   "e": "w00011^2 OR w00012", "f": "w00013 AND w00014"}),
+            batch({"x": "w00003 AND w00008", "y": "w00020 OR w00021 OR w00022",
+                   "z": "(w00015 OR w00016) AND w00017 NOT w00018",
+                   "w": "the0 AND w00019", "v": "w00023 OR w00024^3 OR w00025",
+                   "u": "w00026 AND w00027", "t": "w00028 NOT w00029"})),
+        "search": (
+            lambda: bm25.search(reader, "the0 AND w00002", k=10).collect(),
+            lambda: bm25.search(reader, "w00003 AND w00005", k=10).collect()),
+        "time_newest": (
+            lambda: bm25.search_time_newest(
+                reader, "the0 AND w00002", k=600, first_span=1).collect(),
+            lambda: bm25.search_time_newest(reader, "w00003 AND w00005", k=10).collect()),
+        "wand_nested": (
+            lambda: bm25.search_wand_query(
+                reader, "the0 AND (w00004 OR w00006) AND NOT w00001", k=10).collect(),
+            lambda: bm25.search_wand_query(
+                reader, "w00002 AND (w00003 OR w00005) AND NOT w00007", k=10).collect()),
+        "wand_or": (
+            lambda: bm25.search_wand_query(reader, "w00002 OR w00005 OR w00010", k=10).collect(),
+            lambda: bm25.search_wand_query(reader, "w00001 OR w00003 OR w00007", k=10).collect()),
+    }
+    for warm, _ in calls.values():
+        warm()
+    again = {name: compiles(second) for name, (_, second) in calls.items()}
+    assert again == dict.fromkeys(calls, 0), again
+
+
 def _jobs_and_plans(spark, group: str, fn) -> tuple[int, list[str]]:
     """Run ``fn`` under a job group; return its job count and the
     physical plans of the SQL executions it started."""
@@ -1853,8 +1971,8 @@ def _jobs_and_plans(spark, group: str, fn) -> tuple[int, list[str]]:
 _JOB_CEILINGS = {
     "and_wand": 2,
     "or_wand": 2,
-    "and_exact": 4,
-    "time_newest": 7,
+    "and_exact": 2,
+    "time_newest": 4,
     "fielded": 2,
     "router_nested": 2,
     "coverage_tree": 2,

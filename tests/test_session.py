@@ -82,3 +82,34 @@ def test_zip_guard_installs_only_inside_a_task(spark):
 
     rows = spark.range(0, 1, 1, 1).mapInPandas(probe, "guarded boolean, rereads int").collect()
     assert [(r["guarded"], r["rereads"]) for r in rows] == [(True, 0)]
+
+
+@needs_guard
+def test_worker_daemon_guards_every_worker(spark):
+    """Workers fork from miru_spark.worker_daemon, so a UDF that never
+    imports miru_spark already runs under the guard, and the daemon's
+    recorded archive signatures leave nothing to re-read."""
+    assert spark.conf.get("spark.python.daemon.module") == "miru_spark.worker_daemon"
+
+    def probe(batches):
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        method = zipimport.zipimporter.invalidate_caches
+        guarded = (getattr(method, "__module__", None), method.__name__) == (
+            "miru_spark", "_invalidate_if_changed")
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or real(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        yield pd.DataFrame({"guarded": [guarded], "rereads": [len(reads)]})
+
+    rows = spark.range(0, 4, 1, 4).mapInPandas(probe, "guarded boolean, rereads int").collect()
+    assert [(r["guarded"], r["rereads"]) for r in rows] == [(True, 0)] * 4

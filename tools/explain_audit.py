@@ -8,7 +8,9 @@ Checks, per headline query:
   partial stages (AQE hides codegen wrappers until execution, so those
   two markers stand in for WholeStageCodegen);
 - no accidental CartesianProduct (the ANN crossJoin against a broadcast
-  query batch compiles to BroadcastNestedLoopJoin — intended).
+  query batch compiles to BroadcastNestedLoopJoin — intended);
+- ranked and TIME BM25 queries run one block-max WAND kernel pass per
+  execution (one ``MapInPandas _wand`` node) and no SortMergeJoin.
 
 Usage: python tools/explain_audit.py [sf_dir]
 Exits non-zero if a MUST marker is missing.
@@ -17,6 +19,7 @@ Exits non-zero if a MUST marker is missing.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -26,6 +29,31 @@ sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def executed_plans(spark, fn) -> list[str]:
+    """The final physical plans of the SQL executions ``fn`` runs."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    bus.waitUntilEmpty()
+    before = max((e.executionId() for e in executions()), default=-1)
+    fn()
+    bus.waitUntilEmpty()
+    return [e.physicalPlanDescription() for e in executions() if e.executionId() > before]
+
+
+def kernel_nodes(desc: str) -> int:
+    """``MapInPandas _wand`` nodes in the final plan of a formatted plan
+    description (AQE lists the initial plan's nodes too)."""
+    tree = desc.split("== Initial Plan ==")[0]
+    details = {d.split("\n", 1)[0]: d for d in desc.split("\n\n")}
+    return sum("Arguments: _wand(" in details.get(f"({i}) MapInPandas", "")
+               for i in re.findall(r"MapInPandas \((\d+)\)", tree))
 
 
 def main() -> int:
@@ -56,18 +84,38 @@ def main() -> int:
         must=["PushedFilters", "Batched: true"],
     )
 
-    from miru_spark.query.bm25 import search
+    from miru_spark.query.bm25 import search, search_time_newest
 
-    # all-text-term boolean queries must take the FUSED single-pass plan:
-    # the coverage filter (array_contains over leaf bits) is its marker,
-    # and the per-leaf candidate SortMergeJoins of the general plan are gone
-    check(
-        "bm25_index_search",
-        search(r, "spark AND query", k=10),
-        must=["BroadcastHashJoin", "PushedFilters", "TakeOrderedAndProject",
-              "array_contains"],
-        must_not=["CartesianProduct"],
-    )
+    # a text-term boolean query runs ONE block-max WAND kernel pass: one
+    # MapInPandas _wand node and no per-leaf candidate SortMergeJoin (the
+    # candidate-join plan's marker). Counted on the executed plan
+    df = search(r, "spark AND query", k=10)
+    df.collect()
+    p = plan_of(df).split("== Initial Plan ==")[0]
+    n_kernel = p.count("MapInPandas _wand")
+    print(f"-- bm25_index_search: kernel passes={n_kernel} (want 1), "
+          f"SortMergeJoin={'Y' if 'SortMergeJoin' in p else 'N'}, "
+          f"PushedFilters={'Y' if 'PushedFilters' in p else 'N'}, "
+          f"TakeOrderedAndProject={'Y' if 'TakeOrderedAndProject' in p else 'N'}")
+    if n_kernel != 1 or "SortMergeJoin" in p:
+        failures.append(f"bm25_index_search: {n_kernel} kernel passes (want 1) "
+                        "or a SortMergeJoin")
+    for m in ("PushedFilters", "TakeOrderedAndProject"):
+        if m not in p:
+            failures.append(f"bm25_index_search: missing {m}")
+
+    # TIME: each deepening round collects one kernel pass; the answer
+    # is served as a local relation, so the audit reads the plans of
+    # the SQL executions the call ran
+    plans = executed_plans(spark, lambda: search_time_newest(
+        r, "spark AND query", k=10, first_span=1).collect())
+    per_run = [kernel_nodes(pl) for pl in plans]
+    smj = any("SortMergeJoin" in pl for pl in plans)
+    print(f"-- bm25_time_newest: kernel passes per execution={per_run} "
+          f"(want each <= 1, some 1), SortMergeJoin={'Y' if smj else 'N'}")
+    if not per_run or max(per_run) != 1 or smj:
+        failures.append(f"bm25_time_newest: kernel passes per execution {per_run} "
+                        "(want each <= 1, some 1) or a SortMergeJoin")
 
     # positional phrase: term filter must reach the positions parquet
     # scan, and the whole plan stays index-side (no text relation)
