@@ -49,10 +49,16 @@ if sys.version_info < (3, 13):
             return None
         return (st.st_mtime_ns, st.st_size)
 
+    # archive directories this process re-read through the guard; a
+    # worker forked from the daemon keeps 0 until an archive changes
+    _rereads = 0
+
     def _invalidate_if_changed(self, _reread=zipimport.zipimporter.invalidate_caches):
+        global _rereads
         sig = _archive_sig(self)
         if sig is None or sig != getattr(self, "_dir_sig", None):
             _reread(self)
+            _rereads += 1
             self._dir_sig = sig
 
     def _install_zip_guard(record: bool = False) -> None:

@@ -25,7 +25,8 @@ Two physical strategies:
   same pass, per block. A batch shares the pass: one exchange over the
   union of its queries' terms, a heap per query. Per-partition top-k is
   safe: the global top-k is contained in the union of per-partition
-  top-k's. Masks (constraint, authz), rounding and the TIME and facet
+  top-k's. search()'s ``authz`` labels join the filter as one more
+  conjunct; the ``constraint`` mask, rounding and the TIME and facet
   orders take every answer of an unbounded run instead of a heap. The
   kernel's Spark code does not depend on the query: term lists reach it
   as literal values, so a new query reuses the compiled classes.
@@ -400,10 +401,11 @@ def search(
     Plan: a query whose answers all hold a scoring term
     (:func:`_wand_shape` ``filter``: terms, boosts, expansions, fielded
     masks and NOT terms under an AND, nested groups) runs the block-max
-    WAND kernel (:func:`_wand_topk`), as :func:`search_wand_query` does.
-    With ``constraint``, ``authz`` or ``round_to`` the kernel keeps every
-    answer instead of a heap: the masks semi-join its answers, and
-    rounding can reorder the top-k. Phrases, pure masks and ORs with a
+    WAND kernel (:func:`_wand_topk`), as :func:`search_wand_query` does;
+    ``authz`` rides the kernel's filter as one more conjunct. With
+    ``constraint`` or ``round_to`` the kernel keeps every answer instead
+    of a heap: the constraint semi-joins its answers, and rounding can
+    reorder the top-k. Phrases, pure masks and ORs with a
     fielded disjunct take the candidate join (:func:`_eval_candidates`)
     and a scoring decode.
 
@@ -448,16 +450,21 @@ def search(
 
     shape = _wand_shape(ast)
     if shape is not None and shape.kind == "filter":
+        if authz is not None:
+            # the authz mask as one more filter conjunct: any label's
+            # composite term (composite_authz's postings), no scoring
+            ast = qp.And(children=[ast, qp.Or(children=[
+                qp.Term(term=f"{authz_field}:{v}", field=authz_field) for v in authz])])
         plan, _ = _compile_wand(reader, ast, expansions)
         if plan is None or not plan.idf or k <= 0:
             # unsatisfiable, or no scoring term in the dictionary
             return _gather(reader, _local_rel(reader.spark, [], empty), gather_fields)
-        if constraint is None and authz is None and round_to is None:
+        if constraint is None and round_to is None:
             return _gather(reader, _wand_one(reader, plan, k, k1=k1, b=b, after=after),
                            gather_fields)
         scored = _masked(reader, _wand_topk(
             reader, {"": plan._replace(bounded=False)}, k, k1=k1, b=b,
-        ).select("doc_id", "score"), constraint, authz, authz_field)
+        ).select("doc_id", "score"), constraint, None, authz_field)
         return _ranked_topk(reader, scored, k, round_to, after, gather_fields)
 
     phrase_ctx = _phrase_ctx_for(
@@ -1610,7 +1617,8 @@ def search_wand_query(
     otherwise. Rank-identical to :func:`search` on every query, by
     construction.
 
-    Phrase-free queries answer in ONE kernel pass (:func:`_wand_topk`).
+    Phrase-free queries answer in ONE kernel pass (:func:`_wand_topk`);
+    a ``filter`` shape goes to :func:`search`, which runs that pass.
     The query compiles (:func:`_compile_wand`, shared with
     :func:`search_batch`) to scoring terms — the positive unfielded leaves'
     terms, each with its max clause boost folded into the idf, exactly
@@ -1652,9 +1660,11 @@ def search_wand_query(
     if ast is None or k <= 0:
         return _local_rel(reader.spark, [], "doc_id long, score double")
     shape = None if search_kwargs else _wand_shape(ast)
-    if shape is None or (shape.kind == "or_masks" and after is not None):
-        # (keyset paging through the zero-score admission region needs
-        # the exact path's cursor semantics — rare shape)
+    if shape is None or shape.kind == "filter" or (
+            shape.kind == "or_masks" and after is not None):
+        # search() runs a filter shape on the same kernel pass (keyset
+        # paging through the zero-score admission region needs the exact
+        # path's cursor semantics — rare shape)
         return search(
             reader, ast, k, k1=k1, b=b, locale=locale,
             use_stopwords=use_stopwords, text_df=text_df, text_col=text_col,
@@ -1670,8 +1680,6 @@ def search_wand_query(
         return _wand_one(reader, plan, n, k1=k1, b=b, after=after)
 
     spark = reader.spark
-    if shape.kind == "filter":
-        return _gather(reader, run(k), gather_fields)
     if shape.kind == "or_masks":
         sch = _arrow_schema("doc_id long, score double")
         out = run(k).toArrow().cast(sch) if plan.idf else sch.empty_table()

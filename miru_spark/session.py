@@ -22,6 +22,26 @@ def _default_driver_mem() -> str:
     return f"{min(32 << 10, half_mb)}m"
 
 
+def _worker_daemon_module() -> str | None:
+    """``miru_spark.worker_daemon`` when a Python worker can import this
+    package, else None (PySpark's own daemon). A worker's path is
+    ``$PYTHONPATH``, its working directory (the driver's) and the site
+    directories. A driver that imports miru_spark from anywhere else (a
+    script's own directory, a zip shipped by ``addPyFile``) keeps the
+    stock daemon, so its Python tasks that never touch miru_spark still
+    run."""
+    import site
+
+    import miru_spark
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(miru_spark.__file__)))
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep) + [os.getcwd()]
+    paths += site.getsitepackages() + [site.getusersitepackages()]
+    if any(os.path.abspath(p) == root for p in paths):
+        return "miru_spark.worker_daemon"
+    return None
+
+
 def get_spark(
     app_name: str = "miru_spark",
     cores: int | str | None = None,
@@ -60,10 +80,6 @@ def get_spark(
         .config("spark.driver.memory",
                 os.environ.get("MIRU_SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
-        # Python workers fork from a daemon that has the zip-import guard
-        # installed (miru_spark/__init__.py), so a new worker's first
-        # task skips the archive re-reads too
-        .config("spark.python.daemon.module", "miru_spark.worker_daemon")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # zstd shuffle/spill blocks (lz4 default): the postings exchange
         # is text-heavy and compresses ~2x better under zstd — measured
@@ -82,6 +98,12 @@ def get_spark(
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "268435456")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "268435456")
     )
+    # Python workers fork from a daemon that has the zip-import guard
+    # installed (miru_spark/__init__.py), so a new worker's first task
+    # skips the archive re-reads too
+    daemon = _worker_daemon_module()
+    if daemon is not None:
+        builder = builder.config("spark.python.daemon.module", daemon)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

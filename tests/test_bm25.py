@@ -557,6 +557,11 @@ def test_search_with_authz_mask(spark, corpus, authz_reader):
     assert {r["doc_id"] for r in a} == {d for d in plain if d in visible}
     for r in a:
         assert r["score"] == plain[r["doc_id"]]
+    # without round_to the labels ride the kernel's filter (a bounded
+    # top-k): the first k of the same ranking
+    top = search(authz_reader, "w00001", k=7, authz=["g1", "g3"]).collect()
+    assert [(r["doc_id"], round(r["score"], 6)) for r in top] == [
+        (r["doc_id"], r["score"]) for r in a[:7]]
 
 
 def test_authz_empty_labels_hides_everything(spark, authz_reader):
@@ -1016,10 +1021,12 @@ def test_router_fallback_shapes_route_to_search(reader, corpus, monkeypatch):
 
 
 def test_router_wandable_shapes_bypass_search(reader, corpus, monkeypatch):
+    """Kernel shapes never reach search()'s candidate join (a ``filter``
+    shape goes through search() onto the same kernel pass)."""
     def boom(*a, **kw):  # pragma: no cover - the assertion is "not called"
-        raise AssertionError("flat shapes must not reach search()")
+        raise AssertionError("kernel shapes must not reach the candidate join")
 
-    monkeypatch.setattr(bm25, "search", boom)
+    monkeypatch.setattr(bm25, "_eval_candidates", boom)
     assert bm25.search_wand_query(reader, "w00001 AND w00004", k=5).collect()
     assert bm25.search_wand_query(reader, "w00050 OR w00003", k=5).collect()
     # round-3 router widening: boosts, phrases under OR, fielded AND
@@ -1115,9 +1122,8 @@ def test_router_nested_groups_match_exact(reader):
 
 
 def test_router_deep_trees_via_coverage_wand(reader, monkeypatch):
-    """Arbitrarily nested fusible trees stay on the scale path through
-    the coverage verifier — rank-identical to the exact path and never
-    reaching search() (except the documented exhaustion fallback)."""
+    """Arbitrarily nested trees stay on the kernel — rank-identical to
+    the candidate join and never reaching it."""
     deep = [
         "((w00001 AND w00002) OR w00003) AND w00004",
         "(w0000* AND w00001) OR w00002",
@@ -1125,15 +1131,16 @@ def test_router_deep_trees_via_coverage_wand(reader, monkeypatch):
         "((w00001 OR w00002) AND (w00003 OR w00004)) NOT w00000",
     ]
     for q in deep:
-        _same_ranks(bm25.search_wand_query(reader, q, k=12),
-                    bm25.search(reader, q, k=12))
-    # tiny-pool deepening converges without the exact path
+        kernel = bm25.search_wand_query(reader, q, k=12)
+        _general_path(monkeypatch)
+        _same_ranks(kernel, bm25.search(reader, q, k=12))
+        monkeypatch.undo()
     def boom(*a, **kw):  # pragma: no cover
-        raise AssertionError("coverage path must not reach search()")
-    monkeypatch.setattr(bm25, "search", boom)
+        raise AssertionError("a kernel shape must not reach the candidate join")
+    monkeypatch.setattr(bm25, "_eval_candidates", boom)
     assert bm25.search_wand_query(reader, deep[0], k=5, first_pool=1).collect()
     monkeypatch.undo()
-    # exhaustion (1 round, 1-doc pool) falls back to exact — identical
+    # a filter shape takes no pool: the pool arguments change nothing
     _same_ranks(
         bm25.search_wand_query(reader, deep[0], k=5, first_pool=1, max_rounds=1),
         bm25.search(reader, deep[0], k=5))
@@ -1276,20 +1283,23 @@ _FILTER_SHAPES = [
 
 
 def _filter_kernel_matches_search(rd, monkeypatch):
-    """Each filter shape answers rank-identically to search(), also when
-    paged with an ``after`` cursor, from the WAND kernel alone: search()
-    is never called on the way. The WAND side pages with its own first
-    page's cursor (summation order may move a score by an ULP)."""
+    """Each filter shape answers rank-identically to search()'s
+    candidate join, also when paged with an ``after`` cursor, from the
+    WAND kernel alone: the candidate join is never called on the way.
+    The WAND side pages with its own first page's cursor (summation
+    order may move a score by an ULP)."""
     want = {}
     for q in _FILTER_SHAPES:
         assert bm25._wand_shape(bm25._parse_for_index(rd, q)).kind == "filter", q
+        _general_path(monkeypatch)
         want[q] = [(r["doc_id"], r["score"]) for r in bm25.search(rd, q, k=10).collect()]
+        monkeypatch.undo()
         assert len(want[q]) > 4, q  # the after-page is not empty
 
     def boom(*a, **k):  # pragma: no cover - the assertion is "not called"
-        raise AssertionError("filter shapes must not reach search()")
+        raise AssertionError("filter shapes must not reach the candidate join")
 
-    monkeypatch.setattr(bm25, "search", boom)
+    monkeypatch.setattr(bm25, "_eval_candidates", boom)
     for q in _FILTER_SHAPES:
         page1 = bm25.search_wand_query(rd, q, k=4).collect()
         _assert_rank_identical(page1, want[q][:4])

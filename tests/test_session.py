@@ -25,6 +25,18 @@ def test_default_driver_mem_is_half_ram_capped_at_32g(monkeypatch):
     assert session._default_driver_mem() == "32768m"
 
 
+def test_worker_daemon_only_where_workers_import_the_package(tmp_path, monkeypatch):
+    root = os.path.dirname(os.path.dirname(os.path.abspath(miru_spark.__file__)))
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("PYTHONPATH", str(tmp_path))
+    assert session._worker_daemon_module() is None  # e.g. `python /repo/script.py`
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join([str(tmp_path), root]))
+    assert session._worker_daemon_module() == "miru_spark.worker_daemon"
+    monkeypatch.delenv("PYTHONPATH")
+    monkeypatch.chdir(root)
+    assert session._worker_daemon_module() == "miru_spark.worker_daemon"
+
+
 @needs_guard
 def test_zip_guard_rereads_only_a_changed_archive(tmp_path, monkeypatch):
     path = tmp_path / "mods.zip"
@@ -88,11 +100,21 @@ def test_zip_guard_installs_only_inside_a_task(spark):
 def test_worker_daemon_guards_every_worker(spark):
     """Workers fork from miru_spark.worker_daemon, so a UDF that never
     imports miru_spark already runs under the guard, and the daemon's
-    recorded archive signatures leave nothing to re-read."""
+    recorded archive signatures leave nothing to re-read: not in the
+    ``importlib.invalidate_caches()`` PySpark runs before a new worker's
+    first task, nor in the UDF's own."""
+    import uuid
+
     assert spark.conf.get("spark.python.daemon.module") == "miru_spark.worker_daemon"
+    # a new worker environment starts a new daemon: the probe is each
+    # worker's first task (a worker that imports a pyspark sub-package
+    # later re-reads that new importer once)
+    env = spark.sparkContext.environment
+    env["MIRU_SPARK_TEST_WORKERS"] = uuid.uuid4().hex
 
     def probe(batches):
         import importlib
+        import sys
         import zipimport
 
         import pandas as pd
@@ -102,14 +124,16 @@ def test_worker_daemon_guards_every_worker(spark):
         method = zipimport.zipimporter.invalidate_caches
         guarded = (getattr(method, "__module__", None), method.__name__) == (
             "miru_spark", "_invalidate_if_changed")
-        reads = []
-        real = zipimport._read_directory
-        zipimport._read_directory = lambda p: reads.append(p) or real(p)
-        try:
-            importlib.invalidate_caches()
-        finally:
-            zipimport._read_directory = real
-        yield pd.DataFrame({"guarded": [guarded], "rereads": [len(reads)]})
+        importlib.invalidate_caches()
+        # inherited from the daemon; counts every guarded re-read since
+        # this worker forked, the task's set-up invalidation included
+        pkg = sys.modules.get("miru_spark")
+        yield pd.DataFrame({"guarded": [guarded],
+                            "rereads": [getattr(pkg, "_rereads", -1)]})
 
-    rows = spark.range(0, 4, 1, 4).mapInPandas(probe, "guarded boolean, rereads int").collect()
+    try:
+        rows = spark.range(0, 4, 1, 4).mapInPandas(
+            probe, "guarded boolean, rereads int").collect()
+    finally:
+        del env["MIRU_SPARK_TEST_WORKERS"]
     assert [(r["guarded"], r["rereads"]) for r in rows] == [(True, 0)] * 4

@@ -10,7 +10,8 @@ Checks, per headline query:
 - no accidental CartesianProduct (the ANN crossJoin against a broadcast
   query batch compiles to BroadcastNestedLoopJoin — intended);
 - ranked and TIME BM25 queries run one block-max WAND kernel pass per
-  execution (one ``MapInPandas _wand`` node) and no SortMergeJoin.
+  execution (one ``MapInPandas _wand`` node), no SortMergeJoin and no
+  CartesianProduct.
 
 Usage: python tools/explain_audit.py [sf_dir]
 Exits non-zero if a MUST marker is missing.
@@ -88,18 +89,22 @@ def main() -> int:
 
     # a text-term boolean query runs ONE block-max WAND kernel pass: one
     # MapInPandas _wand node and no per-leaf candidate SortMergeJoin (the
-    # candidate-join plan's marker). Counted on the executed plan
+    # candidate-join plan's marker). Counted on the executed plan. The
+    # plan has no join at all (the idf rides the kernel's arguments), so
+    # there is no BroadcastHashJoin to require
     df = search(r, "spark AND query", k=10)
     df.collect()
     p = plan_of(df).split("== Initial Plan ==")[0]
     n_kernel = p.count("MapInPandas _wand")
     print(f"-- bm25_index_search: kernel passes={n_kernel} (want 1), "
-          f"SortMergeJoin={'Y' if 'SortMergeJoin' in p else 'N'}, "
-          f"PushedFilters={'Y' if 'PushedFilters' in p else 'N'}, "
-          f"TakeOrderedAndProject={'Y' if 'TakeOrderedAndProject' in p else 'N'}")
+          + ", ".join(f"{m}={'Y' if m in p else 'N'}" for m in (
+              "SortMergeJoin", "CartesianProduct", "PushedFilters",
+              "TakeOrderedAndProject")))
     if n_kernel != 1 or "SortMergeJoin" in p:
         failures.append(f"bm25_index_search: {n_kernel} kernel passes (want 1) "
                         "or a SortMergeJoin")
+    if "CartesianProduct" in p:
+        failures.append("bm25_index_search: unexpected CartesianProduct")
     for m in ("PushedFilters", "TakeOrderedAndProject"):
         if m not in p:
             failures.append(f"bm25_index_search: missing {m}")
@@ -111,11 +116,13 @@ def main() -> int:
         r, "spark AND query", k=10, first_span=1).collect())
     per_run = [kernel_nodes(pl) for pl in plans]
     smj = any("SortMergeJoin" in pl for pl in plans)
+    cart = any("CartesianProduct" in pl for pl in plans)
     print(f"-- bm25_time_newest: kernel passes per execution={per_run} "
-          f"(want each <= 1, some 1), SortMergeJoin={'Y' if smj else 'N'}")
-    if not per_run or max(per_run) != 1 or smj:
+          f"(want each <= 1, some 1), SortMergeJoin={'Y' if smj else 'N'}, "
+          f"CartesianProduct={'Y' if cart else 'N'}")
+    if not per_run or max(per_run) != 1 or smj or cart:
         failures.append(f"bm25_time_newest: kernel passes per execution {per_run} "
-                        "(want each <= 1, some 1) or a SortMergeJoin")
+                        "(want each <= 1, some 1), a SortMergeJoin or a CartesianProduct")
 
     # positional phrase: term filter must reach the positions parquet
     # scan, and the whole plan stays index-side (no text relation)
